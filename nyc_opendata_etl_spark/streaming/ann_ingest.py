@@ -35,8 +35,12 @@ MUST pass a durable ``checkpoint_location``.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from nyc_opendata_etl_spark.streaming.drain import drain
 
 
 def read_ivfpq_quantizers(spark: SparkSession, index_path: str) -> tuple:
@@ -108,44 +112,23 @@ def stream_ivfpq_ingest(
     vec_col: str = "embedding",
     query_name: str = "ann_ingest",
     checkpoint_location: str | None = None,
-    ephemeral: bool = False,
 ) -> None:
     """Drain an embedding stream into the batch-partitioned IVF-PQ
-    codes layout (bounded here by ``Trigger.AvailableNow``; drop the
-    trigger for a continuous pipeline). See the module docstring for
-    the exactly-once contract.
-
-    The contract RIDES ON the offset log pinning batch composition,
-    so omitting ``checkpoint_location`` silently downgrades replay to
-    at-most-once — callers must either pass a durable location or
-    opt out explicitly with ``ephemeral=True`` (ADVICE r14)."""
-    if checkpoint_location is None and not ephemeral:
-        raise ValueError(
-            "stream_ivfpq_ingest: the exactly-once contract requires a "
-            "durable checkpoint_location (the offset log pins batch "
-            "composition across restarts); pass ephemeral=True to "
-            "accept at-most-once replay semantics deliberately"
-        )
-
-    # quantizers are immutable for the stream's lifetime: read once,
-    # close over them (saves a params first() job + two footer reads
-    # per micro-batch)
-    quantizers = read_ivfpq_quantizers(
-        emb_stream.sparkSession, index_path
+    codes layout through
+    :func:`~nyc_opendata_etl_spark.streaming.drain.drain`. See the
+    module docstring for the exactly-once contract."""
+    # quantizers are immutable for the stream's lifetime: read them at
+    # the first batch (after the checkpoint guard) and reuse them for
+    # the rest of the drain — saves a params first() job + two footer
+    # reads per micro-batch
+    quantizers = functools.cache(
+        lambda: read_ivfpq_quantizers(emb_stream.sparkSession, index_path)
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         ann_ingest_batch(
             batch_df, batch_id, index_path, id_col=id_col, vec_col=vec_col,
-            quantizers=quantizers,
+            quantizers=quantizers(),
         )
 
-    writer = (
-        emb_stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_location is not None:
-        writer = writer.option("checkpointLocation", checkpoint_location)
-    q = writer.start()
-    q.awaitTermination()
+    drain(emb_stream, sink, query_name, checkpoint_location)

@@ -42,7 +42,11 @@ compact_dup_cluster_index` during a maintenance window.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
+
+from nyc_opendata_etl_spark.streaming.drain import drain
 
 
 def cluster_ingest_batch(batch_df: DataFrame, batch_id: int, index_path: str,
@@ -71,31 +75,12 @@ def stream_cluster_ingest(
     id_col: str = "doc_id",
     query_name: str = "cluster_ingest",
     checkpoint_location: str | None = None,
-    ephemeral: bool = False,
 ) -> None:
-    """Drain a document stream into the incremental cluster map
-    (bounded here by ``Trigger.AvailableNow``; drop the trigger for a
-    continuous pipeline). See the module docstring for the
-    exactly-once contract."""
-    if checkpoint_location is None and not ephemeral:
-        raise ValueError(
-            "stream_cluster_ingest: the exactly-once contract requires a "
-            "durable checkpoint_location (the offset log pins batch "
-            "composition across restarts); pass ephemeral=True to "
-            "accept at-most-once replay semantics deliberately"
-        )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        cluster_ingest_batch(
-            batch_df, batch_id, index_path, text_col=text_col, id_col=id_col
-        )
-
-    writer = (
-        docs_stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .trigger(availableNow=True)
+    """Drain a document stream into the incremental cluster map (see
+    :func:`~nyc_opendata_etl_spark.streaming.drain.drain`). See the
+    module docstring for the exactly-once contract."""
+    sink = functools.partial(
+        cluster_ingest_batch, index_path=index_path, text_col=text_col,
+        id_col=id_col,
     )
-    if checkpoint_location is not None:
-        writer = writer.option("checkpointLocation", checkpoint_location)
-    q = writer.start()
-    q.awaitTermination()
+    drain(docs_stream, sink, query_name, checkpoint_location)

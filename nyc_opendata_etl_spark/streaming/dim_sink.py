@@ -34,9 +34,12 @@ production callers MUST pass a durable ``checkpoint_location``.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from nyc_opendata_etl_spark.streaming.drain import drain
 
 SEED_VERSION = -1
 
@@ -136,37 +139,15 @@ def stream_scd2_upserts(
     eff_date_col: str = "eff_date",
     query_name: str = "scd2_upserts",
     checkpoint_location: str | None = None,
-    ephemeral: bool = False,
 ) -> None:
-    """Drain a CDC update stream into the versioned SCD2 dimension
-    (bounded by ``Trigger.AvailableNow``; drop the trigger for a
-    continuous pipeline). See the module docstring for the replay
-    contract."""
-
-    if checkpoint_location is None and not ephemeral:
-        raise ValueError(
-            "stream_scd2_upserts: the exactly-once/replay contract requires a "
-            "durable checkpoint_location (the offset log pins batch "
-            "composition across restarts); pass ephemeral=True to "
-            "accept at-most-once replay semantics deliberately"
-        )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        scd2_upsert_batch(
-            batch_df, batch_id, path,
-            natural_key=natural_key, tracked=tracked,
-            eff_date_col=eff_date_col,
-        )
-
-    writer = (
-        updates_stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .trigger(availableNow=True)
+    """Drain a CDC update stream into the versioned SCD2 dimension (see
+    :func:`~nyc_opendata_etl_spark.streaming.drain.drain`). See the
+    module docstring for the replay contract."""
+    sink = functools.partial(
+        scd2_upsert_batch, path=path, natural_key=natural_key,
+        tracked=tracked, eff_date_col=eff_date_col,
     )
-    if checkpoint_location is not None:
-        writer = writer.option("checkpointLocation", checkpoint_location)
-    q = writer.start()
-    q.awaitTermination()
+    drain(updates_stream, sink, query_name, checkpoint_location)
 
 
 def prune_scd2_versions(path: str, keep_last: int = 2) -> list[int]:

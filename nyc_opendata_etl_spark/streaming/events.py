@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from nyc_opendata_etl_spark.streaming.drain import drain
+
 EVENT_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -172,78 +174,6 @@ def stateful_first_seen(events: DataFrame, key_col: str = "user_id") -> DataFram
     )
 
 
-def tws_count_threshold(
-    events: DataFrame, key_col: str = "user_id", threshold: int = 67
-) -> DataFrame:
-    """Custom stateful streaming operator on Spark 4's
-    ``transformWithStateInPandas`` API: a running per-key event counter
-    that emits the key exactly once, in the micro-batch where its
-    lifetime count crosses ``threshold``.
-
-    Complements ``stateful_first_seen`` (the older
-    ``applyInPandasWithState`` API) with the newer processor-object API:
-    explicit typed state variables (``ValueState``), per-batch
-    ``handleInputRows``, TTL hooks. The emitted set — keys whose total
-    count ever reaches the threshold — is batching-invariant, so a
-    batch GROUP BY/HAVING is a full-value oracle for a genuinely
-    streaming execution. State is one long per key, sharded with the
-    grouping shuffle; at 100 TB a TTL (``ttlDurationMs``) would bound
-    it for keys that go quiet.
-
-    Environment gate: transformWithStateInPandas moves state through a
-    protobuf-encoded side channel, so it needs the ``protobuf`` package
-    at RUNTIME. The import check below runs on the DRIVER only — it
-    catches the all-one-environment case (this container, local mode);
-    on a cluster the EXECUTORS' Python needs protobuf too, and a
-    driver-only pass with bare executors still dies mid-stream with an
-    executor-side ImportError (ship protobuf in the executor image —
-    the gate cannot see that from here).
-    """
-    if threshold < 1:
-        raise ValueError(
-            f"threshold must be >= 1 (got {threshold}): the crossing "
-            f"test n < threshold <= n+add can never fire for a "
-            f"non-positive threshold, silently diverging from the "
-            f"batch GROUP BY/HAVING oracle that would return every key"
-        )
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pyspark's stateful-processor channel is protobuf-encoded); "
-            "not installed in this environment"
-        ) from exc
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class CountThreshold(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._cnt = handle.getValueState("cnt", "n BIGINT")
-
-        def handleInputRows(self, key, rows, timer_values):
-            prev = self._cnt.get()
-            n = int(prev[0]) if prev is not None else 0
-            add = sum(len(pdf) for pdf in rows)
-            self._cnt.update((n + add,))
-            if n < threshold <= n + add:
-                yield pd.DataFrame({key_col: [key[0]]})
-
-        def close(self) -> None:
-            pass
-
-    key_type = events.schema[key_col].dataType.simpleString()
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=CountThreshold(),
-        outputStructType=f"{key_col} {key_type}",
-        outputMode="Append",
-        timeMode="None",
-    )
-
-
 def interval_join_clicks_views(
     clicks: DataFrame,
     views: DataFrame,
@@ -287,8 +217,8 @@ def stream_to_partitioned_sink(
     checkpoint_location: str | None = None,
 ) -> None:
     """Stream → (month, batch)-partitioned warehouse parquet via
-    ``foreachBatch``, with dynamic partition overwrite keyed by
-    (month, batch_id).
+    :func:`~nyc_opendata_etl_spark.streaming.drain.drain`, with dynamic
+    partition overwrite keyed by (month, batch_id).
 
     Idempotency contract, stated exactly (round-11 review): the scheme
     is replay-safe because a re-delivered micro-batch rewrites exactly
@@ -296,25 +226,17 @@ def stream_to_partitioned_sink(
     the same month lands in different batch_id partitions (overwriting
     by month alone would drop every earlier batch of the month). That
     guarantee holds when replays reproduce the SAME batch boundaries —
-    which is what ``checkpoint_location`` provides: Structured
-    Streaming's offset log pins batch composition across restarts, so
-    production callers MUST pass a durable checkpoint. Without one
-    (tests, throwaway backfills) each invocation re-batches from
-    scratch; a re-run whose batching differs can leave a stale
-    higher-numbered batch_id partition from the previous run alongside
-    the new layout — re-runs without a checkpoint should write to a
-    fresh ``sink_path``.
+    which is what the required ``checkpoint_location`` provides:
+    Structured Streaming's offset log pins batch composition across
+    restarts.
 
     Readers scan ``sink_path`` normally (month pruning still applies;
     batch_id is an extra partition level); periodic
     :func:`~nyc_opendata_etl_spark.operators.backfill.compact_partitions`
-    folds the per-batch files. Bounded by ``Trigger.AvailableNow`` here
-    (the backfill use); drop the trigger for a continuous pipeline.
+    folds the per-batch files.
     """
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         (
             batch_df.withColumn("month", F.date_format(ts_col, "yyyy-MM"))
             .withColumn("batch_id", F.lit(batch_id))
@@ -328,15 +250,7 @@ def stream_to_partitioned_sink(
             .parquet(sink_path)
         )
 
-    writer = (
-        events.writeStream.foreachBatch(sink_batch)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_location is not None:
-        writer = writer.option("checkpointLocation", checkpoint_location)
-    q = writer.start()
-    q.awaitTermination()
+    drain(events, sink_batch, query_name, checkpoint_location)
 
 
 _SHUFFLE_CONF_LOCK = threading.Lock()

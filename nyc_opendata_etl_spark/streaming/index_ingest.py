@@ -44,8 +44,12 @@ stats fold stays trivial while postings pruning does the work.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from nyc_opendata_etl_spark.streaming.drain import drain
 
 
 def index_ingest_batch(
@@ -128,40 +132,15 @@ def stream_index_ingest(
     id_col: str = "doc_id",
     query_name: str = "index_ingest",
     checkpoint_location: str | None = None,
-    ephemeral: bool = False,
 ) -> None:
-    """Drain a document stream into the batch-partitioned index
-    (bounded here by ``Trigger.AvailableNow``; drop the trigger for a
-    continuous pipeline). See the module docstring for the
-    exactly-once contract.
-
-    The contract RIDES ON the offset log pinning batch composition,
-    so omitting ``checkpoint_location`` silently downgrades replay to
-    at-most-once — callers must either pass a durable location or
-    opt out explicitly with ``ephemeral=True`` (ADVICE r14, applied
-    family-wide)."""
-    if checkpoint_location is None and not ephemeral:
-        raise ValueError(
-            "stream_index_ingest: the exactly-once contract requires a "
-            "durable checkpoint_location (the offset log pins batch "
-            "composition across restarts); pass ephemeral=True to "
-            "accept at-most-once replay semantics deliberately"
-        )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        index_ingest_batch(
-            batch_df, batch_id, index_path, text_col=text_col, id_col=id_col
-        )
-
-    writer = (
-        docs_stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .trigger(availableNow=True)
+    """Drain a document stream into the batch-partitioned index (see
+    :func:`~nyc_opendata_etl_spark.streaming.drain.drain`). See the
+    module docstring for the exactly-once contract."""
+    sink = functools.partial(
+        index_ingest_batch, index_path=index_path, text_col=text_col,
+        id_col=id_col,
     )
-    if checkpoint_location is not None:
-        writer = writer.option("checkpointLocation", checkpoint_location)
-    q = writer.start()
-    q.awaitTermination()
+    drain(docs_stream, sink, query_name, checkpoint_location)
 
 
 def bm25_topk_delta(

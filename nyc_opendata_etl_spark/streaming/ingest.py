@@ -49,8 +49,12 @@ text).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from nyc_opendata_etl_spark.streaming.drain import drain
 
 #: Reserved index-partition ids: real micro-batch ids are >= 0.
 COMPACTED_B = -1
@@ -252,36 +256,15 @@ def stream_dedup_ingest(
     id_col: str = "doc_id",
     query_name: str = "dedup_ingest",
     checkpoint_location: str | None = None,
-    ephemeral: bool = False,
 ) -> None:
-    """Drain a document stream through the content-dedup ingest
-    (bounded here by ``Trigger.AvailableNow`` — drop the trigger for a
-    continuous pipeline). See the module docstring for the
-    exactly-once and takedown contracts."""
-
-    if checkpoint_location is None and not ephemeral:
-        raise ValueError(
-            "stream_dedup_ingest: the exactly-once/replay contract requires a "
-            "durable checkpoint_location (the offset log pins batch "
-            "composition across restarts); pass ephemeral=True to "
-            "accept at-most-once replay semantics deliberately"
-        )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_ingest_batch(
-            batch_df, batch_id, index_path, out_path,
-            text_col=text_col, id_col=id_col,
-        )
-
-    writer = (
-        docs_stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .trigger(availableNow=True)
+    """Drain a document stream through the content-dedup ingest (see
+    :func:`~nyc_opendata_etl_spark.streaming.drain.drain`). See the
+    module docstring for the exactly-once and takedown contracts."""
+    sink = functools.partial(
+        dedup_ingest_batch, index_path=index_path, out_path=out_path,
+        text_col=text_col, id_col=id_col,
     )
-    if checkpoint_location is not None:
-        writer = writer.option("checkpointLocation", checkpoint_location)
-    q = writer.start()
-    q.awaitTermination()
+    drain(docs_stream, sink, query_name, checkpoint_location)
 
 
 def takedown_from_ingest_index(

@@ -140,13 +140,17 @@ def test_ivfpq_build_write_parallelizes_past_one_task_per_cell(
 
     par = spark.sparkContext.defaultParallelism
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    n_cells = 16
+    # cell count below the session's parallelism on any host, so the
+    # salt always engages
+    n_cells = max(1, par // 2)
     assert par > n_cells, "test needs parallelism above the cell count"
 
     # the adversarial shape the hash salt exists for: cells assigned by
     # id arithmetic, which a modulo salt would collapse into (a modulo
     # salt here is constant per cell — exactly one key per cell again)
-    cells = emb.selectExpr("vec_id as id", "cast(vec_id % 16 as int) as cid")
+    cells = emb.selectExpr(
+        "vec_id as id", f"cast(vec_id % {n_cells} as int) as cid"
+    )
     n_salt = -(-2 * par // n_cells)
     keys = cells.select(
         "cid", F.pmod(F.xxhash64("id"), F.lit(n_salt)).alias("s")
@@ -161,7 +165,7 @@ def test_ivfpq_build_write_parallelizes_past_one_task_per_cell(
     prev = spark.conf.get(coalesce_conf, "true")
     spark.conf.set(coalesce_conf, "false")
     try:
-        similarity.build_ivfpq_index(emb, idx)
+        similarity.build_ivfpq_index(emb, idx, n_centroids=n_cells)
     finally:
         spark.conf.set(coalesce_conf, prev)
     per_cell = []

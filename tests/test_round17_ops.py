@@ -45,19 +45,46 @@ def test_spread_width_fill_then_grow():
     assert _spread_width(512 << 20, par, 1 << 20) == 4 * par
 
 
-def test_spread_batch_reads_plan_stats_without_input_files(spark):
-    """A DataFrame with NO inputFiles() (the foreachBatch shape — its
-    scan is an internal batch relation) must still get a width from the
-    optimizer's size statistics, not silently skip the spread (the r16
-    no-op this round fixed). A local relation has empty inputFiles and
-    known stats, reproducing the batch shape."""
-    df = spark.createDataFrame(
-        [(i, "x" * 2000) for i in range(3000)], "id long, text string"
-    ).coalesce(1)
-    assert df.inputFiles() == []
-    out = spread_batch(df, target_bytes=64 << 10)
-    # ~6 MB of local rows at a 64 KB target: the spread must have fired
-    assert out.rdd.getNumPartitions() > df.rdd.getNumPartitions()
+def test_spread_batch_reads_plan_stats_without_input_files(
+    spark, tmp_path, monkeypatch
+):
+    """Inside foreachBatch a file-source micro-batch reports NO
+    inputFiles() (its scan is an internal batch relation), so the width
+    must come from the optimizer's size statistics. A real micro-batch
+    is driven through the shared drain and the byte count handed to the
+    width rule is recorded: the ``width = par`` fallback never calls
+    the rule, so a recorded size inside (0, 2^62) proves the
+    plan-stats read ran — and fails loudly if a Spark upgrade moves
+    the private JVM call it relies on."""
+    from nyc_opendata_etl_spark.streaming import ingest
+    from nyc_opendata_etl_spark.streaming.drain import drain
+
+    sizes, input_files = [], []
+    width_rule = ingest._spread_width
+
+    def recording_width(nbytes, par, target_bytes):
+        sizes.append(nbytes)
+        return width_rule(nbytes, par, target_bytes)
+
+    monkeypatch.setattr(ingest, "_spread_width", recording_width)
+
+    def sink(batch_df, batch_id):
+        input_files.append(batch_df.inputFiles())
+        spread_batch(batch_df)
+
+    schema = "id long, text string"
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(i, "x" * 200) for i in range(500)], schema
+    ).write.parquet(src)
+    drain(
+        spark.readStream.schema(schema).parquet(src),
+        sink,
+        "spread_stats_probe",
+        str(tmp_path / "ckpt"),
+    )
+    assert input_files == [[]]  # the foreachBatch shape
+    assert len(sizes) == 1 and 0 < sizes[0] < 1 << 62, sizes
 
 
 def test_spread_batch_leaves_tiny_batches_alone(spark):

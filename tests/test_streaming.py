@@ -118,11 +118,18 @@ def test_stream_to_partitioned_sink_is_idempotent(spark, tmp_path):
     sink = str(tmp_path / "sink")
     df.write.parquet(src)
 
-    stream_to_partitioned_sink(read_event_stream(spark, src), sink, query_name="s1")
+    stream_to_partitioned_sink(
+        read_event_stream(spark, src), sink, query_name="s1",
+        checkpoint_location=str(tmp_path / "ckpt1"),
+    )
     assert spark.read.parquet(sink).count() == 3
-    # replaying the same bounded stream (fresh query, same source, batch
-    # ids restart) must REPLACE its own partitions, not append duplicates
-    stream_to_partitioned_sink(read_event_stream(spark, src), sink, query_name="s2")
+    # replaying the same bounded stream (fresh query, fresh checkpoint,
+    # same source, batch ids restart) must REPLACE its own partitions,
+    # not append duplicates
+    stream_to_partitioned_sink(
+        read_event_stream(spark, src), sink, query_name="s2",
+        checkpoint_location=str(tmp_path / "ckpt2"),
+    )
     out = spark.read.parquet(sink)
     assert out.count() == 3
     assert {r.month for r in out.select("month").distinct().collect()} == {
@@ -156,7 +163,7 @@ def test_stream_sink_keeps_all_batches_of_a_month(spark, tmp_path):
     mk(2, 20).write.mode("append").parquet(src)
     stream_to_partitioned_sink(
         read_event_stream(spark, src, max_files_per_trigger=1), sink,
-        query_name="s3",
+        query_name="s3", checkpoint_location=str(tmp_path / "ckpt"),
     )
     out = spark.read.parquet(sink)
     assert sorted(r.event_id for r in out.collect()) == [1, 2]
@@ -208,38 +215,6 @@ def test_checkpointed_available_now_is_incremental(spark, tmp_path):
     # no new data -> replay is a no-op (no duplicates)
     drain()
     assert spark.read.parquet(sink).count() == 2
-
-
-def test_tws_count_threshold_gated_or_runs(spark, tmp_path):
-    """transformWithStateInPandas needs protobuf at runtime. Where the
-    package exists the operator must produce the batching-invariant
-    threshold set; where it doesn't, it must fail fast with a clear
-    NotImplementedError instead of a mid-stream worker crash."""
-    import pytest
-
-    from nyc_opendata_etl_spark.sources.tables import load_table
-    from nyc_opendata_etl_spark.streaming import events as se
-
-    sf = "/root/testdata/sf0.001"
-    stage = str(tmp_path / "events_stage")
-    load_table(spark, sf, "events").write.mode("overwrite").parquet(stage)
-    stream = se.read_event_stream(spark, stage, max_files_per_trigger=4)
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            se.tws_count_threshold(stream, "user_id", threshold=67)
-        return
-    crossed = se.tws_count_threshold(stream, "user_id", threshold=67)
-    out = se.run_available_now(crossed, "tws_test", output_mode="append")
-    expected = (
-        load_table(spark, sf, "events")
-        .groupBy("user_id")
-        .count()
-        .filter("count >= 67")
-        .count()
-    )
-    assert out.count() == expected
 
 
 def test_stream_static_dim_enrichment_matches_batch(spark):
@@ -397,12 +372,11 @@ def test_stream_sink_accepts_checkpoint_location(spark, tmp_path):
 
 
 def test_exactly_once_wrappers_require_checkpoint_or_explicit_optout():
-    """ADVICE r14, applied family-wide: every exactly-once streaming
-    wrapper's contract rides on the offset log pinning batch
-    composition, so a caller omitting checkpoint_location must get a
-    raise (not silent at-most-once semantics) unless they opt out with
-    ephemeral=True. The guard fires before the stream is touched, so a
-    None stream reaches it."""
+    """Every exactly-once streaming wrapper's contract rides on the
+    offset log pinning batch composition, so a caller omitting
+    checkpoint_location must get a raise (not silent at-most-once
+    semantics). The shared drain's guard fires before the stream is
+    touched, so a None stream reaches it."""
     import pytest
 
     from nyc_opendata_etl_spark.streaming.ann_ingest import stream_ivfpq_ingest
@@ -412,6 +386,9 @@ def test_exactly_once_wrappers_require_checkpoint_or_explicit_optout():
     from nyc_opendata_etl_spark.streaming.dim_sink import stream_scd2_upserts
     from nyc_opendata_etl_spark.streaming.index_ingest import stream_index_ingest
     from nyc_opendata_etl_spark.streaming.ingest import stream_dedup_ingest
+    from nyc_opendata_etl_spark.streaming.events import (
+        stream_to_partitioned_sink,
+    )
 
     cases = [
         lambda: stream_index_ingest(None, "/tmp/x"),
@@ -419,6 +396,7 @@ def test_exactly_once_wrappers_require_checkpoint_or_explicit_optout():
         lambda: stream_dedup_ingest(None, "/tmp/x", "/tmp/y"),
         lambda: stream_scd2_upserts(None, "/tmp/x", ["k"], ["v"]),
         lambda: stream_cluster_ingest(None, "/tmp/x"),
+        lambda: stream_to_partitioned_sink(None, "/tmp/x"),
     ]
     for case in cases:
         with pytest.raises(ValueError, match="checkpoint_location"):

@@ -355,3 +355,23 @@ def test_raw_cache_gate_branches_at_size_threshold(spark, tmp_path):
             return ["s3://bucket/part-0.parquet"]
 
     assert W._input_size_bytes(_Remote()) is None
+
+
+def test_stamped_dim_builders_keep_an_all_null_row(spark):
+    """build_star answers its F3 emptiness probes from the RAW inputs,
+    which holds only while every stamped dim builder is row-preserving:
+    a raw with >= 1 rows, even all-NULL, must yield a dim with >= 1
+    rows. A filter added to any of these builders breaks the probe."""
+
+    def all_null(raw):
+        return spark.createDataFrame([(None,) * len(raw.columns)], raw.schema)
+
+    raw_311 = all_null(_raw_311(spark))
+    raw_parking = all_null(_raw_parking(spark))
+    for build, raw in (
+        (W.build_agency_dim, raw_311),
+        (W.build_complaint_dim, raw_311),
+        (W.build_location_dim, raw_311),
+        (W.build_vehicle_dim, raw_parking),
+    ):
+        assert build(raw).count() >= 1, build.__name__
