@@ -358,10 +358,7 @@ def _load_all() -> None:
         pipeline,
         multimodal_q,
         tpch,
-        pending_r13,
-        pending_r14,
-        pending_r15,
-        pending_r16,
+        maintenance,
     )
 
     _LOADED = True

@@ -4227,3 +4227,226 @@ def q_stats_chi2_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dev * dev / exp, 6).alias("chi2_contrib"),
         )
     )
+
+
+_SHARD_SEED = 42
+_N_SHARDS = 8
+_SHARD_HV = md5_long_oracle_sql(
+    f"concat_ws('|', '{_SHARD_SEED}', CAST(doc_id AS VARCHAR))"
+)
+
+
+@register(
+    "corpus_shard_epoch",
+    oracle=f"""
+    WITH h AS (
+        SELECT doc_id, {_SHARD_HV} AS hv
+        FROM documents
+    )
+    SELECT doc_id,
+           CAST(hv % {_N_SHARDS} AS INT) AS shard,
+           CAST(row_number() OVER (
+               PARTITION BY hv % {_N_SHARDS} ORDER BY hv, doc_id
+           ) AS BIGINT) AS pos
+    FROM h
+    """,
+)
+def q_corpus_shard_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic seeded epoch shuffle + sharding
+    (operators/curation.shard_epoch): every document gets a (shard,
+    pos) such that reading shards in (shard, pos) order is a
+    seed-keyed pseudo-random permutation of the corpus — the LAST step
+    of a pretraining pipeline (epoch order must be random-looking,
+    reproducible across restarts, and writable as n_shards independent
+    streams). One shuffle (per-shard sort window), no global total
+    order — n_shards parallel sorts at 100 TB, never a single-partition
+    sort."""
+    from nyc_opendata_etl_spark.operators.curation import shard_epoch
+
+    docs = load_table(spark, sf_dir, "documents")
+    return shard_epoch(docs, seed=_SHARD_SEED, n_shards=_N_SHARDS)
+
+
+_KNN_COS_AC = _cos_sql("a.v", "c.cvec")
+_KNN_COS_QC = _cos_sql("q.qvec", "c.cvec")
+_KNN_COS_AQ = _cos_sql("a.v", "p.qvec")
+
+
+# The WITH-chain of the batched k-NN protocol (assignment, probe
+# selection, cell-restricted scoring, per-query ranking), shared
+# VERBATIM by similarity_knn_join's oracle and corpus_knn_label's
+# oracle — a protocol tweak can never desynchronize
+# the two (the similarity_ivfpq_retrain shared-oracle discipline).
+KNN_RANKED_CTE = f"""
+    WITH c AS (
+        SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cvec
+        FROM embeddings WHERE vec_id < 64
+    ),
+    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    ascored AS (
+        SELECT a.vec_id, a.v, c.cid, {_KNN_COS_AC} AS sim
+        FROM e a CROSS JOIN c
+    ),
+    assigned AS (
+        -- sim IS NOT NULL mirrors _ivf_assign's NULL-best drop
+        SELECT vec_id, v, cid FROM (
+            SELECT *, row_number() OVER (PARTITION BY vec_id
+                                         ORDER BY sim DESC, cid) AS rn
+            FROM ascored
+        ) WHERE rn = 1 AND sim IS NOT NULL
+    ),
+    q AS (
+        SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
+        FROM embeddings WHERE vec_id % 20 = 3
+    ),
+    qscored AS (
+        SELECT q.query_id, q.qvec, c.cid, {_KNN_COS_QC} AS sim
+        FROM q CROSS JOIN c
+    ),
+    probes AS (
+        SELECT query_id, qvec, cid FROM (
+            SELECT *, row_number() OVER (PARTITION BY query_id
+                                         ORDER BY sim DESC, cid) AS rn
+            FROM qscored WHERE sim IS NOT NULL
+        ) WHERE rn <= 2
+    ),
+    cand AS (
+        SELECT p.query_id, a.vec_id,
+               -- "+ 0" folds a possible -0.0 to +0.0: Spark's round()
+               -- (BigDecimal) never emits -0.0, DuckDB's and numpy's
+               -- keep it, and the driver compare distinguishes reprs
+               round({_KNN_COS_AQ}, 6) + 0 AS cosine_sim
+        FROM probes p JOIN assigned a USING (cid)
+        WHERE p.query_id <> a.vec_id
+    ),
+    ranked AS (
+        SELECT *, row_number() OVER (PARTITION BY query_id
+                                     ORDER BY cosine_sim DESC, vec_id) AS rk
+        FROM cand
+    )"""
+
+
+@register(
+    "similarity_knn_join",
+    # the oracle replays the full batched protocol: one shared corpus
+    # assignment, per-query probe selection, cell-restricted re-rank
+    oracle=KNN_RANKED_CTE
+    + """
+    SELECT query_id, vec_id, cosine_sim, CAST(rk AS INT) AS rk
+    FROM ranked WHERE rk <= 5
+    """,
+)
+def q_similarity_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batched IVF k-NN JOIN (operators/similarity.knn_join): every
+    query vector (the ``vec_id % 20 == 3`` slice — an SF-scaling query
+    set, ~5% of the corpus) gets its top-5 corpus neighbors restricted
+    to its 2 nearest of 64 coarse cells. The amortized many-queries
+    form the single-probe ANN ops don't cover: ONE shared corpus cell
+    assignment, candidate volume Q·N·(n_probe/C), each cell scored as
+    one unit-normalized float64 GEMM via cogroup-applyInPandas with
+    per-cell top-k (the "expr" kernel — plain cid join, no forced
+    broadcast, per-pair fold — is the pinned-identical declarative
+    twin), one bounded row_number window per query for the global
+    top-k. Deterministic end-to-end, so the DuckDB oracle replays
+    assignment, probing, and re-rank exactly."""
+    from nyc_opendata_etl_spark.operators import similarity
+
+    emb = load_table(spark, sf_dir, "embeddings", spread_input=True)
+    return similarity.knn_join(
+        emb,
+        emb.filter(F.col("vec_id") % 20 == 3),
+        n_centroids=64,
+        n_probe=2,
+        k=5,
+    )
+
+
+_DSEM_COS = _cos_sql("t.embedding", "ev.embedding")
+
+
+@register(
+    "corpus_decontaminate_semantic",
+    oracle=f"""
+    WITH t AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 <> 0),
+    ev AS (SELECT vec_id AS eval_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
+    hit AS (
+        SELECT t.vec_id, ev.eval_id, round({_DSEM_COS}, 6) + 0 AS sim
+        FROM t CROSS JOIN ev
+        WHERE round({_DSEM_COS}, 6) >= 0.3
+    )
+    SELECT vec_id,
+           count(*) AS n_eval_hits,
+           max(sim) AS max_cosine,
+           CAST(first(eval_id ORDER BY sim DESC, eval_id) AS BIGINT)
+               AS best_eval_id
+    FROM hit GROUP BY vec_id
+    """,
+)
+def q_corpus_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space benchmark decontamination
+    (operators/curation.decontaminate_semantic): train vectors
+    (``vec_id % 50 != 0``) scoring cosine ≥ 0.3 against ANY eval
+    vector (``% 50 == 0`` — the stand-in benchmark suite, bounded by
+    construction) are flagged with hit count, best similarity, and the
+    matching eval id. The semantic twin of ``corpus_decontaminate``:
+    paraphrased leakage shares no 3-gram shingle but keeps its
+    embedding neighborhood. Eval side broadcasts (bounded benchmark
+    contract — NOT an SF-scaling relation), train side is one scan +
+    map-side aggregate: no train shuffle at any corpus size. Exact on
+    purpose — a pruning false negative here is eval data left in the
+    training set."""
+    from nyc_opendata_etl_spark.operators.curation import decontaminate_semantic
+
+    emb = load_table(spark, sf_dir, "embeddings", spread_input=True)
+    return decontaminate_semantic(
+        emb.filter(F.col("vec_id") % 50 != 0),
+        emb.filter(F.col("vec_id") % 50 == 0),
+        threshold=0.3,
+    )
+
+
+@register(
+    "corpus_knn_label",
+    # knn protocol CTE shared VERBATIM with similarity_knn_join's
+    # oracle; only the vote aggregation is new
+    oracle=KNN_RANKED_CTE
+    + """
+    , lab AS (
+        SELECT r.query_id, e2.label
+        FROM ranked r JOIN embeddings e2 ON r.vec_id = e2.vec_id
+        WHERE r.rk <= 5 AND e2.label IS NOT NULL
+    ),
+    v AS (
+        SELECT query_id, label, count(*) AS votes
+        FROM lab GROUP BY 1, 2
+    )
+    SELECT query_id,
+           CAST(first(label ORDER BY votes DESC, label) AS INT)
+               AS pred_label,
+           CAST(first(votes ORDER BY votes DESC, label) AS BIGINT)
+               AS votes,
+           CAST(sum(votes) AS BIGINT) AS n_neighbors
+    FROM v GROUP BY query_id
+    """,
+)
+def q_corpus_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-NN label transfer (operators/similarity.knn_label): the
+    ``vec_id % 20 == 3`` query slice is classified by the majority
+    label of its top-5 knn_join neighbors — the quality-classifier
+    bootstrap of LLM data curation (hand-label a seed, propagate
+    through embedding neighborhoods, train the cheap classifier on
+    the propagation). Pure composition: knn_join (same cells/probe/k
+    as similarity_knn_join — the oracle literally shares its WITH
+    chain) + a label join-back on a bounded Q·k relation + two hash
+    aggregates with a (votes, smaller-label) deterministic tie. Votes
+    count labeled neighbors only."""
+    from nyc_opendata_etl_spark.operators import similarity
+
+    emb = load_table(spark, sf_dir, "embeddings", spread_input=True)
+    return similarity.knn_label(
+        emb,
+        emb.filter(F.col("vec_id") % 20 == 3),
+        n_centroids=64,
+        n_probe=2,
+        k=5,
+    )

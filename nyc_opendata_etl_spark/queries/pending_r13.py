@@ -1,482 +1,5 @@
-"""Round-13 registrations — LIVE as of round 13 (flipped per VERDICT
-r12 item 1): the five operators built late in round 12 after the r12
-verdict window was already slot-exact at 50 (registering then would
-have evicted r7-cohort greens).
-
-Staged r12 → flipped r13: each pair ran under the SAME differential
-compare the driver uses (tests/test_round12b_ops.py, Spark vs DuckDB at
-sf0.01) for a full round before registration, so the flip was a rename,
-not a leap. ``PENDING`` is kept as this module's registration manifest
-— the in-suite differential test still iterates it, now doubling as a
-pre-driver gate on every pytest run.
-
-Window-slot cost: 5 of the ~17 spare r13 slots (new registrations are
-never-checked → group 0 of the verdict-age sort automatically).
-"""
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from nyc_opendata_etl_spark.functions.hashing import md5_long_oracle_sql
-from nyc_opendata_etl_spark.operators import dedup, multimodal
-from nyc_opendata_etl_spark.queries import register
-from nyc_opendata_etl_spark.queries.llm_ops import _CANON
-from nyc_opendata_etl_spark.sources.tables import load_table
-
-PENDING: dict[str, tuple] = {}
-
-
-def _pending(name: str, oracle: str):
-    """r12 staging decorator, now ALSO the live registration (the r13
-    flip): records the (fn, oracle) pair for the in-suite differential
-    test and registers it with the query registry."""
-
-    def deco(fn):
-        PENDING[name] = (fn, oracle)
-        return register(name, oracle)(fn)
-
-    return deco
-
-
-def _fresh_run_dir(prefix: str) -> str:
-    """Per-invocation scratch dir for a streaming run (sink + index +
-    checkpoint), with two-sided leak control (ADVICE r12 low): dirs
-    from THIS process are rmtree'd at interpreter exit (the returned
-    DataFrame is lazy, so removal must outlive the caller — atexit is
-    the earliest safe point), and orphans from crashed/killed earlier
-    runs are reaped on the next invocation. Liveness, not age, decides
-    what is an orphan (ADVICE r13: the old 1-hour mtime cutoff could
-    delete a LIVE long run's sink/checkpoint mid-run — a large-sf
-    bench or a stuck stream legitimately exceeds an hour): the owning
-    pid is embedded in the dir name and probed with ``os.kill(pid,
-    0)``; only dead owners are reaped. Legacy dirs without a pid tag
-    fall back to a conservative 24 h mtime cutoff."""
-    import atexit
-    import glob
-    import os
-    import re
-    import shutil
-    import tempfile
-    import time
-
-    for old in glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*")):
-        m = re.match(re.escape(prefix) + r"p(\d+)_", os.path.basename(old))
-        try:
-            if m:
-                pid = int(m.group(1))
-                try:
-                    os.kill(pid, 0)
-                    continue  # owner alive — its run dir is not ours to reap
-                except ProcessLookupError:
-                    shutil.rmtree(old, ignore_errors=True)
-                except PermissionError:
-                    continue  # pid exists under another user — treat as live
-            elif os.path.getmtime(old) < time.time() - 86400:
-                shutil.rmtree(old, ignore_errors=True)
-        except OSError:
-            pass
-    run = tempfile.mkdtemp(prefix=f"{prefix}p{os.getpid()}_")
-    atexit.register(shutil.rmtree, run, ignore_errors=True)
-    return run
-
-
-def _stage_fingerprint_index_rc(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the REFCOUNTED fingerprint delta log once per corpus
-    version, exercising every maintenance direction: base build from
-    the even half, an append batch (doc_id % 4 == 1), then a DELETE of
-    doc_id % 8 == 0 (a quarter of the evens — each withdrawn doc was
-    present exactly once, per the delete contract). _RC_DONE is written
-    last, proving all three phases completed."""
-    import os
-
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "fingerprint_index_rc")
-    if is_stale(path, sf_dir, "documents", marker="_RC_DONE"):
-        docs = load_table(spark, sf_dir, "documents")
-        dedup.build_fingerprint_index_rc(docs.filter(F.col("doc_id") % 2 == 0), path)
-        dedup.update_fingerprint_index_rc(docs.filter(F.col("doc_id") % 4 == 1), path)
-        dedup.delete_from_fingerprint_index_rc(
-            docs.filter(F.col("doc_id") % 8 == 0), path
-        )
-        with open(os.path.join(path, "_RC_DONE"), "w") as fh:
-            fh.write("")
-    return path
-
-
-@_pending(
-    "dedup_incremental_rc",
-    oracle=f"""
-    WITH deltas AS (
-        SELECT {md5_long_oracle_sql(_CANON)} AS h,
-               CAST(count(*) AS BIGINT) AS cnt
-        FROM documents WHERE doc_id % 2 = 0 GROUP BY 1
-        UNION ALL
-        SELECT {md5_long_oracle_sql(_CANON)}, CAST(count(*) AS BIGINT)
-        FROM documents WHERE doc_id % 4 = 1 GROUP BY 1
-        UNION ALL
-        SELECT {md5_long_oracle_sql(_CANON)}, -CAST(count(*) AS BIGINT)
-        FROM documents WHERE doc_id % 8 = 0 GROUP BY 1
-    ),
-    live AS (SELECT h FROM deltas GROUP BY h HAVING sum(cnt) > 0),
-    probe AS (
-        SELECT doc_id, {md5_long_oracle_sql(_CANON)} AS h
-        FROM documents WHERE doc_id % 4 = 3
-    )
-    SELECT doc_id FROM probe p
-    WHERE NOT EXISTS (SELECT 1 FROM live l WHERE l.h = p.h)
-    """,
+# Alias for perfbench's stream_ingest import; goes when that import moves to queries.maintenance.
+from nyc_opendata_etl_spark.queries.maintenance import (  # noqa: F401
+    _stage_cdc_batches,
+    _stage_docs_idordered,
 )
-def q_dedup_incremental_rc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental dedup against the REFCOUNTED staged fingerprint
-    index — dedup_incremental's deletion-capable twin. The staged delta
-    log is built base + append + DELETE (doc_id % 8 == 0 withdrawn), so
-    the probe must treat a canon whose only copies were withdrawn as
-    NEW again while a canon with any surviving copy stays live — sum
-    semantics the bare-hash index cannot express. The oracle recomputes
-    the signed per-canon deltas from raw documents (verifying the
-    staged log's CONTENT, not just the join) and replays the
-    SUM(cnt) > 0 liveness rule. Probe plan: batch hashes broadcast into
-    a left-semi over the index scan + partial SUM — O(new docs), no
-    index shuffle (plan-pinned in tests/test_round12b_ops.py)."""
-    index_path = _stage_fingerprint_index_rc(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents", spread_input=True)
-    batch = docs.filter(F.col("doc_id") % 4 == 3)
-    return dedup.incremental_new_docs_rc(batch, spark.read.parquet(index_path))
-
-
-def _stage_docs_idordered(spark: SparkSession, sf_dir: str) -> str:
-    """Stage documents as 8 doc_id-range-ordered parquet files with
-    ascending mtimes (the _stage_events protocol: FileStreamSource
-    replays by ms-precision mtime; part numbering == range order under
-    repartitionByRange, and stamps go BACKWARDS from now so nothing
-    lands in the future and masks a source regeneration). Ascending id
-    ranges are what make the ingest contract SQL-expressible: the first
-    micro-batch containing a canon holds that canon's smallest ids, so
-    the accepted doc per canon is the GLOBAL min id."""
-    import os
-    import time
-
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "docs_idordered")
-    if is_stale(path, sf_dir, "documents"):
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .repartitionByRange(8, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
-        base = time.time()
-        for i, p in enumerate(parts):
-            # ≥1 s apart: 1 ms sat at the precision floor of both
-            # os.utime round-tripping and FileStreamSource's
-            # ms-granularity mtimes — a coarser filesystem would
-            # collapse the stamps to ties and make batch order (and
-            # the min-id oracle) flaky (ADVICE r12 low).
-            t = base - (len(parts) - i) * 1.0
-            os.utime(os.path.join(path, p), (t, t))
-    return path
-
-
-@_pending(
-    "stream_dedup_ingest",
-    # The accepted corpus is exactly one doc per live canon, and with
-    # id-range-ordered micro-batches that doc is the canon's global
-    # min id — the exact_dedup_groups keep set, a plain SQL aggregate.
-    oracle=f"""
-    SELECT min(doc_id) AS doc_id
-    FROM (SELECT doc_id, {md5_long_oracle_sql(_CANON)} AS h FROM documents)
-    GROUP BY h
-    """,
-)
-def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming content-dedup ingestion (streaming/ingest.py) run as a
-    bounded AvailableNow drain: 4 micro-batches (8 staged files,
-    maxFilesPerTrigger=2) through the foreachBatch probe-then-update
-    kernel against the b-partitioned refcounted fingerprint log — both
-    writes idempotent per batch partition, the probe excluding the
-    current batch id (replay safety), within-batch collapse to the
-    min-id row. Index/sink/checkpoint live in a fresh per-run temp dir
-    (a run IS the unit here; the staged input is the cached artifact).
-    The differential gate then proves the whole pipeline — batching,
-    probe, idempotent writes — lands exactly the exact-dedup keep set.
-    100×: 8-batch 500k-doc drain in 24.6 s (SCALE_SWEEP_100X_r12),
-    after the two sweep-found batch-scale fixes (re-spread the
-    file-source batch, checkpoint the bounded collapse)."""
-    import uuid
-
-    from nyc_opendata_etl_spark.streaming.ingest import stream_dedup_ingest
-
-    src = _stage_docs_idordered(spark, sf_dir)
-    run = _fresh_run_dir("spark_graft_ingest_run_")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(src)
-    )
-    stream_dedup_ingest(
-        stream,
-        f"{run}/idx",
-        f"{run}/out",
-        query_name=f"ingest_{uuid.uuid4().hex[:8]}",
-        checkpoint_location=f"{run}/ckpt",
-    )
-    return spark.read.parquet(f"{run}/out").select("doc_id")
-
-
-def _stage_cdc_batches(spark: SparkSession, sf_dir: str) -> str:
-    """Stage two CDC update batches against the customer dim as plain
-    top-level parquet FILES with ascending mtimes (file-source batch
-    order). KEY-DISJOINT by construction — batch 0 changes custkey%4==0,
-    batch 1 no-ops %4==1 and inserts shifted %4==2 — which is what
-    makes the streaming result SQL-expressible: SCD2 merges over
-    key-disjoint update sets COMPOSE, so merge(merge(dim,b0),b1) ==
-    merge(dim, b0 ∪ b1), a single-merge oracle. Spark writes each batch
-    into a scratch subdir and the part file is renamed up (the file
-    source ignores nested directories)."""
-    import os
-    import shutil
-    import time
-
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
-
-    path = stage_dir(sf_dir, "cdc_customer_batches")
-    if is_stale(path, sf_dir, "customer"):
-        cust = load_table(spark, sf_dir, "customer")
-        eff = F.to_date(F.lit("2025-06-01"))
-        batches = [
-            cust.filter(F.col("c_custkey") % 4 == 0).select(
-                F.col("c_custkey").alias("k"),
-                F.concat(F.lit("V0_"), "c_mktsegment").alias("attr"),
-                eff.alias("eff_date"),
-            ),
-            cust.filter(F.col("c_custkey") % 4 == 1)
-            .select(
-                F.col("c_custkey").alias("k"),
-                F.col("c_mktsegment").alias("attr"),
-                eff.alias("eff_date"),
-            )
-            .unionByName(
-                cust.filter(F.col("c_custkey") % 4 == 2).select(
-                    (F.col("c_custkey") + 10_000_000).alias("k"),
-                    F.lit("FRESH").alias("attr"),
-                    eff.alias("eff_date"),
-                )
-            ),
-        ]
-        os.makedirs(path, exist_ok=True)
-        base = time.time()
-        for i, b in enumerate(batches):
-            scratch = os.path.join(path, f"__scratch_{i}")
-            b.coalesce(1).write.mode("overwrite").parquet(scratch)
-            part = next(
-                f for f in os.listdir(scratch) if f.startswith("part-")
-            )
-            dst = os.path.join(path, f"b{i}.parquet")
-            os.replace(os.path.join(scratch, part), dst)
-            shutil.rmtree(scratch)
-            # ≥1 s spacing — see _stage_docs_idordered (ADVICE r12).
-            t = base - (len(batches) - i) * 1.0
-            os.utime(dst, (t, t))
-        with open(os.path.join(path, "_SUCCESS"), "w") as fh:
-            fh.write("")
-    return path
-
-
-@_pending(
-    "stream_scd2_upserts",
-    # single-merge SQL over the UNION of the key-disjoint batches ==
-    # the two-batch streamed composition (see _stage_cdc_batches); the
-    # CTE structure is the scd2_merge query's oracle pattern.
-    oracle="""
-    WITH cur AS (
-        SELECT c_custkey AS k, c_mktsegment AS attr,
-               DATE '2024-01-01' AS effective_from,
-               CAST(NULL AS DATE) AS effective_to,
-               TRUE AS is_current
-        FROM customer
-    ),
-    upd AS (
-        SELECT c_custkey AS k, concat('V0_', c_mktsegment) AS attr,
-               DATE '2025-06-01' AS eff
-        FROM customer WHERE c_custkey % 4 = 0
-        UNION ALL
-        SELECT c_custkey, c_mktsegment, DATE '2025-06-01'
-        FROM customer WHERE c_custkey % 4 = 1
-        UNION ALL
-        SELECT c_custkey + 10000000, 'FRESH', DATE '2025-06-01'
-        FROM customer WHERE c_custkey % 4 = 2
-    ),
-    closed AS (
-        SELECT c.k, c.attr, c.effective_from, u.eff AS effective_to,
-               FALSE AS is_current
-        FROM cur c JOIN upd u USING (k)
-        WHERE c.attr IS DISTINCT FROM u.attr
-    ),
-    opened AS (
-        SELECT u.k, u.attr, u.eff AS effective_from,
-               CAST(NULL AS DATE) AS effective_to, TRUE AS is_current
-        FROM upd u LEFT JOIN cur c USING (k)
-        WHERE c.k IS NULL OR c.attr IS DISTINCT FROM u.attr
-    ),
-    as_is AS (
-        SELECT c.k, c.attr, c.effective_from, c.effective_to, c.is_current
-        FROM cur c LEFT JOIN upd u USING (k)
-        WHERE u.k IS NULL OR c.attr IS NOT DISTINCT FROM u.attr
-    )
-    SELECT * FROM closed UNION ALL SELECT * FROM opened
-    UNION ALL SELECT * FROM as_is
-    """,
-)
-def q_stream_scd2_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming SCD2 dimension maintenance (streaming/dim_sink.py) as
-    a bounded AvailableNow drain: two key-disjoint CDC micro-batches
-    (change / no-op / insert variety) fold into the customer dim via
-    the versioned-snapshot sink — batch b merges the newest snapshot
-    STRICTLY below b and overwrites ``v=b`` (replay-pinned inputs,
-    idempotent writes; the double-apply trap is pinned in
-    tests/test_round12b_ops.py). Key-disjointness makes SCD2 merges
-    compose, so the streamed two-batch result equals ONE merge of the
-    union — the oracle replays exactly that with the scd2_merge CTE
-    pattern, proving the whole sink (batching, version pinning,
-    pointer) lands the single-merge answer. Dim/checkpoint live in a
-    fresh per-run temp dir; the staged CDC files are the cached
-    artifact. 100×: 8 batches over the 15k-key dim in 7.3 s
-    (SCALE_SWEEP_100X_r12)."""
-    import uuid
-
-    from nyc_opendata_etl_spark.streaming.dim_sink import (
-        init_scd2_dim,
-        read_scd2_dim,
-        stream_scd2_upserts,
-    )
-
-    src = _stage_cdc_batches(spark, sf_dir)
-    run = _fresh_run_dir("spark_graft_scd2_run_")
-    dim_path = f"{run}/dim"
-    cur = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("k"),
-        F.col("c_mktsegment").alias("attr"),
-        F.to_date(F.lit("2024-01-01")).alias("effective_from"),
-        F.lit(None).cast("date").alias("effective_to"),
-        F.lit(True).alias("is_current"),
-    )
-    init_scd2_dim(cur, dim_path)
-    stream = (
-        spark.readStream.schema("k long, attr string, eff_date date")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    stream_scd2_upserts(
-        stream, dim_path, ["k"], ["attr"],
-        query_name=f"scd2_{uuid.uuid4().hex[:8]}",
-        checkpoint_location=f"{run}/ckpt",
-    )
-    return read_scd2_dim(spark, dim_path)
-
-
-@_pending(
-    "multimodal_audio_features",
-    # the oracle replays the closed-form interleaved samples
-    # (((seed*31 + i*17) % 65536) - 32768) — Spark instead ENCODES real
-    # RIFF/PCM16 WAVs and DECODES them back with the stdlib wave
-    # reader, so a full value match is an encode∘decode identity proof
-    # (the multimodal_features pattern, audio edition).
-    oracle="""
-    WITH m AS (
-        SELECT doc_id AS media_id,
-               doc_id % 251 AS seed,
-               CAST(doc_id % 2 + 1 AS INT) AS n_channels,
-               doc_id % 50 + 1 AS n
-        FROM documents
-    ),
-    s AS (
-        SELECT media_id,
-               ((seed * 31 + unnest(range(n * n_channels)) * 17) % 65536)
-                   - 32768 AS v
-        FROM m
-    ),
-    st AS (
-        SELECT media_id,
-               CAST(sum(v) AS BIGINT) AS sample_sum,
-               CAST(min(v) AS INT) AS s_min,
-               CAST(max(v) AS INT) AS s_max
-        FROM s GROUP BY media_id
-    )
-    SELECT m.media_id, m.n_channels,
-           CAST(8000 AS INT) AS sample_rate,
-           CAST(m.n AS BIGINT) AS n_samples,
-           CAST(m.n * 1000 // 8000 AS BIGINT) AS duration_ms,
-           st.sample_sum, st.s_min, st.s_max
-    FROM m JOIN st USING (media_id)
-    """,
-)
-def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode through the Arrow/mapInPandas kernel:
-    synthesize_wav_media builds valid RIFF/WAVE PCM16 payloads
-    worker-side (hand-packed header, closed-form samples) and
-    extract_audio_features recovers channel count / rate / sample stats
-    via the stdlib ``wave`` reader — encoder and decoder share no code.
-    Scale shape: scan-stage parallel, no shuffle, blobs never leave the
-    executors; 500k WAVs encode+decode in 11.9 s at the 100× replica
-    (SCALE_SWEEP_100X_r12)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.extract_audio_features(multimodal.synthesize_wav_media(docs))
-
-
-@_pending(
-    "multimodal_video_frames",
-    # frame k of container id replays png_encode_gray's closed form at
-    # seed (id%251 + 13k) % 251; only every 2nd frame is sampled.
-    oracle="""
-    WITH m AS (
-        SELECT doc_id AS media_id,
-               doc_id % 251 AS seed,
-               CAST(doc_id % 8 + 1 AS INT) AS nf,
-               CAST(doc_id % 5 + 1 AS INT) AS w,
-               CAST(doc_id % 4 + 1 AS INT) AS h
-        FROM documents
-    ),
-    fan AS (
-        SELECT media_id, nf, w, h, seed, unnest(range(0, nf, 2)) AS k
-        FROM m
-    ),
-    px AS (
-        SELECT media_id, k,
-               (((seed + 13 * k) % 251) * 7 + unnest(range(w * h)) * 3) % 256
-                   AS v
-        FROM fan
-    ),
-    st AS (
-        SELECT media_id, k,
-               CAST(sum(v) AS BIGINT) AS pixel_sum,
-               CAST(min(v) AS INT) AS px_min,
-               CAST(max(v) AS INT) AS px_max
-        FROM px GROUP BY media_id, k
-    )
-    SELECT f.media_id, f.nf AS n_frames, CAST(f.k AS INT) AS frame_idx,
-           f.w AS width, f.h AS height,
-           st.pixel_sum, st.px_min, st.px_max
-    FROM fan f JOIN st ON st.media_id = f.media_id AND st.k = f.k
-    """,
-)
-def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video-container frame sampling: synthesize_mpng_media packs
-    1–8 valid PNG frames per doc into one binary payload;
-    sample_video_frames parses frame boundaries by chunk-walking to
-    IEND and decodes ONLY every 2nd frame — inflate work scales with
-    sampled frames, not container bytes (the keyframe-seek shape).
-    One row per sampled frame with decoded pixel statistics; the
-    closed-form oracle makes the value match an encode∘split∘decode
-    identity proof. 100×: 500k containers → 1.25M frame rows in
-    33.9 s (SCALE_SWEEP_100X_r12)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.sample_video_frames(
-        multimodal.synthesize_mpng_media(docs), every_n=2
-    )

@@ -89,22 +89,18 @@ def stage_all(spark, sf_dir: str) -> list[tuple[str, float]]:
         _stage_text_index_compacted,
         _stage_text_index_incremental,
     )
-    from nyc_opendata_etl_spark.queries.parity import _stage_documents
-    from nyc_opendata_etl_spark.queries.relational import _stage_copurchase_edges
-
-    from nyc_opendata_etl_spark.queries.pending_r13 import (
+    from nyc_opendata_etl_spark.queries.maintenance import (
         _stage_cdc_batches,
+        _stage_cluster_stream,
         _stage_docs_idordered,
-        _stage_fingerprint_index_rc,
-    )
-    from nyc_opendata_etl_spark.queries.pending_r15 import (
         _stage_dup_cluster_index_incr,
+        _stage_fingerprint_index_rc,
+        _stage_ivfpq_index_deleted,
+        _stage_ivfpq_index_retrained,
         _stage_ivfpq_stream,
     )
-    from nyc_opendata_etl_spark.queries.pending_r16 import (
-        _stage_cluster_stream,
-        _stage_ivfpq_index_deleted,
-    )
+    from nyc_opendata_etl_spark.queries.parity import _stage_documents
+    from nyc_opendata_etl_spark.queries.relational import _stage_copurchase_edges
 
     builders = [
         ("text_index (BM25 postings)", lambda: _stage_text_index(spark, sf_dir)),
@@ -133,23 +129,27 @@ def stage_all(spark, sf_dir: str) -> list[tuple[str, float]]:
             lambda: _stage_ivfpq_stream(spark, sf_dir),
         ),
         (
-            "dup_cluster_index_stream (streaming cluster map; pending r16)",
+            "dup_cluster_index_stream (streaming cluster map)",
             lambda: _stage_cluster_stream(spark, sf_dir),
         ),
         (
-            "ivfpq_index_deleted (ANN takedown lifecycle; pending r16)",
+            "ivfpq_index_deleted (ANN takedown lifecycle)",
             lambda: _stage_ivfpq_index_deleted(spark, sf_dir),
         ),
         (
-            "fingerprint_index_rc (deletion-capable dedup; pending r13)",
+            "ivfpq_index_retrained (ANN quantizer re-train lifecycle)",
+            lambda: _stage_ivfpq_index_retrained(spark, sf_dir),
+        ),
+        (
+            "fingerprint_index_rc (deletion-capable dedup)",
             lambda: _stage_fingerprint_index_rc(spark, sf_dir),
         ),
         (
-            "docs_idordered (ingest stream source; pending r13)",
+            "docs_idordered (ingest stream source)",
             lambda: _stage_docs_idordered(spark, sf_dir),
         ),
         (
-            "cdc_customer_batches (SCD2 stream source; pending r13)",
+            "cdc_customer_batches (SCD2 stream source)",
             lambda: _stage_cdc_batches(spark, sf_dir),
         ),
         (

@@ -27,7 +27,7 @@ an index:
 Scores from :func:`bm25_topk_delta` are bit-identical to
 ``bm25_topk_indexed`` over a from-scratch ``build_text_index`` of the
 same corpus (same exact integers, same 9-dp DECIMAL(28,12) folds) —
-pinned in tests and by the pending-r14 differential registration.
+pinned in tests and by the stream_index_ingest differential registration.
 
 Batch doc-id disjointness is the stream's contract (an ingest assigns
 fresh ids); as everywhere in the streaming layer, exactly-once rides on

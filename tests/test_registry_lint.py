@@ -26,10 +26,13 @@ from __future__ import annotations
 import os
 
 import duckdb
+import pytest
 
 from nyc_opendata_etl_spark.queries import _ordered
+from tools.check_correctness import compare, oracle_connection
 
 SF_DIR = os.environ.get("SPARK_GRAFT_LINT_SF_DIR", "/root/testdata/sf0.001")
+COMPARE_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -102,21 +105,16 @@ def test_oracle_outputs_never_emit_negative_zero():
     np.round keep it, and the repr-based value compare distinguishes
     them — so an oracle cell of -0.0 is a latent hash mismatch. The
     registered surface is deterministically safe on the fixed testdata
-    (this test IS that proof, re-run every suite); pending kernels and
+    (this test IS that proof, re-run every suite); rounding kernels and
     oracles normalize with `+ 0` / `sims += 0.0`. A failure here means
     a new oracle (or new testdata) crossed the law — normalize its
-    rounding the pending_r17 way, don't relax the pin."""
+    rounding the same way, don't relax the pin."""
     import math
-
-    from nyc_opendata_etl_spark.queries.pending_r17 import PENDING as P17
-    from nyc_opendata_etl_spark.queries.pending_r18 import PENDING as P18
 
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     oracles = {n: qd.oracle for n, qd in _ordered().items() if qd.oracle}
-    oracles.update({n: o for n, (_, o) in P17.items()})
-    oracles.update({n: o for n, (_, o) in P18.items()})
     offenders = []
     for name, sql in oracles.items():
         for row in con.execute(sql).fetchall():
@@ -127,3 +125,47 @@ def test_oracle_outputs_never_emit_negative_zero():
                 offenders.append(name)
                 break
     assert not offenders, f"oracles emitting -0.0 cells: {offenders}"
+
+
+# Staged-artifact and streaming queries: their result depends on write-time
+# state (drains, index lifecycles), so the gate's compare runs in-suite too.
+_COMPARED = (
+    "stream_dedup_ingest",
+    "stream_scd2_upserts",
+    "stream_index_ingest",
+    "stream_ivfpq_ingest",
+    "stream_cluster_ingest",
+    "dedup_incremental_rc",
+    "dedup_clusters_incremental",
+    "similarity_after_delete",
+    "multimodal_audio_features",
+    "multimodal_video_frames",
+    "similarity_ivfpq_retrain",
+    "similarity_knn_join",
+    "corpus_knn_label",
+    "corpus_shard_epoch",
+    "corpus_decontaminate_semantic",
+)
+
+
+@pytest.mark.parametrize("name", _COMPARED)
+def test_query_matches_its_oracle(spark, name):
+    """The exact compare tools/check_correctness.py gates on — row
+    count, column names, canonicalized values — against the query's
+    DuckDB oracle at sf0.01."""
+    qd = _ordered()[name]
+    sdf = qd.fn(spark, COMPARE_SF_DIR)
+    res = oracle_connection(COMPARE_SF_DIR).execute(qd.oracle)
+    duck_cols = [d[0] for d in res.description]
+    problems = compare(sdf.columns, sdf.collect(), duck_cols, res.fetchall())
+    assert not problems, problems
+
+
+def test_stream_source_alias_matches_maintenance():
+    """The benchmark's stream_ingest workload imports its two stream
+    sources from queries.pending_r13; the alias must stay the same
+    objects as the builders in queries.maintenance."""
+    from nyc_opendata_etl_spark.queries import maintenance, pending_r13
+
+    assert pending_r13._stage_docs_idordered is maintenance._stage_docs_idordered
+    assert pending_r13._stage_cdc_batches is maintenance._stage_cdc_batches

@@ -527,71 +527,6 @@ def test_scd2_sink_streaming_end_to_end_and_prune(spark, tmp_path):
     assert _rows(dim_sink.read_scd2_dim(spark, path)) == want
 
 
-# ── staged r13 registrations: full differential compare ─────────────
-
-
-def _canon_cell(v):
-    import math
-
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    return str(v)
-
-
-def _canon_rows(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_canon_cell(r[i]) for i in idx) for r in rows]
-    out.sort(key=lambda t: tuple((x is None, x or "") for x in t))
-    return out
-
-
-def test_pending_r13_pairs_pass_the_driver_compare(spark):
-    """The three staged round-13 registrations (queries/pending_r13.py)
-    must already pass the EXACT compare the driver's gate runs — row
-    count, column names, canonicalized values — against their DuckDB
-    oracles at sf0.01, so round 13's registration is a flip, not a
-    leap."""
-    import duckdb
-
-    from nyc_opendata_etl_spark.queries.pending_r13 import PENDING
-
-    assert set(PENDING) == {
-        "dedup_incremental_rc",
-        "multimodal_audio_features",
-        "multimodal_video_frames",
-        "stream_dedup_ingest",
-        "stream_scd2_upserts",
-    }
-    # r13 flip: every pair is now LIVE in the registry with the same
-    # fn and oracle the staging manifest carries
-    from nyc_opendata_etl_spark.queries import REGISTRY, _load_all
-
-    _load_all()
-    for name, (fn, oracle) in PENDING.items():
-        assert REGISTRY[name].fn is fn, name
-        assert REGISTRY[name].oracle == oracle, name
-    sf = "/root/testdata/sf0.01"
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-    for name, (fn, oracle) in PENDING.items():
-        sdf = fn(spark, sf)
-        spark_rows = [tuple(r) for r in sdf.collect()]
-        res = con.execute(oracle)
-        duck_cols = [d[0] for d in res.description]
-        duck_rows = res.fetchall()
-        assert len(spark_rows) == len(duck_rows), name
-        assert sorted(sdf.columns) == sorted(duck_cols), name
-        assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-            duck_cols, duck_rows
-        ), name
-
-
 # ── real video-container frame sampling (MPNG) ──────────────────────
 
 

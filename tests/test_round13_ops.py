@@ -284,42 +284,3 @@ def test_stream_index_ingest_end_to_end(spark, tmp_path):
         )
     )
     assert got == want and len(got) == 3
-
-
-def test_pending_r14_pair_passes_the_driver_compare(spark):
-    """The round-14 registration (queries/pending_r14.py, staged r13 →
-    flipped LIVE r14) must pass the EXACT compare the driver's gate
-    runs at sf0.01 — the pending_r13 playbook: a full round under this
-    differential gate before registration, so the flip is a rename,
-    not a leap. Also pins that the manifest and the live registry
-    agree post-flip."""
-    import duckdb
-
-    from nyc_opendata_etl_spark.queries import REGISTRY, _load_all
-    from nyc_opendata_etl_spark.queries.pending_r14 import PENDING
-
-    assert set(PENDING) == {"stream_index_ingest"}
-    _load_all()
-    for name, (fn, oracle) in PENDING.items():
-        assert REGISTRY[name].fn is fn, name
-        assert REGISTRY[name].oracle == oracle, name
-    sf = "/root/testdata/sf0.01"
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-    from tests.test_round12b_ops import _canon_rows
-
-    for name, (fn, oracle) in PENDING.items():
-        sdf = fn(spark, sf)
-        spark_rows = [tuple(r) for r in sdf.collect()]
-        res = con.execute(oracle)
-        duck_cols = [d[0] for d in res.description]
-        duck_rows = res.fetchall()
-        assert len(spark_rows) == len(duck_rows), name
-        assert sorted(sdf.columns) == sorted(duck_cols), name
-        assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-            duck_cols, duck_rows
-        ), name

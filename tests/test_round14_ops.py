@@ -57,7 +57,7 @@ def test_fresh_run_dir_reaps_dead_owners_only(tmp_path, monkeypatch):
     survive below the 24 h fallback cutoff."""
     import tempfile
 
-    from nyc_opendata_etl_spark.queries.pending_r13 import _fresh_run_dir
+    from nyc_opendata_etl_spark.queries.maintenance import _fresh_run_dir
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     prefix = "graft_r14_reap_test_"
@@ -418,44 +418,6 @@ def test_dup_cluster_index_update_replay_idempotent(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="must exceed the build batch"):
         ci.update_dup_cluster_index(spark, batch, path, batch_id=ci.BUILD_BATCH)
-
-
-def test_pending_r15_pair_passes_the_driver_compare(spark):
-    """The round-15 registration (queries/pending_r15.py, LIVE as of
-    r15) must pass the EXACT compare the driver's gate runs at sf0.01
-    — the pending playbook's in-suite differential gate, kept after
-    the flip. Also pins that the pair IS registered with the same fn
-    and oracle (the r13→r14 flip precedent)."""
-    import duckdb
-
-    from nyc_opendata_etl_spark.queries import REGISTRY, _load_all
-    from nyc_opendata_etl_spark.queries.pending_r15 import PENDING
-
-    assert set(PENDING) == {"dedup_clusters_incremental", "stream_ivfpq_ingest"}
-    _load_all()
-    for name, (fn, oracle) in PENDING.items():
-        assert REGISTRY[name].fn is fn, name
-        assert REGISTRY[name].oracle == oracle, name
-    sf = "/root/testdata/sf0.01"
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-    from tests.test_round12b_ops import _canon_rows
-
-    for name, (fn, oracle) in PENDING.items():
-        sdf = fn(spark, sf)
-        spark_rows = [tuple(r) for r in sdf.collect()]
-        res = con.execute(oracle)
-        duck_cols = [d[0] for d in res.description]
-        duck_rows = res.fetchall()
-        assert len(spark_rows) == len(duck_rows), name
-        assert sorted(sdf.columns) == sorted(duck_cols), name
-        assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-            duck_cols, duck_rows
-        ), name
 
 
 def test_asof_merge_null_time_contract(spark):

@@ -1,7 +1,5 @@
 """Round-15 pins: the streaming cluster-map maintenance staged for
-r16, the compaction lifecycle of the incremental cluster index, and
-the pending-query driver compare (the pending playbook's in-suite
-gate, fourth application)."""
+r16 and the compaction lifecycle of the incremental cluster index."""
 
 from __future__ import annotations
 
@@ -167,44 +165,6 @@ def test_compact_dup_cluster_index_is_read_equivalent(spark, tmp_path):
     assert sorted(map(tuple, ci.read_dup_clusters(spark, a).collect())) == sorted(
         map(tuple, ci.read_dup_clusters(spark, b).collect())
     )
-
-
-def test_pending_r16_passes_the_driver_compare(spark):
-    """The round-16 registration (queries/pending_r16.py, LIVE since
-    the r16 flip) must pass the EXACT compare the driver's gate runs
-    at sf0.01 — the pending playbook's in-suite differential gate,
-    kept after the flip. Also pins that the pair IS registered with
-    the same fn and oracle (the r13→r14→r15 flip precedent)."""
-    import duckdb
-
-    from nyc_opendata_etl_spark.queries import REGISTRY, _load_all
-    from nyc_opendata_etl_spark.queries.pending_r16 import PENDING
-
-    assert set(PENDING) == {"stream_cluster_ingest", "similarity_after_delete"}
-    _load_all()
-    for name, (fn, oracle) in PENDING.items():
-        assert REGISTRY[name].fn is fn, name
-        assert REGISTRY[name].oracle == oracle, name
-    sf = "/root/testdata/sf0.01"
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-    from tests.test_round12b_ops import _canon_rows
-
-    for name, (fn, oracle) in PENDING.items():
-        sdf = fn(spark, sf)
-        spark_rows = [tuple(r) for r in sdf.collect()]
-        res = con.execute(oracle)
-        duck_cols = [d[0] for d in res.description]
-        duck_rows = res.fetchall()
-        assert len(spark_rows) == len(duck_rows), name
-        assert sorted(sdf.columns) == sorted(duck_cols), name
-        assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-            duck_cols, duck_rows
-        ), name
 
 
 def test_ivfpq_takedown_removes_codes_and_keeps_quantizers(spark, tmp_path):

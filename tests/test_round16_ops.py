@@ -100,7 +100,7 @@ def test_stale_cluster_stream_restage_starts_empty(spark):
     the done-marker, re-stage, and require the poison gone and the
     clusters identical to the pre-poison map."""
     from nyc_opendata_etl_spark.operators import cluster_index as ci
-    from nyc_opendata_etl_spark.queries.pending_r16 import (
+    from nyc_opendata_etl_spark.queries.maintenance import (
         _stage_cluster_stream,
     )
 
@@ -182,47 +182,6 @@ def test_ivfpq_build_write_parallelizes_past_one_task_per_cell(
     assert max(per_cell) > 1  # some cell's rows came from several tasks
 
 
-def test_pending_r17_passes_the_driver_compare(spark):
-    """The staged round-17 registrations (queries/pending_r17.py) must
-    already pass the EXACT compare the driver's gate runs at sf0.01 —
-    the pending playbook, fifth application: the r17 flip must be a
-    rename, not a leap. Also pins that they are NOT yet registered
-    (the r16 window's slot arithmetic is a promise)."""
-    import duckdb
-
-    from nyc_opendata_etl_spark.queries import REGISTRY, _load_all
-    from nyc_opendata_etl_spark.queries.pending_r17 import PENDING
-
-    assert set(PENDING) == {
-        "similarity_ivfpq_retrain",
-        "corpus_shard_epoch",
-        "similarity_knn_join",
-        "corpus_decontaminate_semantic",
-    }
-    _load_all()
-    assert not set(PENDING) & set(REGISTRY)
-    sf = "/root/testdata/sf0.01"
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-    from tests.test_round12b_ops import _canon_rows
-
-    for name, (fn, oracle) in PENDING.items():
-        sdf = fn(spark, sf)
-        spark_rows = [tuple(r) for r in sdf.collect()]
-        res = con.execute(oracle)
-        duck_cols = [d[0] for d in res.description]
-        duck_rows = res.fetchall()
-        assert len(spark_rows) == len(duck_rows), name
-        assert sorted(sdf.columns) == sorted(duck_cols), name
-        assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-            duck_cols, duck_rows
-        ), name
-
-
 def test_ivfpq_retrain_heals_drift_and_swaps_atomically(spark, tmp_path):
     """Mechanism pins for retrain_ivfpq_index (the oracle match proves
     output parity; this pins HOW): (a) drift is real — the pre-retrain
@@ -293,7 +252,7 @@ def test_shard_epoch_is_a_seeded_permutation(spark):
 
 def test_knn_join_is_cell_pruned_and_self_free(spark):
     """Mechanism pins for similarity.knn_join (the oracle match in
-    test_pending_r17_passes_the_driver_compare proves output parity;
+    test_registry_lint::test_query_matches_its_oracle proves parity;
     this pins HOW): (a) the plan contains NO CartesianProduct — the
     only cross joins are against the broadcast C-row centroid relation,
     so candidate volume is cell-pruned, never Q×N; (b) a query drawn
@@ -362,41 +321,6 @@ def test_decontaminate_semantic_broadcasts_eval_and_breaks_ties_low(spark):
     assert got[3] == (3, 0.8, 30)
     # train 4 is zero-norm: no row, despite the zero-norm eval 40
     assert 4 not in got and len(got) == 3
-
-
-def test_pending_r18_passes_the_driver_compare(spark):
-    """The staged round-18 registrations (queries/pending_r18.py —
-    built in r16 after pending_r17 filled round 17's flip budget)
-    must already pass the EXACT driver compare at sf0.01, and must
-    not be registered."""
-    import duckdb
-
-    from nyc_opendata_etl_spark.queries import REGISTRY, _load_all
-    from nyc_opendata_etl_spark.queries.pending_r18 import PENDING
-
-    assert set(PENDING) == {"corpus_knn_label"}
-    _load_all()
-    assert not set(PENDING) & set(REGISTRY)
-    sf = "/root/testdata/sf0.01"
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-    from tests.test_round12b_ops import _canon_rows
-
-    for name, (fn, oracle) in PENDING.items():
-        sdf = fn(spark, sf)
-        spark_rows = [tuple(r) for r in sdf.collect()]
-        res = con.execute(oracle)
-        duck_cols = [d[0] for d in res.description]
-        duck_rows = res.fetchall()
-        assert len(spark_rows) == len(duck_rows), name
-        assert sorted(sdf.columns) == sorted(duck_cols), name
-        assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-            duck_cols, duck_rows
-        ), name
 
 
 def test_knn_label_votes_labeled_neighbors_with_low_tie(spark):

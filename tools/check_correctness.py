@@ -39,11 +39,8 @@ def _canon_rows(cols, rows):
     return out
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    spark = get_spark("check-correctness")
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per parquet table in ``sf_dir``."""
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem events "
@@ -52,6 +49,39 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
+    return con
+
+
+def compare(spark_cols, spark_rows, duck_cols, duck_rows) -> list[str]:
+    """The gate's compare: row count, column names, then canonicalized
+    values, order-insensitive. Returns the problems found (empty = PASS)."""
+    problems = []
+    if len(spark_rows) != len(duck_rows):
+        problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
+    if sorted(spark_cols) != sorted(duck_cols):
+        problems.append(f"cols spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
+    if not problems:
+        a = _canon_rows(spark_cols, [tuple(r) for r in spark_rows])
+        b = _canon_rows(duck_cols, duck_rows)
+        if a != b:
+            diffs = [(x, y) for x, y in zip(a, b) if x != y]
+            problems.append(
+                f"values differ ({len(diffs)} rows); first: "
+                f"{diffs[0] if diffs else '(row set mismatch)'}"
+            )
+            only_a = [r for r in a if r not in set(b)][:2]
+            only_b = [r for r in b if r not in set(a)][:2]
+            if only_a or only_b:
+                problems.append(f"spark-only={only_a} duck-only={only_b}")
+    return problems
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+
+    spark = get_spark("check-correctness")
+    con = oracle_connection(sf_dir)
 
     qs = queries()
     oracles = oracle_sql()
@@ -85,24 +115,7 @@ def main() -> int:
             print(f"FAIL {name}: duckdb error: {e}")
             failures.append(name)
             continue
-        problems = []
-        if len(spark_rows) != len(duck_rows):
-            problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
-        if sorted(spark_cols) != sorted(duck_cols):
-            problems.append(f"cols spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
-        if not problems:
-            a = _canon_rows(spark_cols, [tuple(r) for r in spark_rows])
-            b = _canon_rows(duck_cols, duck_rows)
-            if a != b:
-                diffs = [(x, y) for x, y in zip(a, b) if x != y]
-                problems.append(
-                    f"values differ ({len(diffs)} rows); first: "
-                    f"{diffs[0] if diffs else '(row set mismatch)'}"
-                )
-                only_a = [r for r in a if r not in set(b)][:2]
-                only_b = [r for r in b if r not in set(a)][:2]
-                if only_a or only_b:
-                    problems.append(f"spark-only={only_a} duck-only={only_b}")
+        problems = compare(spark_cols, spark_rows, duck_cols, duck_rows)
         if problems:
             print(f"FAIL {name}: " + "; ".join(problems))
             failures.append(name)
