@@ -9,8 +9,10 @@ single giant JSON line holding 140 per-query timings gets its head
 truncated and never parses. Therefore:
 
 - each query's timing prints as its own short JSON line as it finishes
-  (``{"query": ..., "sec": ...}``) — individually parseable, and the
-  most recent ones survive any tail window;
+  (``{"query": ..., "sec": ..., "construct_s": ...}``; ``sec`` is
+  construction plus execution, see ``tools/harness.measure``) —
+  individually parseable, and the most recent ones survive any tail
+  window;
 - the full payload (totals + every timing) is written to
   ``bench_queries.json`` next to this file;
 - the LAST stdout line is a SHORT summary
@@ -33,7 +35,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from nyc_opendata_etl_spark.queries import queries  # noqa: E402
-from nyc_opendata_etl_spark.session import get_spark  # noqa: E402
+from tools.harness import measure, session, warmup  # noqa: E402
 
 # Per-query host-steal threshold (percent of CPU ticks stolen by the
 # hypervisor during the timed window). The box has documented episodic
@@ -89,30 +91,8 @@ def main() -> None:
     except ValueError:
         sf_val = sf
 
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    # absorb one-time JVM/codegen bootstrap so the first query's number
-    # measures the query, not session warmup (session startup itself is
-    # already outside the timed region). Three distinct paths bootstrap
-    # lazily and would otherwise be billed to whichever query hits them
-    # first: the scheduler/codegen (range-sum), the vectorized parquet
-    # reader (scan), and the Python worker pool + Arrow serdes
-    # (mapInPandas).
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    try:
-        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).limit(
-            10_000
-        ).write.format("noop").mode("overwrite").save()
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).limit(
-            1_000
-        ).write.format("noop").mode("overwrite").save()
-        import pandas as pd  # noqa: F401
-
-        spark.range(1_000).mapInPandas(
-            lambda it: it, "id long"
-        ).write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass  # warmup must never fail the bench
+    spark = session("bench")
+    warmup(spark, sf_dir)
 
     # Prebuild every write-time staged artifact BEFORE the timed suite
     # and report the build cost as its own field: a query's number must
@@ -154,6 +134,7 @@ def main() -> None:
     # Alphabetical order pins each query's warm-up context across rounds.
     qs = dict(sorted(queries().items()))
     timings: dict[str, float] = {}
+    construct_s: dict[str, float] = {}
     steal_pcts: dict[str, float] = {}
     iowait_pcts: dict[str, float] = {}
     steal_reruns: dict[str, dict[str, float]] = {}
@@ -165,39 +146,30 @@ def main() -> None:
         # the first attempt is preserved in steal_reruns for the record;
         # rows whose FINAL measurement is still stormy are flagged and
         # bench_diff excludes them from regression classification.
-        attempts = 0
-        first_good: tuple[float, tuple[float, float]] | None = None
-        while True:
-            attempts += 1
+        first_good = None
+        for attempt in (1, 2):
             c0 = _cpu_ticks()
-            t0 = time.time()
             try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                sec = round(time.time() - t0, 3)
+                m = measure(spark, fn, sf_dir)
             except Exception as e:  # noqa: BLE001
                 print(f"bench error in {name}: {e}", file=sys.stderr)
-                sec = -1.0
+                m = {"sec": -1.0}
             pcts = _tick_pcts(c0, _cpu_ticks())
-            steal = pcts[0] if pcts is not None else None
-            if (
-                sec > 0
-                and steal is not None
-                and steal > STEAL_FLAG_PCT
-                and attempts == 1
-            ):
-                steal_reruns[name] = {"sec_first": sec, "steal_pct_first": steal}
-                first_good = (sec, pcts)
-                continue
-            break
-        if sec < 0 and first_good is not None:
+            stormy = pcts is not None and pcts[0] > STEAL_FLAG_PCT
+            if attempt == 2 or m["sec"] <= 0 or not stormy:
+                break
+            steal_reruns[name] = {"sec_first": m["sec"], "steal_pct_first": pcts[0]}
+            first_good = (m, pcts)
+        if m["sec"] < 0 and first_good is not None:
             # The storm-triggered re-run died (transient executor
             # failure): the query itself DID succeed on attempt 1 —
             # keep that valid-but-stormy measurement (it stays
             # steal-flagged) instead of reporting a phantom error.
-            sec, pcts = first_good
-            steal = pcts[0]
-        timings[name] = sec
-        row = {"query": name, "sec": sec}
+            m, pcts = first_good
+        timings[name] = m["sec"]
+        row = {"query": name, "sec": m["sec"]}
+        if "construct_s" in m:
+            construct_s[name] = row["construct_s"] = m["construct_s"]
         if pcts is not None:
             steal_pcts[name] = pcts[0]
             iowait_pcts[name] = pcts[1]
@@ -214,6 +186,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "construct_s": construct_s,
         "sf": sf_val,
         "staging_sec": staging_sec,
         "staging_failed": staging_failed,

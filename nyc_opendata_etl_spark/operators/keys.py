@@ -44,7 +44,6 @@ def assign_keys(
     dim_df: DataFrame,
     dim_fields: list[str],
     key_name: str,
-    broadcast_dim: bool = True,
     known_nonempty: bool | None = None,
 ) -> DataFrame:
     """Stamp ``fact_df`` with the surrogate ``key_name`` of the dimension
@@ -74,9 +73,7 @@ def assign_keys(
         surrogate_key(*dim_fields).alias(key_name),
         _string_join_key(dim_fields).alias(_JOIN_KEY),
     )
-    if broadcast_dim:
-        dim_keyed = F.broadcast(dim_keyed)
 
     fact_keyed = fact_df.withColumn(_JOIN_KEY, _string_join_key(dim_fields))
-    joined = fact_keyed.join(dim_keyed, on=_JOIN_KEY, how="left")
+    joined = fact_keyed.join(F.broadcast(dim_keyed), on=_JOIN_KEY, how="left")
     return joined.drop(_JOIN_KEY, *dim_fields)

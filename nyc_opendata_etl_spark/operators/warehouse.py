@@ -299,18 +299,15 @@ def clean_311(raw: DataFrame) -> DataFrame:
     return project_target(df, CLEAN_311_TARGET)
 
 
-def clean_parking(raw: DataFrame, *, join_fields_normalized: bool = False) -> DataFrame:
+def clean_parking(raw: DataFrame) -> DataFrame:
     """load_parking.py:70-139: header-normalize, parse issue_date →
-    date_key, AM/PM violation_time → time_key, normalize + dropna the
-    5 location cols, inline location_key hash, coerce violation_code,
-    re-add missing description.
+    date_key, AM/PM violation_time → time_key, dropna the 5 location
+    cols, inline location_key hash, re-add missing description.
 
-    ``join_fields_normalized=True`` (the build_star path) promises the
-    caller already ran :func:`normalize_parking_join_fields`, which
-    normalizes the location columns and coerces violation_code;
-    re-running both would be a wasted regex/cast pass over every row
-    (normalize is idempotent, so this is purely an execution-cost
-    question, not a semantics one)."""
+    The caller has already run :func:`normalize_parking_join_fields`
+    (build_star does, before any dim build), which normalizes the
+    location columns and coerces violation_code; re-running both here
+    would be a wasted regex/cast pass over every row."""
     df = normalize_headers(raw)
     if "violation_code" not in df.columns and "violation" in df.columns:
         df = df.withColumnRenamed("violation", "violation_code")
@@ -328,15 +325,12 @@ def clean_parking(raw: DataFrame, *, join_fields_normalized: bool = False) -> Da
             "time_key": parse_ampm_time_key("violation_time"),
         }
     )
-    if not join_fields_normalized:
-        df = normalize_strings(df, PARKING_LOCATION_NK)
-    else:
-        # columns ensure_columns just added as NULL were never seen by
-        # normalize_parking_join_fields — they still need the NULL→""
-        # mapping or na.drop below would wrongly drop every row
-        df = normalize_strings(
-            df, [c for c in PARKING_LOCATION_NK if c not in loc_present_in_input]
-        )
+    # columns ensure_columns just added as NULL were never seen by
+    # normalize_parking_join_fields — they still need the NULL→""
+    # mapping or na.drop below would wrongly drop every row
+    df = normalize_strings(
+        df, [c for c in PARKING_LOCATION_NK if c not in loc_present_in_input]
+    )
     df = df.na.drop(subset=[c for c in PARKING_LOCATION_NK if c in df.columns])
     df = df.withColumn("location_key", surrogate_key(*PARKING_LOCATION_NK))
     df = ensure_columns(df, {"violation_code": "string"})
@@ -344,9 +338,7 @@ def clean_parking(raw: DataFrame, *, join_fields_normalized: bool = False) -> Da
     # have missed a column that only exists post-rename here)
     from pyspark.sql.types import LongType
 
-    if not join_fields_normalized or not isinstance(
-        df.schema["violation_code"].dataType, LongType
-    ):
+    if not isinstance(df.schema["violation_code"].dataType, LongType):
         df = df.withColumn("violation_code", numeric_coerce("violation_code", "long"))
     df = ensure_columns(df, {"violation_description": "string"})
     return df
@@ -379,12 +371,10 @@ _CACHED_INPUTS: list[DataFrame] = []
 # 5a): caching the raw facts is a win while they fit the storage tier
 # (each feeds 3-4 consumers) and pure eviction churn when they don't —
 # at 100 TB the raws are terabytes and a 128 MiB-block LRU would
-# thrash. Default threshold: 4 GiB of ON-DISK input (compressed
-# parquet; in-memory is ~3-5x that — still comfortably inside one
-# executor tier's storage fraction). Override per session with
-# spark.graft.buildStar.cacheMaxInputBytes.
-_RAW_CACHE_CONF = "spark.graft.buildStar.cacheMaxInputBytes"
-_RAW_CACHE_DEFAULT_BYTES = 4 << 30
+# thrash. Threshold: 4 GiB of ON-DISK input (compressed parquet;
+# in-memory is ~3-5x that — still comfortably inside one executor
+# tier's storage fraction).
+_RAW_CACHE_MAX_INPUT_BYTES = 4 << 30
 
 
 def _input_size_bytes(df: DataFrame) -> int | None:
@@ -415,18 +405,15 @@ def _input_size_bytes(df: DataFrame) -> int | None:
     return total
 
 
-def _cache_if_bounded(spark: SparkSession, df: DataFrame) -> bool:
+def _cache_if_bounded(df: DataFrame) -> bool:
     """Cache ``df`` (and track it for the per-build eviction sweep)
-    only when its input-size estimate fits the configured budget; skip
+    only when its input-size estimate fits the budget; skip
     — leaving the scan to re-run per consumer, which at that scale is
     cheaper than storage-tier churn — when it doesn't, or when the
     size is unknowable (remote store). Returns whether it cached, so
     the caller can gate the cache pre-fill job the same way."""
-    limit = int(
-        spark.conf.get(_RAW_CACHE_CONF, None) or _RAW_CACHE_DEFAULT_BYTES
-    )
     est = _input_size_bytes(df)
-    if est is not None and est <= limit:
+    if est is not None and est <= _RAW_CACHE_MAX_INPUT_BYTES:
         df.cache()
         _CACHED_INPUTS.append(df)
         return True
@@ -445,7 +432,7 @@ def build_star(
     ``_cache_if_bounded``): each feeds 3-4 consumers (SURVEY §3 E1
     step 4): 311 → agency/complaint/location dims + fact; parking →
     agency/vehicle/violation/parking-location dims + fact. Above the
-    configured input-size budget (or on an unstat-able remote store)
+    input-size budget (or on an unstat-able remote store)
     the cache is skipped: re-running a columnar scan per consumer is
     cheaper at that scale than LRU churn in the storage tier.
 
@@ -467,7 +454,7 @@ def build_star(
     raws_cached = [
         df
         for df in (raw_311, raw_parking)
-        if _cache_if_bounded(spark, df)
+        if _cache_if_bounded(df)
     ]
 
     agency_src = raw_311.select(
@@ -600,7 +587,7 @@ def build_star(
     # ── parking fact ─────────────────────────────────────────────────
     fact_parking = None
     if need_parking:
-        cleaned_p = clean_parking(raw_parking, join_fields_normalized=True)
+        cleaned_p = clean_parking(raw_parking)
         cleaned_p = cleaned_p.withColumnsRenamed(
             {"plate_id": "plate", "registration_state": "state", "plate_type": "license_type"}
         )

@@ -531,10 +531,10 @@ def test_packed_bloom_probe_is_scan_local(spark):
 # ── bounded-global-window pin (round 12, VERDICT r11 item 7) ────────
 # A partition-less Window is a single-task sort: every site must prove
 # its input bounded or be a documented exact anchor with a registered
-# approx twin. tools/global_window_audit.py sweeps the whole registry;
-# these are ALL its findings, pinned. A new global window anywhere
-# must be added here with its justification — the audit class is the
-# mechanical half, the comment is the human half.
+# approx twin. tools/plan_census.py sweeps the whole registry; these
+# are ALL the queries in its global_windows summary, pinned. A new
+# global window anywhere must be added here with its justification —
+# the audit class is the mechanical half, the comment is the human half.
 _GLOBAL_WINDOW_SITES = {
     # priority sampling: window over an orderBy().limit() candidate set
     "corpus_sample_priority": ["limit"],
@@ -570,9 +570,9 @@ def test_global_windows_are_bounded(spark):
 # of a broadcast stats/bounds relation, theta band join, bloom
 # candidate math…). Each must plan as BroadcastNestedLoopJoin — never
 # CartesianProductExec, the unbounded all-pairs node. Registry-wide
-# ground truth: tools/cartesian_audit.py (0 flagged across 209 plans,
-# late r12); this pin keeps the deliberate-cross-join set honest in
-# the suite, the tool+pin shape of the global-window audit.
+# ground truth: the cartesian list of tools/plan_census.py (empty);
+# this pin keeps the deliberate-cross-join set honest in the suite,
+# the tool+pin shape of the global-window audit.
 _CROSS_JOIN_QUERIES = [
     "join_range",
     "market_basket_pairs_relative",

@@ -304,10 +304,10 @@ def test_build_star_facts_scoping_preserves_values(spark):
     assert fb.exceptAll(fa).count() == 0
 
 
-def test_raw_cache_gate_branches_at_size_threshold(spark, tmp_path):
+def test_raw_cache_gate_branches_at_size_threshold(spark, tmp_path, monkeypatch):
     """r16 (VERDICT r15 item 4): build_star's raw-input cache is
     size-gated on a metadata-only input estimate — a raw whose files
-    exceed spark.graft.buildStar.cacheMaxInputBytes is NOT cached
+    exceed _RAW_CACHE_MAX_INPUT_BYTES is NOT cached
     (at 100 TB the raws don't fit the storage tier; the cache would be
     eviction churn), while the same raw under the default budget IS.
     Values are cache-invariant; this pins the gate actually branching
@@ -326,25 +326,18 @@ def test_raw_cache_gate_branches_at_size_threshold(spark, tmp_path):
         out["fact_311_complaints"].count()  # force execution
         return out
 
-    conf = W._RAW_CACHE_CONF
-    try:
-        # budget 0: even a KB-sized raw is over → gate must skip
-        spark.conf.set(conf, "0")
-        over = spark.read.parquet(src)
-        assert W._input_size_bytes(over) > 0
-        build(over)
-        assert not over.storageLevel.useMemory
+    # budget 0: even a KB-sized raw is over → gate must skip
+    monkeypatch.setattr(W, "_RAW_CACHE_MAX_INPUT_BYTES", 0)
+    over = spark.read.parquet(src)
+    assert W._input_size_bytes(over) > 0
+    build(over)
+    assert not over.storageLevel.useMemory
 
-        # default budget: same raw fits → gate must cache
-        spark.conf.unset(conf)
-        under = spark.read.parquet(src)
-        build(under)
-        assert under.storageLevel.useMemory
-    finally:
-        try:
-            spark.conf.unset(conf)
-        except Exception:
-            pass
+    # default budget: same raw fits → gate must cache
+    monkeypatch.undo()
+    under = spark.read.parquet(src)
+    build(under)
+    assert under.storageLevel.useMemory
 
     # estimate semantics: in-memory sources are 0 (bounded by
     # construction), remote schemes are None (unknown → never cached)

@@ -19,7 +19,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import duckdb  # noqa: E402
 
 from nyc_opendata_etl_spark.queries import oracle_sql, queries  # noqa: E402
-from nyc_opendata_etl_spark.session import get_spark  # noqa: E402
+from tools.harness import session  # noqa: E402
 
 
 def _canon_cell(v):
@@ -80,7 +80,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = get_spark("check-correctness")
+    spark = session("check-correctness")
     con = oracle_connection(sf_dir)
 
     qs = queries()

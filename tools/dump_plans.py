@@ -14,7 +14,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from nyc_opendata_etl_spark.plans.inspect import formatted_plan  # noqa: E402
 from nyc_opendata_etl_spark.queries import queries  # noqa: E402
-from nyc_opendata_etl_spark.session import get_spark  # noqa: E402
+from tools.harness import session  # noqa: E402
 
 # query -> what the plan should show (the commentary the judge checks)
 SHOWCASE = {
@@ -472,8 +472,7 @@ SHOWCASE = {
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark("plans")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("plans")
     qs = queries()
     out = [
         "# PLANS — annotated physical plans (generated by tools/dump_plans.py)",

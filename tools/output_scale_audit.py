@@ -26,33 +26,22 @@ Usage:
 
 from __future__ import annotations
 
+import argparse
 import glob
 import json
-import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 
 
 def main() -> int:
-    argv = sys.argv[1:]
-    ratio_floor = 1500.0
-    sweep_path = str(ROOT / "SCALE_SWEEP_100X_FULL_r09.jsonl")
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--ratio"):
-            if "=" in a:
-                ratio_floor = float(a.split("=", 1)[1])
-            elif i + 1 < len(argv):
-                i += 1
-                ratio_floor = float(argv[i])
-            else:
-                print("--ratio needs a value", file=sys.stderr)
-                return 2
-        else:
-            sweep_path = a
-        i += 1
+    ap = argparse.ArgumentParser()
+    ap.add_argument(
+        "sweep", nargs="?", default=str(ROOT / "SCALE_SWEEP_100X_FULL_r09.jsonl")
+    )
+    ap.add_argument("--ratio", type=float, default=1500.0)
+    args = ap.parse_args()
+    sweep_path, ratio_floor = args.sweep, args.ratio
 
     rows_small: dict[str, int] = {}
     # ALL rounds, later overriding earlier (the original "r0*" glob

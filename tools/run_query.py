@@ -50,10 +50,9 @@ def main() -> int:
         print(f"unknown query {args.name!r}; close matches: {close}", file=sys.stderr)
         return 2
 
-    from nyc_opendata_etl_spark.session import get_spark
+    from tools.harness import session
 
-    spark = get_spark("run_query")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("run_query")
     df = qs[args.name](spark, args.sf_dir)
     if args.explain:
         df.explain("formatted")

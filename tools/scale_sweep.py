@@ -23,6 +23,7 @@ a defect.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -34,13 +35,14 @@ from pathlib import Path
 _REPO_ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO_ROOT))
 
+# The child times count(), not measure()'s noop write: sweep rows carry
+# the output row count that tools/output_scale_audit.py reads.
 _CHILD = r"""
 import json, sys, time
-from nyc_opendata_etl_spark.session import get_spark
 from nyc_opendata_etl_spark.queries import queries
+from tools.harness import session
 name, sf_dir = sys.argv[1], sys.argv[2]
-s = get_spark("scale-sweep")
-s.sparkContext.setLogLevel("ERROR")
+s = session("scale-sweep")
 t = time.time()
 n = queries()[name](s, sf_dir).count()
 print("SWEEP_RESULT " + json.dumps(
@@ -50,28 +52,12 @@ print("SWEEP_RESULT " + json.dumps(
 
 
 def main() -> None:
-    argv = sys.argv[1:]
-    args: list[str] = []
-    timeout = 600
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--timeout"):
-            if "=" in a:
-                timeout = int(a.split("=", 1)[1])
-            elif i + 1 < len(argv):
-                i += 1
-                timeout = int(argv[i])
-            else:
-                print("--timeout needs a value", file=sys.stderr)
-                sys.exit(2)
-        else:
-            args.append(a)
-        i += 1
-    if not args:
-        print("usage: scale_sweep.py SF_DIR [query ...]", file=sys.stderr)
-        sys.exit(2)
-    sf_dir, names = args[0], args[1:]
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir")
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--timeout", type=int, default=600)
+    args = ap.parse_intermixed_args()
+    sf_dir, names, timeout = args.sf_dir, args.names, args.timeout
     if not names:
         from nyc_opendata_etl_spark.queries import queries
 

@@ -28,11 +28,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from nyc_opendata_etl_spark.session import get_spark
     from nyc_opendata_etl_spark.sources.staging import stage_all
+    from tools.harness import session
 
-    spark = get_spark("stage-warmup")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("stage-warmup")
 
     total = 0.0
     for label, dt in stage_all(spark, sf_dir):
