@@ -122,8 +122,8 @@ def _staged_trigger_files(stage: str) -> int | None:
     watermark bound state between batches (the round-9 interval-join
     lesson: 352 → 59.6 s at 100×). Round 10 applies the same gate to
     the tumbling-backfill and stateful-dedup replays, whose sf0.1 bench
-    cost was pure multi-batch overhead (8× applyInPandasWithState
-    Python-worker round-trips at a scale where one batch suffices)."""
+    cost was pure multi-batch overhead (8× per-batch state-store
+    commits across every shard at a scale where one batch suffices)."""
     staged_bytes = sum(
         os.path.getsize(os.path.join(stage, p))
         for p in os.listdir(stage)
@@ -232,8 +232,9 @@ def q_stream_tumbling_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT DISTINCT user_id FROM events",
 )
 def q_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState):
-    first-seen keyed dedup across micro-batches. The emitted set — each
+    """Unbounded-state streaming dedup (native ``dropDuplicates`` on the
+    projected key, no watermark): first-seen keyed dedup across
+    micro-batches, state one key row per user. The emitted set — each
     distinct user exactly once — is batching-invariant, so a plain
     batch DISTINCT is a full-value oracle for a genuinely streaming
     stateful execution. Sharded into micro-batches only above the

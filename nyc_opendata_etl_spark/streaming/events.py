@@ -138,40 +138,18 @@ def watermarked_dedup(
 
 
 def stateful_first_seen(events: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Custom stateful streaming operator: emit each key the first time
-    it is ever seen across the whole stream (keyed dedup with unbounded
-    state), via ``applyInPandasWithState``.
+    """Emit each key the first time it is ever seen across the whole
+    stream (keyed dedup with unbounded state), append mode.
 
-    This is the canonical shape for custom state logic Spark's built-in
-    operators don't cover (the built-in ``dropDuplicates`` on a stream
-    keeps whole rows; here the state is a single bit per key, and the
-    emitted record is deterministic — just the key — regardless of how
-    the input was micro-batched). State is one boolean per distinct key,
-    partitioned by the grouping key: at 100 TB the state store shards
-    with the shuffle, and a watermark-based timeout would bound it for
-    keys that can expire.
+    Projecting to the key before the native streaming dedup makes the
+    state-store row the key itself, and the emitted record — the key
+    with its own type, NULL included once — does not depend on how the
+    input was micro-batched. No watermark, so keys are kept forever:
+    state is O(all distinct keys ever), sharded by the shuffle on the
+    key (``run_available_now(state_partitions=…)``). Use
+    :func:`watermarked_dedup` where keys may expire.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def first_seen(key, batches, state: GroupState):
-        for _ in batches:  # drain; content irrelevant beyond presence
-            pass
-        if not state.exists:
-            state.update((True,))
-            yield pd.DataFrame({key_col: [key[0]]})
-
-    # output schema derives from the ACTUAL key type (round-11 review:
-    # a hardcoded 'long' crashed the Arrow conversion mid-stream for
-    # any non-bigint grouping key, e.g. key_col="event_type")
-    key_type = events.schema[key_col].dataType.simpleString()
-    return events.groupBy(key_col).applyInPandasWithState(
-        first_seen,
-        outputStructType=f"{key_col} {key_type}",
-        stateStructType="seen boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return events.select(key_col).dropDuplicates([key_col])
 
 
 def interval_join_clicks_views(

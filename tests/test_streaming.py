@@ -97,6 +97,79 @@ def test_stateful_first_seen_dedup(spark, tmp_path):
     assert sorted(r.user_id for r in out.collect()) == [10, 20, 30]
 
 
+def test_stateful_first_seen_null_key_once_on_native_dedup(spark, tmp_path):
+    """A NULL key seen in two micro-batches is emitted once, and the
+    operator is Spark's streaming Deduplicate, not a Python state
+    worker."""
+    from pyspark.sql import functions as F
+
+    schema = (
+        "event_id long, ts string, user_id long, event_type string,"
+        " value double, props string"
+    )
+    path = str(tmp_path / "events")
+    batches = [
+        [(1, "2024-01-01 00:00:00", None, "click", 1.0, "{}"),
+         (2, "2024-01-01 00:01:00", 10, "click", 1.0, "{}")],
+        [(3, "2024-01-01 00:02:00", None, "view", 2.0, "{}"),
+         (4, "2024-01-01 00:03:00", 20, "view", 3.0, "{}")],
+    ]
+    for rows in batches:  # one file per write -> one micro-batch each
+        spark.createDataFrame(rows, schema).withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        ).coalesce(1).write.mode("append").parquet(path)
+
+    stream = se.read_event_stream(spark, path, max_files_per_trigger=1)
+    deduped = se.stateful_first_seen(stream, "user_id")
+    plan = deduped._jdf.queryExecution().analyzed().toString()
+    assert "Deduplicate" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+
+    out = se.run_available_now(
+        deduped, f"t_null_{uuid.uuid4().hex[:8]}", output_mode="append"
+    )
+    got = [r.user_id for r in out.collect()]
+    assert sorted(got, key=lambda k: (k is not None, k)) == [None, 10, 20]
+
+
+def test_stateful_first_seen_resumes_from_checkpoint(spark, tmp_path):
+    """Drain half the event files into a parquet sink, add files that
+    repeat old keys and bring new ones, drain again from the same
+    checkpoint: across both drains each distinct key lands once."""
+    events = load_table(spark, SF_DIR, "events")
+    first = events.where("user_id % 3 != 0")
+    second = events.where("user_id % 3 != 1")  # repeats % 3 == 2
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain_once() -> list:
+        (
+            se.stateful_first_seen(se.read_event_stream(spark, src), "user_id")
+            .writeStream.format("parquet")
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start(out)
+            .awaitTermination()
+        )
+        return [r.user_id for r in spark.read.parquet(out).collect()]
+
+    first.repartition(2).write.parquet(src)
+    after_first = drain_once()
+    second.repartition(2).write.mode("append").parquet(src)
+    after_both = drain_once()
+
+    old, new = (
+        {r.user_id for r in df.select("user_id").distinct().collect()}
+        for df in (first, second)
+    )
+    assert new - old and new & old  # the second drain repeats and adds keys
+    assert sorted(after_first) == sorted(old)
+    assert len(after_both) == len(set(after_both))
+    assert set(after_both) == old | new
+    assert set(after_both) - set(after_first) == new - old
+
+
 def test_stream_to_partitioned_sink_is_idempotent(spark, tmp_path):
     from pyspark.sql import functions as F
 
