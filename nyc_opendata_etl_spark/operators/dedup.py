@@ -20,11 +20,11 @@ Scale design notes:
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.functions.hashing import md5_long
-from nyc_opendata_etl_spark.operators.text import canon_text
+from nyc_opendata_etl_spark.operators.text import canon_text, fingerprint
 
 
 def exact_dedup_groups(
@@ -1145,62 +1145,151 @@ def sorted_neighborhood_pairs_adaptive(
 
 
 # ──────────────────────────────────────────────────────────────────────
-# Staged fingerprint index: the write-time answer to incremental dedup.
+# Fingerprint index: the write-time answer to incremental dedup.
 #
 # An incremental dedup that re-scans and re-canonicalizes the FULL
-# historical corpus per increment (the pre-round-11 shape of
-# dedup_incremental) is correct but O(corpus) per batch — 62 s at the
-# 100× replica, and at 100 TB a full-text re-read per hourly ingest.
-# The lakehouse answer mirrors build_text_index (operators/text.py:403):
-# persist the corpus's distinct content fingerprints ONCE at write time
-# (8 bytes/doc vs the full text — ~0.01% of corpus bytes), then each
-# increment anti-joins the (small) new batch against the fingerprint
-# parquet. Maintenance appends only the NEW batch's fingerprints, so
-# both probe and upkeep are O(new docs), never O(corpus).
+# historical corpus per increment is correct but O(corpus) per batch —
+# 62 s at the 100× replica, and at 100 TB a full-text re-read per
+# hourly ingest. The lakehouse answer mirrors build_text_index
+# (operators/text.py): persist the corpus's content fingerprints ONCE
+# at write time (two 8-byte columns per canon vs the full text), then
+# probe each (small) increment against them.
+#
+# The index is a refcounted delta log: ``(h, cnt)`` rows, partitioned
+# by ``b``. A build writes per-canon doc counts, updates append positive
+# deltas and deletions append NEGATIVE deltas, so every direction of
+# maintenance is an O(batch) write that never reads the index. A canon
+# is live iff SUM(cnt) > 0 — which a probe evaluates over just the
+# batch's hashes, so a takedown is visible at the next probe, not only
+# after compaction (whether a text is "new" after a takedown cannot
+# wait for the nightly rewrite). Compaction
+# (operators/index_maintenance.py) folds the log to exact live rows.
+#
+# Partitions of ``b``: build, update and compaction write ``-1``,
+# deletions ``-2``, and a streaming micro-batch (streaming/ingest.py)
+# its own batch id (always ≥ 0) by dynamic overwrite, so the ingest's
+# probe can exclude the current batch on replay with a partition filter.
 # ──────────────────────────────────────────────────────────────────────
 
+#: Reserved index partitions; real micro-batch ids are >= 0.
+COMPACTED_B = -1
+TAKEDOWN_B = -2
 
-def build_fingerprint_index(
-    docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_files: int = 8,
-) -> None:
-    """Materialize ``DISTINCT fingerprint(text)`` for a corpus as a
-    parquet relation (column ``h``, one row per distinct canonical
-    text). Range-partitioned and sorted on ``h`` so footer min/max
-    bounds each file — a broadcast-hashable probe doesn't need that,
-    but a sort-merge anti join at cluster scale co-partitions for free
-    and compaction stays cheap. The hash is the same md5-derived
-    10^9-space fingerprint the exact-dedup family uses
-    (:func:`nyc_opendata_etl_spark.operators.text.fingerprint`), so an
-    indexed probe is bit-identical to re-hashing the corpus."""
-    from nyc_opendata_etl_spark.operators.text import fingerprint
+#: The index's on-disk relation, read with this schema rather than
+#: inferred, so a log with no part file (an empty build, or a compaction
+#: of a fully withdrawn log) still reads as an empty index.
+FINGERPRINT_INDEX_SCHEMA = "h long, cnt long, b long"
 
-    (
+#: Files in a build or compaction (range-sorted on ``h``).
+_INDEX_FILES = 8
+
+
+def _canon_deltas(docs: DataFrame, text_col: str, sign: int = 1) -> DataFrame:
+    """``(h, cnt)``: per-canon doc count of ``docs``, times ``sign``.
+    The hash is the md5-derived fingerprint the exact-dedup family
+    uses (:func:`~nyc_opendata_etl_spark.operators.text.fingerprint`),
+    so an indexed probe is bit-identical to re-hashing the corpus."""
+    return (
         docs.select(fingerprint(text_col).alias("h"))
-        .distinct()
-        .repartitionByRange(num_files, "h")
-        .sortWithinPartitions("h")
-        .write.mode("overwrite")
-        .parquet(path)
+        .groupBy("h")
+        .agg((F.count(F.lit(1)) * sign).cast("long").alias("cnt"))
     )
 
 
-def update_fingerprint_index(new_docs: DataFrame, path: str, text_col: str = "text") -> None:
-    """Append a new batch's distinct fingerprints to the index —
-    O(new docs): the existing index is never re-read. Appended files
-    may repeat hashes already present (the probe anti-join is
-    idempotent to that); periodic compaction dedups, as with any
-    append-log relation."""
-    from nyc_opendata_etl_spark.operators.text import fingerprint
+def write_fingerprint_log(
+    deltas: DataFrame, path: str, b: int, overwrite: str | None = None
+) -> None:
+    """Write ``(h, cnt)`` rows under partition ``b`` of the log at
+    ``path``: appended, or with ``overwrite`` as the
+    ``partitionOverwriteMode`` — ``"dynamic"`` replaces only partition
+    ``b`` (an idempotent micro-batch replay), ``"static"`` the whole
+    directory. The session default is dynamic, so a write that must
+    drop old partitions has to say static."""
+    w = deltas.withColumn("b", F.lit(b)).write.partitionBy("b")
+    if overwrite is None:
+        w = w.mode("append")
+    else:
+        w = w.mode("overwrite").option("partitionOverwriteMode", overwrite)
+    w.parquet(path)
 
-    (
-        new_docs.select(fingerprint(text_col).alias("h"))
-        .distinct()
-        .write.mode("append")
-        .parquet(path)
+
+def write_live_fingerprints(counts: DataFrame, path: str) -> None:
+    """Replace the whole directory at ``path`` with the ``(h, cnt)``
+    rows of ``counts`` under ``b = -1``, range-partitioned and sorted on
+    ``h`` so footer min/max bounds each file. Shared by the build and
+    by compaction."""
+    write_fingerprint_log(
+        counts.repartitionByRange(_INDEX_FILES, "h").sortWithinPartitions("h"),
+        path,
+        COMPACTED_B,
+        overwrite="static",
+    )
+
+
+def build_fingerprint_index(docs: DataFrame, path: str, text_col: str = "text") -> None:
+    """Write the fingerprint index of a corpus: one ``(h, cnt)`` row per
+    distinct canonical text, ``cnt`` = number of docs sharing it. Any
+    earlier log at ``path`` — takedowns and batch partitions included —
+    is replaced."""
+    write_live_fingerprints(_canon_deltas(docs, text_col), path)
+
+
+def update_fingerprint_index(
+    new_docs: DataFrame, path: str, text_col: str = "text"
+) -> None:
+    """Append a new batch's per-canon doc counts as positive deltas —
+    O(new docs); the index is never re-read. Probes sum repeated
+    canons; compaction folds them to one row."""
+    write_fingerprint_log(_canon_deltas(new_docs, text_col), path, COMPACTED_B)
+
+
+def delete_from_fingerprint_index(
+    deleted_docs: DataFrame, path: str, text_col: str = "text"
+) -> None:
+    """Append NEGATIVE per-canon deltas for withdrawn docs (takedowns,
+    opt-outs) under ``b = -2`` — O(deleted docs), index never re-read.
+    A canon whose live refcount reaches 0 stops serving at the NEXT
+    PROBE; a canon some surviving doc still shares stays live. Callers
+    pass each withdrawn doc ONCE (the relation being deleted from the
+    corpus table): double-deleting drives the sum negative, which
+    probes and compaction both treat as absent."""
+    write_fingerprint_log(
+        _canon_deltas(deleted_docs, text_col, sign=-1), path, TAKEDOWN_B
+    )
+
+
+def read_fingerprint_index(spark: SparkSession, path: str) -> DataFrame | None:
+    """The log at ``path``, or None if it does not exist YET (a stream's
+    first batch). Only the path-missing case may be swallowed: any
+    other read failure (corrupt footer, storage hiccup, permissions)
+    must fail the caller — treating a transient error as "empty index"
+    would silently admit canons already accepted, and in a streaming
+    ingest permanently duplicate docs in the corpus sink."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.schema(FINGERPRINT_INDEX_SCHEMA).parquet(path)
+    except AnalysisException as e:
+        cond = getattr(e, "getCondition", getattr(e, "getErrorClass", lambda: None))()
+        if cond == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(e):
+            return None
+        raise
+
+
+def live_canons(index: DataFrame, hashes: DataFrame) -> DataFrame:
+    """The hashes (column ``h``, distinct) among ``hashes`` that have a
+    LIVE refcount in ``index`` (``SUM(cnt) > 0``). Plan shape: the
+    hashes broadcast into a left-semi over the index scan (only
+    ``h``/``cnt`` read), then a partial-agg SUM over just the touched
+    hashes — one index scan, no index shuffle, state bounded by the
+    probe. The broadcast encodes the incremental contract (increment ≪
+    index); a corpus-sized backfill rebuilds instead of probing."""
+    return (
+        index.join(F.broadcast(hashes), "h", "left_semi")
+        .groupBy("h")
+        .agg(F.sum("cnt").alias("rc"))
+        .filter(F.col("rc") > 0)
+        .select("h")
     )
 
 
@@ -1210,128 +1299,12 @@ def incremental_new_docs(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Ids in ``batch`` whose canonical text is NOT in the historical
-    fingerprint index: one left-anti join on the content hash. Only the
-    batch is tokenized/hashed; the index side streams 8-byte hashes."""
-    from nyc_opendata_etl_spark.operators.text import fingerprint
-
+    """Ids in ``batch`` whose canonical text has no LIVE refcount in the
+    index (``SUM(cnt) <= 0`` or absent): :func:`live_canons` over the
+    batch's distinct hashes, then a broadcast anti join back onto the
+    batch. Only the batch is tokenized/hashed."""
     keyed = batch.select(F.col(id_col), fingerprint(text_col).alias("h"))
-    return keyed.join(fingerprint_index, "h", "left_anti").select(id_col)
-
-
-# ──────────────────────────────────────────────────────────────────────
-# Refcounted fingerprint index: the deletion-capable variant.
-#
-# The bare index above stores DISTINCT content hashes, which makes
-# id-based deletion dishonest: removing one doc's hash is only correct
-# if NO surviving doc shares the canon (operators/index_maintenance.py
-# module docstring). The refcounted variant stores (h, cnt) DELTAS in
-# an append log — build writes per-canon doc counts, updates append
-# positive deltas, deletions append NEGATIVE deltas — so both directions
-# of maintenance stay O(batch) writes that never read the index. A
-# canon is live iff SUM(cnt) > 0, which a probe evaluates over just the
-# batch's hashes and compaction reconciles to exact (h, refcount) rows.
-# This is the counting-merge-on-compaction design every LSM/lakehouse
-# delete path uses; unlike the other three staged indexes (whose
-# deletes only take effect at compaction), refcount sums make deletes
-# visible to probes IMMEDIATELY, because correctness of "is this text
-# new?" after a takedown cannot wait for the nightly rewrite.
-# ──────────────────────────────────────────────────────────────────────
-
-
-def build_fingerprint_index_rc(
-    docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    num_files: int = 8,
-) -> None:
-    """Materialize the refcounted fingerprint index: one ``(h, cnt)``
-    row per distinct canonical text, ``cnt`` = number of corpus docs
-    sharing that canon. Same hash as :func:`build_fingerprint_index`
-    (an rc probe is bit-identical to re-hashing), same range-sorted
-    layout (footer min/max bounds each file; sort-merge anti joins
-    co-partition for free at cluster scale)."""
-    from nyc_opendata_etl_spark.operators.text import fingerprint
-
-    (
-        docs.select(fingerprint(text_col).alias("h"))
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .repartitionByRange(num_files, "h")
-        .sortWithinPartitions("h")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def update_fingerprint_index_rc(
-    new_docs: DataFrame, path: str, text_col: str = "text"
-) -> None:
-    """Append a new batch's per-canon doc counts as positive deltas —
-    O(new docs); the existing index is never re-read. Repeated appends
-    of the same canon accumulate delta rows; probes SUM them and
-    compaction folds them to one row."""
-    from nyc_opendata_etl_spark.operators.text import fingerprint
-
-    (
-        new_docs.select(fingerprint(text_col).alias("h"))
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .write.mode("append")
-        .parquet(path)
-    )
-
-
-def delete_from_fingerprint_index_rc(
-    deleted_docs: DataFrame, path: str, text_col: str = "text"
-) -> None:
-    """Append NEGATIVE per-canon deltas for withdrawn docs (takedowns,
-    opt-outs) — O(deleted docs), index never re-read. A canon whose
-    live refcount reaches 0 stops serving at the NEXT PROBE (sum
-    semantics), not merely at compaction; a canon some surviving doc
-    still shares stays live, the exact case the bare-hash index cannot
-    express. Callers pass each withdrawn doc ONCE (the relation being
-    deleted from the corpus table) — double-deleting drives the sum
-    negative, which probes and compaction both treat as absent."""
-    from nyc_opendata_etl_spark.operators.text import fingerprint
-
-    (
-        deleted_docs.select(fingerprint(text_col).alias("h"))
-        .groupBy("h")
-        .agg((-F.count(F.lit(1))).cast("long").alias("cnt"))
-        .write.mode("append")
-        .parquet(path)
-    )
-
-
-def incremental_new_docs_rc(
-    batch: DataFrame,
-    fingerprint_index_rc: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Ids in ``batch`` whose canonical text has no LIVE refcount in
-    the delta log (``SUM(cnt) <= 0`` or absent). Plan shape: the
-    batch's distinct hashes broadcast into a left-semi over the index
-    scan (only ``h``/``cnt`` columns read), a partial-agg SUM over just
-    the touched hashes, then a broadcast anti join back onto the batch
-    — one index scan, no index shuffle, state bounded by the batch.
-    The broadcast hints encode the incremental-ingest contract
-    (increment ≪ index); a corpus-sized backfill "batch" doesn't probe
-    — it rebuilds via :func:`build_fingerprint_index_rc`, exactly as
-    the bare-index path rebuilds rather than anti-joining the world.
-    Matches :func:`incremental_new_docs` output on a delete-free log."""
-    from nyc_opendata_etl_spark.operators.text import fingerprint
-
-    keyed = batch.select(F.col(id_col), fingerprint(text_col).alias("h"))
-    probe_hashes = keyed.select("h").distinct()
-    live = (
-        fingerprint_index_rc.join(F.broadcast(probe_hashes), "h", "left_semi")
-        .groupBy("h")
-        .agg(F.sum("cnt").alias("rc"))
-        .filter(F.col("rc") > 0)
-        .select("h")
-    )
+    live = live_canons(fingerprint_index, keyed.select("h").distinct())
     return keyed.join(F.broadcast(live), "h", "left_anti").select(id_col)
 
 
@@ -1471,8 +1444,6 @@ def host_dup_stats(
     per-host rollup is one more exchange on the host. No all-pairs
     anything; hot hosts cost their distinct cardinality, not their page
     count."""
-    from nyc_opendata_etl_spark.operators.text import fingerprint
-
     per_page = df.select(
         F.col(id_col),
         url_host(normalize_url(url_col)).alias("host"),

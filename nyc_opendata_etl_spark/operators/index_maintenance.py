@@ -30,14 +30,9 @@ the corpus) + an optional broadcast-able anti-join on the delete ids +
 one clustered rewrite — O(index), the standard nightly maintenance
 cost, fully independent of corpus text.
 
-The fingerprint index stores bare content hashes (no doc ids), so
-id-based deletion does not apply there: removing a doc's hash is only
-correct if NO surviving doc shares the canon, which requires a
-refcount the minimal relation deliberately omits. compact_fingerprint_index
-therefore dedups only; deployments needing fingerprint deletion use the
-refcounted variant (operators/dedup.py: build/update/delete
-``*_fingerprint_index_rc``), whose delta log compact_fingerprint_index_rc
-folds to exact ``(h, refcount)`` rows here.
+The fingerprint index (operators/dedup.py) is the one exception to
+delete-at-compaction: its deletes append negative refcount deltas that
+probes see at once, and compaction folds the delta log to live rows.
 """
 
 from __future__ import annotations
@@ -126,45 +121,29 @@ def compact_lsh_index(
 
 
 def compact_fingerprint_index(spark: SparkSession, path: str) -> None:
-    """Dedup a build_fingerprint_index relation (append batches may
-    repeat hashes) back into the range-sorted layout. No id-based
-    deletion — see the module docstring for why the bare-hash relation
-    cannot support it honestly."""
-    hashes = spark.read.parquet(path).distinct()
-    _swap_dir(
-        path,
-        lambda tmp: (
-            hashes.repartitionByRange(8, "h")
-            .sortWithinPartitions("h")
-            .write.parquet(tmp)
-        ),
+    """Fold a fingerprint delta log (build, update appends, negative
+    delete deltas, streaming batch partitions) to its exact state: one
+    ``(h, refcount)`` row per LIVE canon (``SUM(cnt) > 0``) under
+    ``b = -1``, range-sorted. Probes sum deltas anyway, so compaction
+    changes no answer — it retires log length, restores the clustered
+    layout, and drops dead canons, so
+    ``compact(build(all) + delete(gone)) == build(survivors)`` row for
+    row. Under a streaming writer, run it with the stream STOPPED and
+    its checkpoint committed: folding erases the batch partitions, so
+    an uncommitted batch could no longer replay idempotently."""
+    from nyc_opendata_etl_spark.operators.dedup import (
+        FINGERPRINT_INDEX_SCHEMA,
+        write_live_fingerprints,
     )
 
-
-def compact_fingerprint_index_rc(spark: SparkSession, path: str) -> None:
-    """Fold a refcounted fingerprint delta log (build + update appends +
-    negative delete deltas) to its exact state: one ``(h, refcount)``
-    row per LIVE canon (``SUM(cnt) > 0``), range-sorted. Probes sum
-    deltas anyway, so compaction changes no answer — it retires log
-    length, restores the clustered layout, and drops dead canons. Net
-    refcounts ≤ 0 (fully withdrawn, or over-deleted per the
-    delete_from_fingerprint_index_rc contract) are dropped entirely, so
-    ``compact(build(all) + delete(gone)) == build(survivors)`` row for
-    row — pinned in tests/test_round12b_ops.py."""
     folded = (
-        spark.read.parquet(path)
+        spark.read.schema(FINGERPRINT_INDEX_SCHEMA)
+        .parquet(path)
         .groupBy("h")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
         .filter(F.col("cnt") > 0)
     )
-    _swap_dir(
-        path,
-        lambda tmp: (
-            folded.repartitionByRange(8, "h")
-            .sortWithinPartitions("h")
-            .write.parquet(tmp)
-        ),
-    )
+    _swap_dir(path, lambda tmp: write_live_fingerprints(folded, tmp))
 
 
 def compact_ivfpq_index(

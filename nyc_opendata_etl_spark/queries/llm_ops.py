@@ -68,18 +68,19 @@ def _stage_fingerprint_index(spark: SparkSession, sf_dir: str) -> str:
     per corpus version. Built incrementally to exercise the append
     maintenance path: base build from doc_id % 4 == 0, then
     update_fingerprint_index appends doc_id % 4 == 2 — together exactly
-    the even half. _INCR_DONE is written last, proving both phases
-    completed."""
+    the even half. _LOG_DONE is written last, proving both phases
+    completed (a directory from before the refcounted log carries
+    another marker, so it is rebuilt, not read)."""
     from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
 
     path = stage_dir(sf_dir, "fingerprint_index")
-    if is_stale(path, sf_dir, "documents", marker="_INCR_DONE"):
+    if is_stale(path, sf_dir, "documents", marker="_LOG_DONE"):
         import os
 
         docs = load_table(spark, sf_dir, "documents")
         dedup.build_fingerprint_index(docs.filter(F.col("doc_id") % 4 == 0), path)
         dedup.update_fingerprint_index(docs.filter(F.col("doc_id") % 4 == 2), path)
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
+        with open(os.path.join(path, "_LOG_DONE"), "w") as fh:
             fh.write("")  # both phases completed
     return path
 
@@ -1352,16 +1353,16 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, odd for the batch). The index is a write-time parquet
     artifact (built incrementally — base + append — by the staging
     layer), so the query tokenizes/hashes ONLY the new batch and
-    anti-joins it against 8-byte corpus hashes: O(new docs) per
-    increment regardless of corpus size, vs the pre-round-11 shape that
-    re-canonicalized the full corpus per run (62 s at the 100×
-    replica). The oracle recomputes the corpus hashes from raw
-    documents, so it verifies the staged index's contents, not just the
-    join."""
+    probes the corpus's (hash, refcount) log with it: O(new docs) per
+    increment regardless of corpus size, vs a re-canonicalization of
+    the full corpus per run (62 s at the 100× replica). The log is
+    delete-free here, so the oracle's plain anti join against the
+    corpus hashes, recomputed from raw documents, is the answer; it
+    verifies the staged index's contents, not just the join."""
     index_path = _stage_fingerprint_index(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents", spread_input=True)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    index = spark.read.parquet(index_path)
+    index = dedup.read_fingerprint_index(spark, index_path)
     return dedup.incremental_new_docs(batch, index)
 
 

@@ -67,26 +67,24 @@ def _fresh_run_dir(prefix: str) -> str:
     return run
 
 
-def _stage_fingerprint_index_rc(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the REFCOUNTED fingerprint delta log once per corpus
-    version, exercising every maintenance direction: base build from
-    the even half, an append batch (doc_id % 4 == 1), then a DELETE of
-    doc_id % 8 == 0 (a quarter of the evens — each withdrawn doc was
-    present exactly once, per the delete contract). _RC_DONE is written
-    last, proving all three phases completed."""
+def _stage_fingerprint_index_deleted(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the fingerprint index once per corpus version, exercising
+    every maintenance direction: base build from the even half, an
+    append batch (doc_id % 4 == 1), then a DELETE of doc_id % 8 == 0 (a
+    quarter of the evens — each withdrawn doc was present exactly once,
+    per the delete contract). _LOG_DONE is written last, proving all
+    three phases completed."""
     import os
 
     from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
 
-    path = stage_dir(sf_dir, "fingerprint_index_rc")
-    if is_stale(path, sf_dir, "documents", marker="_RC_DONE"):
+    path = stage_dir(sf_dir, "fingerprint_index_del")
+    if is_stale(path, sf_dir, "documents", marker="_LOG_DONE"):
         docs = load_table(spark, sf_dir, "documents")
-        dedup.build_fingerprint_index_rc(docs.filter(F.col("doc_id") % 2 == 0), path)
-        dedup.update_fingerprint_index_rc(docs.filter(F.col("doc_id") % 4 == 1), path)
-        dedup.delete_from_fingerprint_index_rc(
-            docs.filter(F.col("doc_id") % 8 == 0), path
-        )
-        with open(os.path.join(path, "_RC_DONE"), "w") as fh:
+        dedup.build_fingerprint_index(docs.filter(F.col("doc_id") % 2 == 0), path)
+        dedup.update_fingerprint_index(docs.filter(F.col("doc_id") % 4 == 1), path)
+        dedup.delete_from_fingerprint_index(docs.filter(F.col("doc_id") % 8 == 0), path)
+        with open(os.path.join(path, "_LOG_DONE"), "w") as fh:
             fh.write("")
     return path
 
@@ -115,21 +113,21 @@ def _stage_fingerprint_index_rc(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def q_dedup_incremental_rc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental dedup against the REFCOUNTED staged fingerprint
-    index — dedup_incremental's deletion-capable twin. The staged delta
+    """Incremental dedup against a staged fingerprint index that has
+    seen deletions — dedup_incremental's takedown twin. The staged delta
     log is built base + append + DELETE (doc_id % 8 == 0 withdrawn), so
     the probe must treat a canon whose only copies were withdrawn as
-    NEW again while a canon with any surviving copy stays live — sum
-    semantics the bare-hash index cannot express. The oracle recomputes
-    the signed per-canon deltas from raw documents (verifying the
-    staged log's CONTENT, not just the join) and replays the
-    SUM(cnt) > 0 liveness rule. Probe plan: batch hashes broadcast into
+    NEW again while a canon with any surviving copy stays live. The
+    oracle recomputes the signed per-canon deltas from raw documents
+    (verifying the staged log's CONTENT, not just the join) and replays
+    the SUM(cnt) > 0 liveness rule. Probe plan: batch hashes broadcast into
     a left-semi over the index scan + partial SUM — O(new docs), no
     index shuffle (plan-pinned in tests/test_round12b_ops.py)."""
-    index_path = _stage_fingerprint_index_rc(spark, sf_dir)
+    index_path = _stage_fingerprint_index_deleted(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents", spread_input=True)
     batch = docs.filter(F.col("doc_id") % 4 == 3)
-    return dedup.incremental_new_docs_rc(batch, spark.read.parquet(index_path))
+    index = dedup.read_fingerprint_index(spark, index_path)
+    return dedup.incremental_new_docs(batch, index)
 
 
 def _stage_docs_idordered(spark: SparkSession, sf_dir: str) -> str:

@@ -94,7 +94,7 @@ def stage_all(spark, sf_dir: str) -> list[tuple[str, float]]:
         _stage_cluster_stream,
         _stage_docs_idordered,
         _stage_dup_cluster_index_incr,
-        _stage_fingerprint_index_rc,
+        _stage_fingerprint_index_deleted,
         _stage_ivfpq_index_deleted,
         _stage_ivfpq_index_retrained,
         _stage_ivfpq_stream,
@@ -141,8 +141,8 @@ def stage_all(spark, sf_dir: str) -> list[tuple[str, float]]:
             lambda: _stage_ivfpq_index_retrained(spark, sf_dir),
         ),
         (
-            "fingerprint_index_rc (deletion-capable dedup)",
-            lambda: _stage_fingerprint_index_rc(spark, sf_dir),
+            "fingerprint_index_del (dedup takedown lifecycle)",
+            lambda: _stage_fingerprint_index_deleted(spark, sf_dir),
         ),
         (
             "docs_idordered (ingest stream source)",

@@ -34,7 +34,7 @@ fresh ids); as everywhere in the streaming layer, exactly-once rides on
 Structured Streaming's offset log, so production callers MUST pass a
 durable ``checkpoint_location``. Compaction of many small batch
 partitions into update_text_index's layout is a maintenance-window job
-(the compact_ingest_index pattern); probes are correct either way.
+(the compact_fingerprint_index pattern); probes are correct either way.
 
 Scale shape per batch: tokenize/aggregate ONLY the batch (one
 map-side-combined explode+count), write two partitions. Probe cost:

@@ -15,12 +15,13 @@ keyed by the micro-batch id —
 
 - the corpus sink partitions by ``batch_id`` and dynamic-overwrites
   only its own partition (the stream_to_partitioned_sink contract);
-- the index is the refcounted ``(h, cnt)`` delta log *with a batch
-  column* ``b``, partitioned by ``b`` and dynamic-overwritten the same
-  way; the probe EXCLUDES rows with ``b == current_batch_id``, so a
-  replayed batch (failure after a partial write, before the checkpoint
-  commit) sees exactly the pre-batch index state and recomputes the
-  identical survivor set, then overwrites both of its own partitions.
+- the index is the refcounted ``(h, cnt)`` delta log of
+  operators/dedup, whose ``b`` partition is the batch id, dynamic-
+  overwritten the same way; the probe EXCLUDES rows with
+  ``b == current_batch_id``, so a replayed batch (failure after a
+  partial write, before the checkpoint commit) sees exactly the
+  pre-batch index state and recomputes the identical survivor set,
+  then overwrites both of its own partitions.
   Without the exclusion, a replay would find its own canons already
   indexed, emit nothing, and dynamic-overwrite its corpus partition
   with EMPTY — silent data loss on the exact failure the checkpoint
@@ -30,19 +31,21 @@ As with stream_to_partitioned_sink, the guarantee rides on Structured
 Streaming's offset log pinning batch composition across restarts:
 production callers MUST pass a durable ``checkpoint_location``.
 
-Takedowns append negative deltas under the reserved partition
-``b = -2`` (append mode — operator-driven, not replayed); probes sum
-deltas, so a fully-withdrawn canon is re-ingestable at the NEXT batch.
-Compaction (stream stopped, checkpoint committed) folds the log to
-``(h, cnt, b = -1)`` live rows; both sentinels are forever distinct
-from real batch ids (≥ 0), so the probe's exclusion filter needs no
-special cases.
+Takedowns (:func:`~nyc_opendata_etl_spark.operators.dedup.delete_from_fingerprint_index`)
+and compaction
+(:func:`~nyc_opendata_etl_spark.operators.index_maintenance.compact_fingerprint_index`)
+are the fingerprint index's own: the index layout, its reserved
+partitions (``b = -1`` compacted, ``b = -2`` takedowns — both forever
+distinct from real batch ids ≥ 0) and its probe
+(:func:`~nyc_opendata_etl_spark.operators.dedup.live_canons`) live in
+operators/dedup. A fully withdrawn canon is re-ingestable at the next
+batch; compact with the stream stopped and its checkpoint committed.
 
 Scale shape per batch: fingerprinting and the within-batch collapse
 are one map-side-combined aggregate over the BATCH; the probe
 broadcasts the batch's distinct hashes into a left-semi over the index
-scan + a partial SUM (the incremental_new_docs_rc plan — no index
-shuffle, state bounded by the batch); both writes touch one partition.
+scan + a partial SUM (the live_canons plan — no index shuffle, state
+bounded by the batch); both writes touch one partition.
 Cost is O(batch + index-scan of two 8-byte columns), never O(corpus
 text).
 """
@@ -51,14 +54,10 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.streaming.drain import drain
-
-#: Reserved index-partition ids: real micro-batch ids are >= 0.
-COMPACTED_B = -1
-TAKEDOWN_B = -2
 
 #: Target input bytes per task for the pre-kernel batch spread ONCE the
 #: session's parallelism is filled: regex canonicalization/tokenization
@@ -139,25 +138,6 @@ def _spread_width(nbytes: int, par: int, target_bytes: int) -> int:
     return min(max(math.ceil(nbytes / target_bytes), fill, 1), 4 * par)
 
 
-def _index_or_none(spark: SparkSession, index_path: str) -> DataFrame | None:
-    """Read the fingerprint index, or None if it does not exist YET
-    (first batch). Only the path-missing case may be swallowed: any
-    other read failure (corrupt footer, storage hiccup, permissions)
-    must fail the micro-batch so the checkpoint replays it — treating
-    a transient error as "empty index" would silently admit canons
-    earlier batches already accepted, permanently duplicating docs in
-    the corpus sink (ADVICE r12 medium)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(index_path)
-    except AnalysisException as e:
-        cond = getattr(e, "getCondition", getattr(e, "getErrorClass", lambda: None))()
-        if cond == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(e):
-            return None
-        raise
-
-
 def dedup_ingest_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -169,6 +149,11 @@ def dedup_ingest_batch(
     """One micro-batch of the dedup ingest (module docstring). Exposed
     at module level so tests can drive replay semantics directly; the
     streaming wrapper passes it to ``foreachBatch``."""
+    from nyc_opendata_etl_spark.operators.dedup import (
+        live_canons,
+        read_fingerprint_index,
+        write_fingerprint_log,
+    )
     from nyc_opendata_etl_spark.operators.text import fingerprint
 
     spark = batch_df.sparkSession
@@ -196,23 +181,19 @@ def dedup_ingest_batch(
         .select("__h__", "__r__.*")
         .localCheckpoint()
     )
-    idx = _index_or_none(spark, index_path)
+    idx = read_fingerprint_index(spark, index_path)
     if idx is None:
         fresh = collapsed
     else:
         # collapsed is one row per __h__ by construction (the groupBy
         # above), so the hash set needs no distinct — a .distinct()
         # here added a two-stage aggregate before every batch's
-        # broadcast build.
-        probe_hashes = collapsed.select(F.col("__h__").alias("h"))
-        live = (
-            idx.filter(F.col("b") != batch_id)  # replay-safety exclusion
-            .join(F.broadcast(probe_hashes), "h", "left_semi")
-            .groupBy("h")
-            .agg(F.sum("cnt").alias("rc"))
-            .filter(F.col("rc") > 0)
-            .select(F.col("h").alias("__h__"))
-        )
+        # broadcast build. The b != batch_id filter is the replay-
+        # safety exclusion (module docstring).
+        live = live_canons(
+            idx.filter(F.col("b") != batch_id),
+            collapsed.select(F.col("__h__").alias("h")),
+        ).select(F.col("h").alias("__h__"))
         fresh = collapsed.join(F.broadcast(live), "__h__", "left_anti")
     # both writes idempotent by batch partition (ordering between them
     # then doesn't matter — a replay rewrites whichever half landed).
@@ -234,14 +215,13 @@ def dedup_ingest_batch(
             .partitionBy("batch_id")
             .parquet(out_path)
         )
-        (
-            fresh.groupBy(F.col("__h__").alias("h"))
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-            .withColumn("b", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("b")
-            .parquet(index_path)
+        write_fingerprint_log(
+            fresh.groupBy(F.col("__h__").alias("h")).agg(
+                F.count(F.lit(1)).cast("long").alias("cnt")
+            ),
+            index_path,
+            batch_id,
+            overwrite="dynamic",
         )
     finally:
         if fresh is not collapsed:
@@ -265,60 +245,3 @@ def stream_dedup_ingest(
         text_col=text_col, id_col=id_col,
     )
     drain(docs_stream, sink, query_name, checkpoint_location)
-
-
-def takedown_from_ingest_index(
-    deleted_docs: DataFrame, index_path: str, text_col: str = "text"
-) -> None:
-    """Withdraw docs from the ingest index: append negative per-canon
-    deltas under the reserved ``b = -2`` partition — O(deleted docs),
-    index never re-read; visible at the next batch's probe (SUM
-    semantics). Append mode: takedowns are operator-driven commands,
-    not replayed micro-batches, and successive takedown batches must
-    accumulate. Callers pass each withdrawn doc once (the
-    delete_from_fingerprint_index_rc contract)."""
-    from nyc_opendata_etl_spark.operators.text import fingerprint
-
-    (
-        deleted_docs.select(fingerprint(text_col).alias("h"))
-        .groupBy("h")
-        .agg((-F.count(F.lit(1))).cast("long").alias("cnt"))
-        .withColumn("b", F.lit(TAKEDOWN_B))
-        .write.mode("append")
-        .partitionBy("b")
-        .parquet(index_path)
-    )
-
-
-def compact_ingest_index(
-    spark: SparkSession, index_path: str, num_files: int = 8
-) -> None:
-    """Fold the ingest index's delta log to its live state under the
-    reserved ``b = -1`` partition: one row per canon with net refcount
-    > 0. Probes sum deltas anyway, so no answer changes — the pass
-    retires log length and drops dead canons. Run with the stream
-    STOPPED and its checkpoint committed: folding erases per-batch
-    partition boundaries, so an uncommitted batch could no longer
-    replay idempotently (the standard maintenance-window rule for any
-    compaction under a streaming writer). Uses the temp-swap rename
-    protocol shared with operators/index_maintenance. ``num_files``
-    sizes the folded layout — raise it with corpus canon count (the
-    build_fingerprint_index_rc knob, r13 review consistency)."""
-    from nyc_opendata_etl_spark.operators.index_maintenance import _swap_dir
-
-    folded = (
-        spark.read.parquet(index_path)
-        .groupBy("h")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .filter(F.col("cnt") > 0)
-        .withColumn("b", F.lit(COMPACTED_B))
-    )
-    _swap_dir(
-        index_path,
-        lambda tmp: (
-            folded.repartitionByRange(num_files, "h")
-            .sortWithinPartitions("h")
-            .write.partitionBy("b")
-            .parquet(tmp)
-        ),
-    )

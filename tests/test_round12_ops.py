@@ -682,20 +682,6 @@ def test_compact_lsh_index_deletes_and_dedups(spark, tmp_path):
     assert out.get(3) != 0
 
 
-def test_compact_fingerprint_index_dedups(spark, tmp_path):
-    from nyc_opendata_etl_spark.operators import index_maintenance as im
-
-    path = str(tmp_path / "fp")
-    docs = _docs(spark)
-    dedup.build_fingerprint_index(docs, path)
-    dedup.update_fingerprint_index(docs, path)  # same hashes again
-    before = spark.read.parquet(path).count()
-    im.compact_fingerprint_index(spark, path)
-    after = spark.read.parquet(path)
-    assert after.count() < before
-    assert after.count() == after.distinct().count()
-
-
 def test_compact_ivfpq_index_deletes_codes(spark, tmp_path):
     from nyc_opendata_etl_spark.operators import index_maintenance as im
 

@@ -1,10 +1,10 @@
-"""Round-12 extension pins: the refcounted fingerprint index — the
-deletion-capable variant operators/index_maintenance.py documented as
-missing ("a deployment needing fingerprint deletion adds a (h,
-refcount) variant"). Contract under test: (h, cnt) delta-log appends
-for both ingest and takedown, probe-time SUM semantics (deletes visible
-immediately, canons shared with survivors stay live), and compaction
-folding the log to exactly what a fresh build of the survivors writes.
+"""Round-12 extension pins: the fingerprint index of operators/dedup —
+a refcounted ``(h, cnt)`` delta log partitioned by ``b``, shared by the
+staged incremental-dedup queries and the streaming ingest. Contract
+under test: delta-log appends for both ingest and takedown, probe-time
+SUM semantics (deletes visible immediately, canons shared with
+survivors stay live), and compaction folding the log to exactly what a
+fresh build of the survivors writes.
 """
 
 from __future__ import annotations
@@ -34,66 +34,69 @@ def _docs(spark):
 
 
 def _probe_ids(spark, path, batch) -> set[int]:
-    idx = spark.read.parquet(path)
+    idx = dedup.read_fingerprint_index(spark, path)
     return {
-        r["doc_id"]
-        for r in dedup.incremental_new_docs_rc(batch, idx).collect()
+        r["doc_id"] for r in dedup.incremental_new_docs(batch, idx).collect()
     }
 
 
+def _log_rows(spark, path) -> list[tuple]:
+    """Sorted ``(h, cnt, b)`` rows of the log at ``path``."""
+    return sorted(map(tuple, dedup.read_fingerprint_index(spark, path).collect()))
+
+
 def test_build_rc_counts_docs_per_canon(spark, tmp_path):
-    path = str(tmp_path / "fp_rc")
-    dedup.build_fingerprint_index_rc(_docs(spark), path)
+    path = str(tmp_path / "fp")
+    dedup.build_fingerprint_index(_docs(spark), path)
     rows = spark.read.parquet(path).collect()
     # 3 distinct canons; the shared one carries refcount 2
     assert sorted(r["cnt"] for r in rows) == [1, 1, 2]
 
 
 def test_delete_shared_canon_keeps_survivor_live(spark, tmp_path):
-    path = str(tmp_path / "fp_rc")
+    path = str(tmp_path / "fp")
     docs = _docs(spark)
-    dedup.build_fingerprint_index_rc(docs, path)
+    dedup.build_fingerprint_index(docs, path)
     # withdraw doc 3 — doc 0 still shares the canon, so a re-ingested
     # byte-identical copy must NOT be flagged new (bare-hash index
     # could only get this right by refusing to delete at all)
-    dedup.delete_from_fingerprint_index_rc(
+    dedup.delete_from_fingerprint_index(
         docs.filter(F.col("doc_id") == 3), path
     )
     reingest = spark.createDataFrame([(9, DUP_TEXT)], "doc_id long, text string")
     assert _probe_ids(spark, path, reingest) == set()
     # withdraw doc 0 too — the canon's live refcount hits 0 and the
     # probe flips to "new" IMMEDIATELY, before any compaction
-    dedup.delete_from_fingerprint_index_rc(
+    dedup.delete_from_fingerprint_index(
         docs.filter(F.col("doc_id") == 0), path
     )
     assert _probe_ids(spark, path, reingest) == {9}
 
 
 def test_compact_rc_equals_fresh_build_of_survivors(spark, tmp_path):
-    live = str(tmp_path / "fp_rc")
-    fresh = str(tmp_path / "fp_rc_fresh")
+    live = str(tmp_path / "fp")
+    fresh = str(tmp_path / "fp_fresh")
     docs = _docs(spark)
-    dedup.build_fingerprint_index_rc(docs.filter(F.col("doc_id") <= 1), live)
-    dedup.update_fingerprint_index_rc(docs.filter(F.col("doc_id") >= 2), live)
-    dedup.delete_from_fingerprint_index_rc(
+    dedup.build_fingerprint_index(docs.filter(F.col("doc_id") <= 1), live)
+    dedup.update_fingerprint_index(docs.filter(F.col("doc_id") >= 2), live)
+    dedup.delete_from_fingerprint_index(
         docs.filter(F.col("doc_id").isin(0, 2)), live
     )
-    im.compact_fingerprint_index_rc(spark, live)
-    dedup.build_fingerprint_index_rc(
+    im.compact_fingerprint_index(spark, live)
+    dedup.build_fingerprint_index(
         docs.filter(F.col("doc_id").isin(1, 3)), fresh
     )
-    got = sorted(map(tuple, spark.read.parquet(live).collect()))
-    want = sorted(map(tuple, spark.read.parquet(fresh).collect()))
-    assert got == want
+    got = _log_rows(spark, live)
+    assert got == _log_rows(spark, fresh)
     # and dead canons are gone as ROWS, not carried at cnt<=0
-    assert all(cnt > 0 for _, cnt in got)
+    assert all(cnt > 0 and b == dedup.COMPACTED_B for _, cnt, b in got)
 
 
 def test_compact_rc_changes_no_probe_answer(spark, tmp_path):
-    path = str(tmp_path / "fp_rc")
+    path = str(tmp_path / "fp")
     docs = _docs(spark)
-    dedup.build_fingerprint_index_rc(docs, path)
-    dedup.delete_from_fingerprint_index_rc(
+    dedup.build_fingerprint_index(docs, path)
+    dedup.delete_from_fingerprint_index(
         docs.filter(F.col("doc_id").isin(0, 3)), path
     )
     batch = spark.createDataFrame(
@@ -101,26 +104,8 @@ def test_compact_rc_changes_no_probe_answer(spark, tmp_path):
         "doc_id long, text string",
     )
     before = _probe_ids(spark, path, batch)
-    im.compact_fingerprint_index_rc(spark, path)
+    im.compact_fingerprint_index(spark, path)
     assert _probe_ids(spark, path, batch) == before == {10, 12}
-
-
-def test_rc_probe_matches_bare_probe_on_delete_free_log(spark, tmp_path):
-    bare = str(tmp_path / "fp")
-    rc = str(tmp_path / "fp_rc")
-    docs = _docs(spark)
-    dedup.build_fingerprint_index(docs.filter(F.col("doc_id") <= 2), bare)
-    dedup.build_fingerprint_index_rc(docs.filter(F.col("doc_id") <= 2), rc)
-    batch = spark.createDataFrame(
-        [(3, DUP_TEXT), (4, "brand new text qqq")], "doc_id long, text string"
-    )
-    want = {
-        r["doc_id"]
-        for r in dedup.incremental_new_docs(
-            batch, spark.read.parquet(bare)
-        ).collect()
-    }
-    assert _probe_ids(spark, rc, batch) == want == {4}
 
 
 # Tiny alphabet with case + runs of whitespace so distinct raw strings
@@ -168,31 +153,31 @@ def test_rc_index_matches_brute_force_on_arbitrary_interleavings(spark, data):
                 list(enumerate(texts, start)), "doc_id long, text string"
             )
 
-        dedup.build_fingerprint_index_rc(df(corpus), path)
+        dedup.build_fingerprint_index(df(corpus), path)
         if upd:
-            dedup.update_fingerprint_index_rc(df(upd, len(corpus)), path)
+            dedup.update_fingerprint_index(df(upd, len(corpus)), path)
         if gone:
-            dedup.delete_from_fingerprint_index_rc(df(gone), path)
+            dedup.delete_from_fingerprint_index(df(gone), path)
         got_new = sorted(
             r["doc_id"]
-            for r in dedup.incremental_new_docs_rc(
-                df(probe), spark.read.parquet(path)
+            for r in dedup.incremental_new_docs(
+                df(probe), dedup.read_fingerprint_index(spark, path)
             ).collect()
         )
         assert got_new == want_new
-        im.compact_fingerprint_index_rc(spark, path)
-        got_rows = sorted(map(tuple, spark.read.parquet(path).collect()))
-        want_rows = sorted((h, rc[h]) for h in live)
+        im.compact_fingerprint_index(spark, path)
+        got_rows = _log_rows(spark, path)
+        want_rows = sorted((h, rc[h], dedup.COMPACTED_B) for h in live)
         assert got_rows == want_rows
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
 
 def test_rc_probe_never_shuffles_the_index(spark, tmp_path):
-    path = str(tmp_path / "fp_rc")
-    dedup.build_fingerprint_index_rc(_docs(spark), path)
-    plan = dedup.incremental_new_docs_rc(
-        _docs(spark), spark.read.parquet(path)
+    path = str(tmp_path / "fp")
+    dedup.build_fingerprint_index(_docs(spark), path)
+    plan = dedup.incremental_new_docs(
+        _docs(spark), dedup.read_fingerprint_index(spark, path)
     )._jdf.queryExecution().executedPlan().toString()
     # batch hashes broadcast into the index scan; no sort-merge join
     # (which would shuffle the full index on h) anywhere in the probe
@@ -265,14 +250,12 @@ def test_index_or_none_missing_vs_corrupt(spark, tmp_path):
     medium)."""
     import pytest
 
-    from nyc_opendata_etl_spark.streaming.ingest import _index_or_none
-
-    assert _index_or_none(spark, str(tmp_path / "never_written")) is None
+    assert dedup.read_fingerprint_index(spark, str(tmp_path / "never_written")) is None
     bad = tmp_path / "idx"
     bad.mkdir()
     (bad / "part-00000.parquet").write_bytes(b"this is not a parquet footer")
     with pytest.raises(Exception):
-        df = _index_or_none(spark, str(bad))
+        df = dedup.read_fingerprint_index(spark, str(bad))
         # schema inference may defer the footer read; force it
         if df is not None:
             df.collect()
@@ -322,17 +305,115 @@ def test_dedup_ingest_takedown_reopens_canon(spark, tmp_path):
     ingest.dedup_ingest_batch(_ingest_docs(spark, [(2, "aa")]), 1, idx, out)
     assert _accepted_ids(spark, out) == {0, 1}
     # withdraw doc 0 -> canon refcount 0 -> next batch re-accepts
-    ingest.takedown_from_ingest_index(_ingest_docs(spark, [(0, "aa")]), idx)
+    dedup.delete_from_fingerprint_index(_ingest_docs(spark, [(0, "aa")]), idx)
     ingest.dedup_ingest_batch(_ingest_docs(spark, [(3, "aa")]), 2, idx, out)
     assert _accepted_ids(spark, out) == {0, 1, 3}
     # compaction folds to live rows only and changes no later answer
-    ingest.compact_ingest_index(spark, idx)
-    folded = spark.read.parquet(idx).collect()
-    assert all(r["cnt"] > 0 and r["b"] == ingest.COMPACTED_B for r in folded)
+    im.compact_fingerprint_index(spark, idx)
+    folded = _log_rows(spark, idx)
+    assert all(cnt > 0 and b == dedup.COMPACTED_B for _, cnt, b in folded)
     ingest.dedup_ingest_batch(
         _ingest_docs(spark, [(4, "aa"), (5, "dd")]), 3, idx, out
     )
     assert _accepted_ids(spark, out) == {0, 1, 3, 5}
+
+
+def test_fully_withdrawn_index_keeps_the_ingest_running(spark, tmp_path):
+    """Compacting a log whose every canon was withdrawn leaves a
+    directory with no part file; the next batch must still read it as
+    an empty index (an inferred-schema read raised
+    UNABLE_TO_INFER_SCHEMA, so every replay of the batch failed). An
+    index built from an empty corpus is the same empty relation."""
+    from nyc_opendata_etl_spark.streaming import ingest
+
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    ingest.dedup_ingest_batch(_ingest_docs(spark, [(0, "aa")]), 0, idx, out)
+    dedup.delete_from_fingerprint_index(_ingest_docs(spark, [(0, "aa")]), idx)
+    im.compact_fingerprint_index(spark, idx)
+    assert _log_rows(spark, idx) == []
+    ingest.dedup_ingest_batch(_ingest_docs(spark, [(1, "bb")]), 1, idx, out)
+    assert _accepted_ids(spark, out) == {0, 1}
+
+    empty = str(tmp_path / "empty")
+    dedup.build_fingerprint_index(_ingest_docs(spark, []), empty)
+    batch = _ingest_docs(spark, [(5, "aa"), (6, "bb"), (7, "AA ")])
+    assert _probe_ids(spark, empty, batch) == {5, 6, 7}
+
+
+def test_built_index_seeds_the_ingest_and_rebuild_replaces_the_log(
+    spark, tmp_path
+):
+    """One index format: a corpus indexed by build_fingerprint_index
+    seeds the streaming ingest, which rejects that corpus's canons; a
+    rebuild over a log holding takedowns and batch partitions leaves
+    only the build's ``b = -1`` rows (the session's dynamic partition
+    overwrite would have kept the others)."""
+    import os
+
+    from nyc_opendata_etl_spark.streaming import ingest
+
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    dedup.build_fingerprint_index(_ingest_docs(spark, [(0, "aa"), (1, "bb")]), idx)
+    batch = _ingest_docs(spark, [(5, "AA "), (6, "cc"), (7, "bb")])
+    ingest.dedup_ingest_batch(batch, 0, idx, out)
+    assert _accepted_ids(spark, out) == {6}
+
+    dedup.delete_from_fingerprint_index(_ingest_docs(spark, [(0, "aa")]), idx)
+    ingest.dedup_ingest_batch(_ingest_docs(spark, [(8, "dd")]), 1, idx, out)
+    assert {r[2] for r in _log_rows(spark, idx)} == {
+        dedup.COMPACTED_B, dedup.TAKEDOWN_B, 0, 1
+    }
+    dedup.build_fingerprint_index(_ingest_docs(spark, [(9, "ee")]), idx)
+    assert [(cnt, b) for _, cnt, b in _log_rows(spark, idx)] == [
+        (1, dedup.COMPACTED_B)
+    ]
+    parts = sorted(p for p in os.listdir(idx) if p.startswith("b="))
+    assert parts == [f"b={dedup.COMPACTED_B}"]
+
+
+def test_interrupted_compaction_leaves_the_old_log_serving(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that dies after writing its ``__compact_tmp``
+    sibling must leave the live log answering exactly as before, and
+    a later compaction must succeed over the leftover tmp directory."""
+    import os
+
+    import pytest
+
+    path = str(tmp_path / "fp")
+    docs = _docs(spark)
+    dedup.build_fingerprint_index(docs.filter(F.col("doc_id") <= 1), path)
+    dedup.update_fingerprint_index(docs.filter(F.col("doc_id") >= 2), path)
+    dedup.delete_from_fingerprint_index(docs.filter(F.col("doc_id") == 0), path)
+    batch = spark.createDataFrame(
+        [(10, DUP_TEXT), (11, DUP_TEXT + "!"), (12, "never seen before zzz")],
+        "doc_id long, text string",
+    )
+    before_ids, before_rows = _probe_ids(spark, path, batch), _log_rows(spark, path)
+    tmp = path + "__compact_tmp"
+    swap = im._swap_dir
+
+    def killed_after_tmp_write(live, rebuild):
+        def rebuild_then_die(t):
+            rebuild(t)
+            assert os.path.isdir(t)
+            raise RuntimeError("killed after writing the tmp relation")
+
+        swap(live, rebuild_then_die)
+
+    monkeypatch.setattr(im, "_swap_dir", killed_after_tmp_write)
+    with pytest.raises(RuntimeError, match="killed"):
+        im.compact_fingerprint_index(spark, path)
+    assert os.path.isdir(tmp)
+    assert _log_rows(spark, path) == before_rows
+    assert _probe_ids(spark, path, batch) == before_ids == {12}
+
+    monkeypatch.setattr(im, "_swap_dir", swap)
+    im.compact_fingerprint_index(spark, path)
+    assert not os.path.exists(tmp)
+    assert all(b == dedup.COMPACTED_B for _, _, b in _log_rows(spark, path))
+    assert _probe_ids(spark, path, batch) == before_ids
 
 
 def test_stream_dedup_ingest_end_to_end(spark, tmp_path):
