@@ -9,8 +9,10 @@ single giant JSON line holding 140 per-query timings gets its head
 truncated and never parses. Therefore:
 
 - each query's timing prints as its own short JSON line as it finishes
-  (``{"query": ..., "sec": ..., "construct_s": ...}``; ``sec`` is
-  construction plus execution, see ``tools/harness.measure``) —
+  (``{"query": ..., "sec": ..., "construct_s": ...,
+  "codegen_compiles": ...}``; ``sec`` is construction plus execution,
+  ``codegen_compiles`` the classes both compiled, see
+  ``tools/harness.measure``) —
   individually parseable, and the most recent ones survive any tail
   window;
 - the full payload (totals + every timing) is written to
@@ -135,6 +137,7 @@ def main() -> None:
     qs = dict(sorted(queries().items()))
     timings: dict[str, float] = {}
     construct_s: dict[str, float] = {}
+    codegen_compiles: dict[str, int] = {}
     steal_pcts: dict[str, float] = {}
     iowait_pcts: dict[str, float] = {}
     steal_reruns: dict[str, dict[str, float]] = {}
@@ -170,6 +173,7 @@ def main() -> None:
         row = {"query": name, "sec": m["sec"]}
         if "construct_s" in m:
             construct_s[name] = row["construct_s"] = m["construct_s"]
+            codegen_compiles[name] = row["codegen_compiles"] = m["codegen_compiles"]
         if pcts is not None:
             steal_pcts[name] = pcts[0]
             iowait_pcts[name] = pcts[1]
@@ -187,6 +191,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "construct_s": construct_s,
+        "codegen_compiles": codegen_compiles,
         "sf": sf_val,
         "staging_sec": staging_sec,
         "staging_failed": staging_failed,

@@ -15,26 +15,81 @@ two implementations:
   this container; guarded, like every network dependency in this repo).
 
 Both keep the reference's empty-input no-op guard (``dim_loader.py:24-26``).
+On the parquet path the guard rides the write: the rows are counted by
+an ``Observation`` on the write job, into a hidden staging directory
+beside the table, and only a non-zero count moves the files into the
+table (Hadoop ``FileSystem`` renames, so remote URIs work too). A
+separate ``isEmpty`` job would cost a whole pass per table, and its
+``limit(1)`` stage never hits the codegen cache: each plan numbers its
+limit counter afresh.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import uuid
+
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+
+
+def _move(fs, src, dst) -> None:
+    """Move the file or directory of status ``src`` to ``dst``. A
+    directory whose ``dst`` exists (the table, an existing partition) is
+    merged child by child; anything else moves in one rename, a file
+    replacing its namesake (only ``_SUCCESS`` can collide: part file
+    names carry the writing job's id). A checksummed file system renames
+    each ``.crc`` with its file."""
+    if src.isDirectory() and fs.exists(dst):
+        for child in fs.listStatus(src.getPath()):
+            _move(fs, child, dst.suffix("/" + child.getPath().getName()))
+        return
+    fs.delete(dst, False)
+    if not fs.rename(src.getPath(), dst):
+        raise OSError(f"could not move {src.getPath()} to {dst}")
 
 
 def append_parquet(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> int:
-    """Append to a parquet table; returns -1 when data was written and
-    0 on the empty-input no-op (rows are NOT counted — counting would
-    cost a second job; callers needing counts should count upstream)."""
-    if df.isEmpty():
-        return 0
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    return -1  # rows not counted — avoid a second job; callers may count
+    """Append to a parquet table; returns the rows written, 0 on the
+    empty-input no-op.
+
+    The rows are counted by an ``Observation`` riding the write job
+    itself. The write lands in a fresh hidden sibling of ``path``; only
+    a non-zero count moves its files into ``path``, so an empty input
+    (which Spark still writes as one schema-only part file) and a failed
+    write both leave ``path`` as it was, and create none of its missing
+    ancestors. The staging directory is always removed."""
+    spark = df.sparkSession
+    target = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
+    target = fs.makeQualified(target)
+    parent = target.getParent()
+    staging = parent.suffix(f"/.{target.getName()}.staging-{uuid.uuid4().hex}")
+    created = []  # the missing ancestors the staging write creates, innermost first
+    while parent is not None and not fs.exists(parent):
+        created.append(parent)
+        parent = parent.getParent()
+    obs = Observation()
+    rows = 0
+    try:
+        writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("append")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging.toString())
+        rows = int(obs.get["rows"])
+        if rows:
+            _move(fs, fs.getFileStatus(staging), target)
+        return rows
+    finally:
+        fs.delete(staging, True)
+        if not rows:
+            for d in created:
+                try:
+                    fs.delete(d, False)
+                except Py4JJavaError:  # not empty: another writer is using it
+                    break
 
 
 def append_bigquery(df: DataFrame, table_id: str) -> None:
@@ -67,11 +122,14 @@ def append_bigquery_table(df: DataFrame, settings, logical_table: str) -> None:
 
 def write_warehouse(
     tables: dict[str, DataFrame], base_path: str, partition_overrides: dict[str, list[str]] | None = None
-) -> None:
-    """Write every star-schema output under ``base_path/<table>/``."""
+) -> dict[str, int]:
+    """Write every star-schema output under ``base_path/<table>/``;
+    returns the rows each table appended."""
     overrides = partition_overrides or {}
-    for name, df in tables.items():
-        append_parquet(df, f"{base_path}/{name}", overrides.get(name))
+    return {
+        name: append_parquet(df, f"{base_path}/{name}", overrides.get(name))
+        for name, df in tables.items()
+    }
 
 
 def append_parquet_sized(
@@ -93,28 +151,18 @@ def append_parquet_sized(
     so each hive partition's rows co-locate before the write (one file
     per partition value per ~target, not one per task per value).
 
-    Returns the number of rows written, measured by an ``Observation``
-    riding the write job itself — no extra count pass, no upstream
-    re-execution (an empty input returns 0 after a trivially empty
-    write).
+    Same staged, observed commit as :func:`append_parquet`: returns the
+    rows written, and an empty input is the same no-op.
     """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", None)
     spark.conf.set(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(target_file_bytes)
     )
-    obs = Observation()
     try:
-        balanced = df.observe(obs, F.count(F.lit(1)).alias("n_rows")).hint(
-            "rebalance", *(partition_by or [])
+        return append_parquet(
+            df.hint("rebalance", *(partition_by or [])), path, partition_by
         )
-        writer = balanced.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
@@ -122,7 +170,6 @@ def append_parquet_sized(
             spark.conf.set(
                 "spark.sql.adaptive.advisoryPartitionSizeInBytes", prev
             )
-    return int(obs.get["n_rows"])
 
 
 def write_bucketed(

@@ -83,8 +83,11 @@ def test_job_counter_reads_a_running_job_next_time():
 def test_measure_splits_construction_from_execution(spark):
     counter = JobCounter.for_spark(spark)
     m = measure(spark, queries()["q1_pricing_summary"], SF)
-    assert set(m) == {"construct_s", "exec_s", "sec"}
+    assert set(m) == {"construct_s", "exec_s", "sec", "codegen_compiles"}
     assert abs(m["construct_s"] + m["exec_s"] - m["sec"]) <= 0.002
     assert m["construct_s"] >= 0 and m["exec_s"] > 0
+    assert m["codegen_compiles"] >= 0
+    # the same query again finds its generated classes cached
+    assert measure(spark, queries()["q1_pricing_summary"], SF)["codegen_compiles"] == 0
     assert counter.read()["jobs"] >= 1
     assert counter.evicted == 0

@@ -7,6 +7,7 @@ import os
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.sources import sinks
@@ -184,3 +185,56 @@ def test_append_parquet_sized_merges_small_output_files(spark, tmp_path):
     ]
     assert all(1 <= n <= 2 for n in files_per_part), files_per_part
     assert spark.read.parquet(parted).count() == 10_000
+
+
+def _files(root) -> list[str]:
+    """Every file under ``root``, checksums and markers included, as
+    paths relative to it."""
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, fs in os.walk(root)
+        for f in fs
+    )
+
+
+@pytest.mark.parametrize("partition_by", [None, ["part"]])
+@pytest.mark.parametrize("sink", [sinks.append_parquet, sinks.append_parquet_sized])
+def test_append_commits_only_observed_rows(spark, tmp_path, sink, partition_by):
+    """The empty-input no-op (dim_loader.py:24-26) rides the write: the
+    write lands in a staging directory and only an observed count above
+    0 moves it into the table. An empty append and a write that fails
+    mid-job leave the table's files exactly as they were, an empty
+    append to a missing path creates nothing, and no staging directory
+    outlives any of them."""
+    df = spark.range(20).selectExpr("id", "id % 3 AS part")
+    table = str(tmp_path / "t")
+    assert sink(df, table, partition_by) == 20
+    # merges into the existing table (partitions 0-2) and adds one (3)
+    more = df.filter("id >= 10").selectExpr("id", "id % 4 AS part")
+    assert sink(more, table, partition_by) == 10
+    before = _files(table)
+    crcs = {f for f in before if f.endswith(".crc")}
+    # each checksum moved with its file
+    assert {os.path.join(os.path.dirname(c), os.path.basename(c)[1:-4]) for c in crcs} == (
+        set(before) - crcs
+    )
+
+    assert sink(df.filter(F.lit(False)), table, partition_by) == 0
+    assert _files(table) == before
+
+    boom = df.withColumn(
+        "id",
+        F.when(F.col("id") == 7, F.raise_error(F.lit("boom"))).otherwise(F.col("id")),
+    )
+    with pytest.raises(Exception, match="boom"):
+        sink(boom, table, partition_by)
+    assert _files(table) == before
+
+    ids = [r.id for r in spark.read.parquet(table).select("id").collect()]
+    assert sorted(ids) == sorted([*range(20), *range(10, 20)])
+
+    assert sink(df.filter(F.lit(False)), str(tmp_path / "missing"), partition_by) == 0
+    assert sink(df.filter(F.lit(False)), str(tmp_path / "a" / "b" / "t"), partition_by) == 0
+    with pytest.raises(Exception, match="boom"):
+        sink(boom, str(tmp_path / "a" / "b" / "t"), partition_by)
+    assert os.listdir(tmp_path) == ["t"]  # no missing table, no staging left

@@ -368,3 +368,25 @@ def test_stamped_dim_builders_keep_an_all_null_row(spark):
         (W.build_vehicle_dim, raw_parking),
     ):
         assert build(raw).count() >= 1, build.__name__
+
+
+def test_warm_star_load_compiles_nothing(spark, tmp_path):
+    """A second identical star build and warehouse write finds every
+    generated class in the codegen cache: the cache holds the load's
+    working set, and the sink runs no ``limit(1)`` pre-job (whose stage
+    embeds a freshly numbered counter, so it never hits the cache)."""
+    from nyc_opendata_etl_spark.queries import pipeline
+    from nyc_opendata_etl_spark.sources.sinks import write_warehouse
+    from tests.test_harness import SF
+    from tools.harness import codegen_compiles
+
+    def load(out):
+        raw_311 = pipeline._synth_raw_311(spark, SF)
+        raw_parking = pipeline._synth_raw_parking(spark, SF)
+        return write_warehouse(W.build_star(spark, raw_311, raw_parking), out)
+
+    first = load(str(tmp_path / "first"))
+    assert first["fact_311_complaints"] > 0 and first["fact_parking_tickets"] > 0
+    before = codegen_compiles(spark)
+    assert load(str(tmp_path / "second")) == first
+    assert codegen_compiles(spark) - before == 0

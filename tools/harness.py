@@ -1,7 +1,8 @@
 """The measurement core every harness in this repo shares: session
 set-up (``session``), the bootstrap warmup (``warmup``), the timed
-build-then-execute of a registered query (``measure``) and the
-status-store job counter (``JobCounter``). One copy of each, so a
+build-then-execute of a registered query (``measure``), the
+status-store job counter (``JobCounter``) and the JVM's codegen
+compilation count (``codegen_compiles``). One copy of each, so a
 number from one harness means the same thing in another.
 """
 
@@ -43,13 +44,22 @@ def warmup(spark, sf_dir: str) -> None:
         print(f"warmup incomplete: {e}", file=sys.stderr)
 
 
+def codegen_compiles(spark) -> int:
+    """Janino compilations this JVM has run so far: a generated class
+    found in Spark's codegen cache is not counted."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def measure(spark, fn, sf_dir: str) -> dict[str, float]:
     """Build ``fn(spark, sf_dir)``, then run it through the noop sink.
 
     ``construct_s`` is the time until ``fn`` returns its DataFrame:
     Python plan building plus any eager jobs ``fn`` runs (probes, cache
     fills, checkpoints). ``exec_s`` is the noop write. ``sec`` is both.
+    ``codegen_compiles`` counts the classes both steps compiled.
     Exceptions from either step propagate."""
+    c0 = codegen_compiles(spark)
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     t1 = time.perf_counter()
@@ -59,6 +69,7 @@ def measure(spark, fn, sf_dir: str) -> dict[str, float]:
         "construct_s": round(t1 - t0, 3),
         "exec_s": round(t2 - t1, 3),
         "sec": round(t2 - t0, 3),
+        "codegen_compiles": codegen_compiles(spark) - c0,
     }
 
 

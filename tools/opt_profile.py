@@ -79,7 +79,7 @@ def main() -> int:
             print(
                 f"{name} rep{i}: {m['sec']}s construct={m['construct_s']}s "
                 f"exec={m['exec_s']}s jobs={c['jobs']} stages={c['stages']} "
-                f"tasks={c['tasks']}",
+                f"tasks={c['tasks']} compiles={m['codegen_compiles']}",
                 flush=True,
             )
         if plan_dir is not None:
