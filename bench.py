@@ -10,8 +10,9 @@ truncated and never parses. Therefore:
 
 - each query's timing prints as its own short JSON line as it finishes
   (``{"query": ..., "sec": ..., "construct_s": ...,
-  "codegen_compiles": ...}``; ``sec`` is construction plus execution,
-  ``codegen_compiles`` the classes both compiled, see
+  "codegen_compiles": ..., "child_cpu_s": ...}``; ``sec`` is
+  construction plus execution, ``codegen_compiles`` the classes both
+  compiled, ``child_cpu_s`` the CPU of processes the JVM forked, see
   ``tools/harness.measure``) —
   individually parseable, and the most recent ones survive any tail
   window;
@@ -138,6 +139,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     construct_s: dict[str, float] = {}
     codegen_compiles: dict[str, int] = {}
+    child_cpu_s: dict[str, float | None] = {}
     steal_pcts: dict[str, float] = {}
     iowait_pcts: dict[str, float] = {}
     steal_reruns: dict[str, dict[str, float]] = {}
@@ -174,6 +176,7 @@ def main() -> None:
         if "construct_s" in m:
             construct_s[name] = row["construct_s"] = m["construct_s"]
             codegen_compiles[name] = row["codegen_compiles"] = m["codegen_compiles"]
+            child_cpu_s[name] = row["child_cpu_s"] = m["child_cpu_s"]
         if pcts is not None:
             steal_pcts[name] = pcts[0]
             iowait_pcts[name] = pcts[1]
@@ -192,6 +195,7 @@ def main() -> None:
         "queries": timings,
         "construct_s": construct_s,
         "codegen_compiles": codegen_compiles,
+        "child_cpu_s": child_cpu_s,
         "sf": sf_val,
         "staging_sec": staging_sec,
         "staging_failed": staging_failed,

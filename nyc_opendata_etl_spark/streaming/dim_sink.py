@@ -100,7 +100,12 @@ def scd2_upsert_batch(
     arbitrary-but-deterministic max of the tracked tuple on exact
     ties) is applied; intermediate same-batch versions are below the
     CDC feed's resolution, the standard compaction every CDC consumer
-    applies."""
+    applies.
+
+    The snapshot is read with a declared schema, the batch's key and
+    tracked types plus the three SCD2 columns, so a batch runs no
+    schema-inference job. A seed written with a narrower integer type
+    (an ``int`` key under a ``long`` CDC feed) reads widened."""
     from pyspark.sql import functions as F
 
     from nyc_opendata_etl_spark.operators.scd import scd2_merge
@@ -112,7 +117,12 @@ def scd2_upsert_batch(
             f"scd2_upsert_batch: no snapshot below batch {batch_id} at "
             f"{path}; call init_scd2_dim first (seed version {SEED_VERSION})"
         )
-    dim = spark.read.parquet(f"{path}/v={max(below)}")
+    snapshot = (
+        batch_df.select(*natural_key, *tracked).schema
+        .add("effective_from", "date").add("effective_to", "date")
+        .add("is_current", "boolean")
+    )
+    dim = spark.read.schema(snapshot).parquet(f"{path}/v={max(below)}")
     latest = batch_df.groupBy(*natural_key).agg(
         F.max(
             F.struct(F.col(eff_date_col).alias("__eff__"), *[F.col(t) for t in tracked])

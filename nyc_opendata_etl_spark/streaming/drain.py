@@ -8,6 +8,11 @@ at-most-once. A throwaway run passes a temporary directory instead.
 ``Trigger.AvailableNow`` makes the drain a bounded backfill (the
 reference's monthly ``load_history`` loop); drop the trigger for a
 continuous pipeline.
+
+The checkpoint (offset, commit and source logs, and any state-store
+deltas) is written through the Hadoop ``FileSystem`` API, a create and
+a rename per file, which forks no process on local disk; the session
+sets this (``session.get_spark``), so every drain inherits it.
 """
 
 from __future__ import annotations

@@ -1,10 +1,11 @@
 """The shared measurement core (tools/harness.py): the job counter's
-eviction rule without Spark, and ``measure`` on a real query."""
+eviction rule without Spark, ``measure`` on a real query, and the
+JVM's child-process CPU."""
 
 from __future__ import annotations
 
 from nyc_opendata_etl_spark.queries import queries
-from tools.harness import JobCounter, measure
+from tools.harness import JobCounter, jvm_child_cpu_s, measure
 
 SF = "/root/testdata/sf0.001"
 
@@ -83,11 +84,24 @@ def test_job_counter_reads_a_running_job_next_time():
 def test_measure_splits_construction_from_execution(spark):
     counter = JobCounter.for_spark(spark)
     m = measure(spark, queries()["q1_pricing_summary"], SF)
-    assert set(m) == {"construct_s", "exec_s", "sec", "codegen_compiles"}
+    assert set(m) == {"construct_s", "exec_s", "sec", "codegen_compiles", "child_cpu_s"}
     assert abs(m["construct_s"] + m["exec_s"] - m["sec"]) <= 0.002
     assert m["construct_s"] >= 0 and m["exec_s"] > 0
     assert m["codegen_compiles"] >= 0
+    assert m["child_cpu_s"] >= 0  # a float on Linux
     # the same query again finds its generated classes cached
     assert measure(spark, queries()["q1_pricing_summary"], SF)["codegen_compiles"] == 0
     assert counter.read()["jobs"] >= 1
     assert counter.evicted == 0
+
+
+def test_jvm_child_cpu_counts_a_reaped_fork_and_runs_no_job(spark):
+    gateway = spark.sparkContext._gateway
+    argv = gateway.new_array(gateway.jvm.java.lang.String, 3)
+    argv[0], argv[1] = "sh", "-c"
+    argv[2] = "i=0; while [ $i -lt 300000 ]; do i=$((i+1)); done"
+    counter = JobCounter.for_spark(spark)
+    before = jvm_child_cpu_s(spark)
+    assert gateway.jvm.java.lang.Runtime.getRuntime().exec(argv).waitFor() == 0
+    assert jvm_child_cpu_s(spark) - before > 0.05
+    assert counter.read()["jobs"] == 0

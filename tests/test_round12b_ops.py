@@ -512,6 +512,37 @@ def test_scd2_sink_matches_sequential_batch_merges(spark, tmp_path):
     assert cur == {1: "a2", 2: "b", 3: "c"}
 
 
+def test_scd2_sink_widens_an_int_seed_key_under_a_long_feed(spark, tmp_path):
+    """The sink reads each snapshot with the batch's types, so a seed
+    dimension whose key is ``int`` folds a ``long``-keyed CDC feed to
+    the same rows as merging the batches in order."""
+    import datetime as dt
+
+    from nyc_opendata_etl_spark.operators.scd import scd2_merge
+    from nyc_opendata_etl_spark.streaming import dim_sink
+
+    d0 = dt.date(2024, 1, 1)
+    dim = spark.createDataFrame(
+        [(1, "a", d0, None, True), (2, "b", d0, None, True)],
+        "k int, attr string, effective_from date, effective_to date, "
+        "is_current boolean",
+    )
+    b0 = _upd(spark, [(1, "a2", dt.date(2025, 1, 1)), (3, "c", dt.date(2025, 1, 1))])
+    b1 = _upd(spark, [(2, "b2", dt.date(2025, 2, 1)), (3, "c", dt.date(2025, 2, 1))])
+    path = str(tmp_path / "dim")
+    dim_sink.init_scd2_dim(dim, path)
+    dim_sink.scd2_upsert_batch(b0, 0, path, ["k"], ["attr"])
+    dim_sink.scd2_upsert_batch(b1, 1, path, ["k"], ["attr"])
+    got = dim_sink.read_scd2_dim(spark, path)
+    want = scd2_merge(
+        scd2_merge(dim, b0, natural_key=["k"], tracked=["attr"]),
+        b1, natural_key=["k"], tracked=["attr"],
+    )
+    assert dict(got.dtypes)["k"] == "bigint"
+    assert _rows(got) == _rows(want)
+    assert {r[0]: r[1] for r in _rows(got) if r[4]} == {1: "a2", 2: "b2", 3: "c"}
+
+
 def test_scd2_sink_replay_is_idempotent(spark, tmp_path):
     import datetime as dt
 

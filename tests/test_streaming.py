@@ -170,6 +170,84 @@ def test_stateful_first_seen_resumes_from_checkpoint(spark, tmp_path):
     assert set(after_both) - set(after_first) == new - old
 
 
+def test_checkpoints_write_through_the_filesystem_api(spark, tmp_path):
+    """The session's checkpoint manager conf is internal to Spark: if
+    Spark stops honouring it, checkpoints fall back to the FileContext
+    manager, whose renames fork a process per file on local disk."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt")),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_stateful_first_seen_replays_a_lost_commit(spark, tmp_path):
+    """A drain that dies after its last batch's sink write but before
+    that batch's commit-log entry re-runs the batch on restart: the
+    replay loads the state below the batch, so the batch-keyed sink
+    gets the same new keys again, and the state it commits serves the
+    next drain. Each key lands once, and a later drain over new files
+    adds only the new keys."""
+    import time
+
+    from nyc_opendata_etl_spark.streaming.drain import drain
+
+    events = load_table(spark, SF_DIR, "events")
+    src, out = str(tmp_path / "src"), tmp_path / "out"
+    ckpt = tmp_path / "ckpt"
+    t0 = time.time() - 100
+
+    def add_file(where: str, age: float) -> None:
+        """One file per micro-batch, in the order of ``age``."""
+        before = set(os.listdir(src)) if os.path.exists(src) else set()
+        events.where(where).coalesce(1).write.mode("append").parquet(src)
+        for name in set(os.listdir(src)) - before:
+            os.utime(os.path.join(src, name), (age, age))
+
+    def sink(batch_df, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(str(out / f"b={batch_id}"))
+
+    def drain_once() -> list:
+        stream = se.stateful_first_seen(
+            se.read_event_stream(spark, src, max_files_per_trigger=1), "user_id"
+        )
+        drain(stream, sink, f"lost_commit_{uuid.uuid4().hex[:8]}", str(ckpt))
+        return [r.user_id for r in spark.read.parquet(str(out)).collect()]
+
+    def batch_out(b: int) -> tuple[set, list]:
+        path = out / f"b={b}"
+        files = {p.name for p in path.glob("part-*")}
+        return files, sorted(r.user_id for r in spark.read.parquet(str(path)).collect())
+
+    add_file("user_id % 3 = 1", t0)
+    add_file("user_id % 3 != 0", t0 + 1)  # repeats % 3 = 1, adds % 3 = 2
+    after_first = drain_once()
+    last = max(int(n) for n in os.listdir(ckpt / "commits") if n.isdigit())
+    assert last == 1
+    files_before, keys_before = batch_out(last)
+    assert keys_before and all(k % 3 == 2 for k in keys_before)
+    for lost in (ckpt / "commits" / str(last), ckpt / "commits" / f".{last}.crc"):
+        os.remove(lost)
+
+    after_replay = drain_once()
+    files_after, keys_after = batch_out(last)
+    assert (ckpt / "commits" / str(last)).exists()
+    assert files_after.isdisjoint(files_before)  # the batch ran again
+    assert keys_after == keys_before
+    assert sorted(after_replay) == sorted(after_first)
+
+    add_file("user_id % 3 != 1", t0 + 2)  # repeats % 3 = 2, adds % 3 = 0
+    after_both = drain_once()
+    keys = {r.user_id for r in events.select("user_id").distinct().collect()}
+    assert sorted(after_first) == sorted(k for k in keys if k % 3 != 0)
+    assert sorted(after_both) == sorted(keys)
+    assert sorted(set(after_both) - set(after_first)) == sorted(k for k in keys if k % 3 == 0)
+
+
 def test_stream_to_partitioned_sink_is_idempotent(spark, tmp_path):
     from pyspark.sql import functions as F
 

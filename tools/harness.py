@@ -1,8 +1,9 @@
 """The measurement core every harness in this repo shares: session
 set-up (``session``), the bootstrap warmup (``warmup``), the timed
 build-then-execute of a registered query (``measure``), the
-status-store job counter (``JobCounter``) and the JVM's codegen
-compilation count (``codegen_compiles``). One copy of each, so a
+status-store job counter (``JobCounter``), the JVM's codegen
+compilation count (``codegen_compiles``) and the CPU time of the
+processes the JVM forked (``jvm_child_cpu_s``). One copy of each, so a
 number from one harness means the same thing in another.
 """
 
@@ -51,15 +52,33 @@ def codegen_compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+def jvm_child_cpu_s(spark) -> float | None:
+    """CPU seconds (user plus system) of the JVM's ended child processes,
+    such as the ``readlink`` and ``chmod`` forks Hadoop's local file
+    system makes without its native library: ``cutime + cstime`` from
+    ``/proc/<pid>/stat``. None off Linux. Reads no Spark state, so it
+    runs no job."""
+    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            stat = f.read()
+    except OSError:
+        return None
+    fields = stat[stat.rfind(")") + 2:].split()  # fields after the command name
+    return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
+
+
 def measure(spark, fn, sf_dir: str) -> dict[str, float]:
     """Build ``fn(spark, sf_dir)``, then run it through the noop sink.
 
     ``construct_s`` is the time until ``fn`` returns its DataFrame:
     Python plan building plus any eager jobs ``fn`` runs (probes, cache
     fills, checkpoints). ``exec_s`` is the noop write. ``sec`` is both.
-    ``codegen_compiles`` counts the classes both steps compiled.
-    Exceptions from either step propagate."""
-    c0 = codegen_compiles(spark)
+    ``codegen_compiles`` counts the classes both steps compiled, and
+    ``child_cpu_s`` the CPU seconds of the processes the JVM forked and
+    reaped meanwhile (None off Linux). Exceptions from either step
+    propagate."""
+    c0, k0 = codegen_compiles(spark), jvm_child_cpu_s(spark)
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     t1 = time.perf_counter()
@@ -70,6 +89,7 @@ def measure(spark, fn, sf_dir: str) -> dict[str, float]:
         "exec_s": round(t2 - t1, 3),
         "sec": round(t2 - t0, 3),
         "codegen_compiles": codegen_compiles(spark) - c0,
+        "child_cpu_s": None if k0 is None else round(jvm_child_cpu_s(spark) - k0, 3),
     }
 
 
