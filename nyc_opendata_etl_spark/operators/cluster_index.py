@@ -11,13 +11,9 @@ UPDATE step touches only the new batch plus the artifact, never the
 already-indexed corpus, and whose output is pinned IDENTICAL to a
 from-scratch `dedup.duplicate_clusters_collapsed` run.
 
-Artifact layout under ``path/`` — every relation is replay-idempotent
-(ADVICE r14: the r14-staged form appended reps/prefix/members before
-the clusters swap, so a crash between the appends and the swap
-followed by a re-run of the same batch double-appended; this layout
-closes that window with the two disciplines the streaming layer
-already pins — index_ingest's batch-partitioned dynamic overwrite and
-dim_sink's versioned-snapshot strictly-below-batch reads):
+Artifact layout under ``path/``: three batch logs and a versioned
+snapshot, the two replay-safe formats of ``sources/batch_log.py``
+(that module states the replay discipline):
 
 - ``reps/b=<batch>/``    one row per distinct canonical text first
                 seen in that batch: (ch = md5(canon), rep = min doc
@@ -42,13 +38,9 @@ dim_sink's versioned-snapshot strictly-below-batch reads):
 
 Crash/replay contract: batch ids are strictly increasing (streaming
 epoch ids satisfy this; the build seeds batch −1). Update ``b`` reads
-reps/prefix at partitions ``b' < b`` and the newest clusters version
-``v < b`` — NEVER its own partial output — and every write lands in
-``b``'s own partitions (dynamic overwrite) or ``v=b`` (plain
-overwrite). A batch replayed from ANY crash point — or after full
-success — therefore recomputes byte-identical content from
-byte-identical inputs and overwrites itself; no marker needed
-(pinned: tests/test_round14_ops.py replay test).
+only below ``b`` and writes only ``b``'s own partitions and ``v=b``, so
+a replay from ANY crash point rewrites byte-identical content (pinned:
+tests/test_round14_ops.py replay test).
 
 Update algorithm (union-find over the contracted graph):
 
@@ -92,9 +84,13 @@ from nyc_opendata_etl_spark.operators.dedup import (
     duplicate_clusters_collapsed,
     word_shingles,
 )
-from nyc_opendata_etl_spark.streaming.dim_sink import (
-    _version_dirs,
-    _write_pointer,
+from nyc_opendata_etl_spark.sources.batch_log import (
+    current_version,
+    must_read_log,
+    version_below,
+    version_dirs,
+    write_batch,
+    write_version,
 )
 
 #: The build's batch id — below every real (non-negative) batch id,
@@ -125,30 +121,18 @@ def _prefix_rows(reps: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def _write_batch(df: DataFrame, log_path: str, batch_id: int) -> None:
-    """Idempotent batch write into an append-log relation: the rows
-    land under their own ``b=<batch_id>`` partition via dynamic
-    overwrite, so a replayed batch REWRITES identical content instead
-    of double-appending (the index_ingest discipline)."""
-    (
-        df.withColumn("b", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b")
-        .parquet(log_path)
-    )
-
-
-def _read_below(spark: SparkSession, log_path: str, batch_id: int) -> DataFrame:
-    """The log's rows from batches STRICTLY below ``batch_id`` — the
-    replay-pinned snapshot (a crashed prior attempt of this very batch
-    is invisible, so recompute is deterministic). Partition pruning
-    keeps this a metadata filter, not a scan."""
-    return (
-        spark.read.parquet(log_path)
-        .filter(F.col("b") < F.lit(batch_id))
-        .drop("b")
-    )
+def artifact_schemas(id_type: str = "bigint") -> dict[str, str]:
+    """Each relation's schema as read back (``batch_log.read_log``);
+    ``id_type`` is the type of the corpus's id column. ``b`` is declared
+    ``int``, the type Spark infers for the partition, because the
+    optimizer's row-size estimate picks the broadcast side of the
+    prefix join."""
+    return {
+        "reps": f"ch string, rep {id_type}, sh array<bigint>, n_sh int, b int",
+        "prefix": f"rep {id_type}, n_sh int, ph bigint, b int",
+        "members": f"doc_id {id_type}, rep {id_type}, b int",
+        "clusters": f"doc_id {id_type}, cluster_id {id_type}",
+    }
 
 
 def build_dup_cluster_index(
@@ -175,24 +159,25 @@ def build_dup_cluster_index(
         .withColumn("n_sh", F.size("sh"))
         .localCheckpoint()  # one corpus scan feeds three writes
     )
-    _write_batch(reps, f"{path}/reps", BUILD_BATCH)
-    _write_batch(_prefix_rows(reps, threshold), f"{path}/prefix", BUILD_BATCH)
-    _write_batch(
+    members = (
         src.select("id", F.md5("__canon__").alias("ch"))
         .join(reps.select("ch", "rep"), "ch")
-        .select(F.col("id").alias("doc_id"), "rep"),
-        f"{path}/members",
-        BUILD_BATCH,
+        .select(F.col("id").alias("doc_id"), "rep")
     )
-    duplicate_clusters_collapsed(
+    for rel, df in (
+        ("reps", reps), ("prefix", _prefix_rows(reps, threshold)),
+        ("members", members),
+    ):
+        write_batch(df, f"{path}/{rel}", BUILD_BATCH, overwrite="dynamic")
+    clusters = duplicate_clusters_collapsed(
         docs,
         text_col=text_col,
         id_col=id_col,
         n=n,
         threshold=threshold,
         cc_kernel=cc_kernel,
-    ).write.mode("overwrite").parquet(f"{path}/clusters/v={BUILD_BATCH}")
-    _write_pointer(f"{path}/clusters", BUILD_BATCH)
+    )
+    write_version(clusters, f"{path}/clusters", BUILD_BATCH)
     with open(os.path.join(path, "_BUILT"), "w") as fh:
         fh.write("")
 
@@ -231,7 +216,7 @@ def update_dup_cluster_index(
         raise ValueError(
             f"batch_id={batch_id} must exceed the build batch {BUILD_BATCH}"
         )
-    applied = _version_dirs(f"{path}/clusters")
+    applied = version_dirs(f"{path}/clusters")
     if applied and batch_id < max(applied):
         # ADVICE r15: out-of-order batch ids must fail LOUDLY. A batch
         # at/below an already-applied batch is only legal as a REPLAY of
@@ -246,19 +231,28 @@ def update_dup_cluster_index(
         )
     t = float(threshold)
 
-    # replay-pinned snapshots: strictly-below-batch reads (a crashed
-    # prior attempt of THIS batch is invisible; lazy reads evaluated
-    # after this batch's writes would otherwise double-count its rows)
-    reps_old = _read_below(spark, f"{path}/reps", batch_id).localCheckpoint()
-    prefix_old = _read_below(spark, f"{path}/prefix", batch_id).localCheckpoint()
-    below = [v for v in _version_dirs(f"{path}/clusters") if v < batch_id]
-    if not below:
+    v_old = version_below(f"{path}/clusters", batch_id)
+    if v_old is None:
         raise ValueError(
             f"update_dup_cluster_index: no cluster snapshot below batch "
             f"{batch_id} at {path}; call build_dup_cluster_index first"
         )
-    clusters_old = spark.read.parquet(
-        f"{path}/clusters/v={max(below)}"
+    schema = artifact_schemas(new_docs.schema[id_col].dataType.simpleString())
+
+    def old(rel: str) -> DataFrame:
+        # replay-pinned: strictly-below-batch rows (a crashed prior
+        # attempt of THIS batch is invisible; lazy reads evaluated after
+        # this batch's writes would otherwise double-count its rows)
+        return (
+            must_read_log(spark, f"{path}/{rel}", schema[rel])
+            .filter(F.col("b") < F.lit(batch_id))
+            .drop("b")
+            .localCheckpoint()
+        )
+
+    reps_old, prefix_old = old("reps"), old("prefix")
+    clusters_old = must_read_log(
+        spark, f"{path}/clusters/v={v_old}", schema["clusters"]
     ).localCheckpoint()
 
     newsrc = _canon_src(new_docs, text_col, id_col).localCheckpoint()
@@ -289,11 +283,7 @@ def update_dup_cluster_index(
     # append-log maintenance (O(batch) writes into the batch's OWN
     # partition — dynamic overwrite, so replay rewrites not re-appends;
     # the pre-batch index is never re-read or rewritten)
-    _write_batch(
-        new_reps.select("ch", "rep", "sh", "n_sh"), f"{path}/reps", batch_id
-    )
-    _write_batch(_prefix_rows(new_reps, t), f"{path}/prefix", batch_id)
-    _write_batch(
+    members = (
         newsrc.select("id", F.md5("__canon__").alias("ch"))
         .join(
             reps_old.select("ch", "rep").unionByName(
@@ -301,10 +291,13 @@ def update_dup_cluster_index(
             ),
             "ch",
         )
-        .select(F.col("id").alias("doc_id"), "rep"),
-        f"{path}/members",
-        batch_id,
+        .select(F.col("id").alias("doc_id"), "rep")
     )
+    for rel, df in (
+        ("reps", new_reps.select("ch", "rep", "sh", "n_sh")),
+        ("prefix", _prefix_rows(new_reps, t)), ("members", members),
+    ):
+        write_batch(df, f"{path}/{rel}", batch_id, overwrite="dynamic")
 
     # candidate pairs involving new reps — index probe, not corpus scan
     npref = _prefix_rows(new_reps, t)
@@ -444,12 +437,7 @@ def update_dup_cluster_index(
         .select(F.col("id").alias("doc_id"), "cluster_id")
     )
     out = part_a.unionByName(part_b).unionByName(part_c)
-    # versioned snapshot + pointer-last (the dim_sink discipline):
-    # replay overwrites v=batch_id with identical content; readers
-    # never see a partially written version because the pointer only
-    # advances after the write completes
-    out.write.mode("overwrite").parquet(f"{path}/clusters/v={batch_id}")
-    _write_pointer(f"{path}/clusters", batch_id)
+    write_version(out, f"{path}/clusters", batch_id)
 
 
 def compact_dup_cluster_index(spark: SparkSession, path: str) -> None:
@@ -469,42 +457,30 @@ def compact_dup_cluster_index(spark: SparkSession, path: str) -> None:
     not this function, is what makes that impossible."""
     from nyc_opendata_etl_spark.operators.index_maintenance import _swap_dir
 
+    keep = current_version(f"{path}/clusters")
+    cur = spark.read.parquet(f"{path}/clusters/v={keep}").localCheckpoint()
+    schema = artifact_schemas(cur.schema["doc_id"].dataType.simpleString())
     for rel in ("reps", "prefix", "members"):
-        rows = spark.read.parquet(f"{path}/{rel}").drop("b").localCheckpoint()
+        rows = (
+            must_read_log(spark, f"{path}/{rel}", schema[rel])
+            .drop("b")
+            .localCheckpoint()
+        )
         _swap_dir(
             f"{path}/{rel}",
-            lambda tmp, rows=rows: _write_batch_into(rows, tmp, BUILD_BATCH),
+            lambda tmp, rows=rows: write_batch(
+                rows, tmp, BUILD_BATCH, overwrite="static"
+            ),
         )
-    with open(os.path.join(path, "clusters", "_CURRENT")) as fh:
-        keep = int(fh.read().strip())
-    cur = spark.read.parquet(f"{path}/clusters/v={keep}").localCheckpoint()
-
-    def _rebuild_clusters(tmp: str) -> None:
-        # ADVICE r15: _CURRENT lives INSIDE clusters/, so the swap
-        # removes it — write the pointer into the tmp dir so pointer
-        # and snapshot land atomically with the rename (a crash between
-        # swap and a post-hoc pointer write would otherwise leave
-        # read_dup_clusters raising FileNotFoundError).
-        cur.write.parquet(f"{tmp}/v={keep}")
-        _write_pointer(tmp, keep)
-
-    _swap_dir(f"{path}/clusters", _rebuild_clusters)
-
-
-def _write_batch_into(df: DataFrame, log_path: str, batch_id: int) -> None:
-    """_write_batch without dynamic overwrite — used by compaction,
-    whose target is a fresh swap dir."""
-    (
-        df.withColumn("b", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("b")
-        .parquet(log_path)
-    )
+    # _CURRENT lives INSIDE clusters/, so the swap removes it: the
+    # pointer is written into the tmp dir, landing in the same rename as
+    # the snapshot (a post-hoc pointer write could crash and leave
+    # read_dup_clusters raising FileNotFoundError)
+    _swap_dir(f"{path}/clusters", lambda tmp: write_version(cur, tmp, keep))
 
 
 def read_dup_clusters(spark: SparkSession, path: str) -> DataFrame:
     """The cluster map as of the newest committed batch (pointer read
     — the reader-side convenience no update ever uses as input)."""
-    with open(os.path.join(path, "clusters", "_CURRENT")) as fh:
-        v = int(fh.read().strip())
+    v = current_version(f"{path}/clusters")
     return spark.read.parquet(f"{path}/clusters/v={v}")

@@ -20,11 +20,12 @@ Scale design notes:
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.functions.hashing import md5_long
 from nyc_opendata_etl_spark.operators.text import canon_text, fingerprint
+from nyc_opendata_etl_spark.sources.batch_log import write_batch
 
 
 def exact_dedup_groups(
@@ -1155,10 +1156,11 @@ def sorted_neighborhood_pairs_adaptive(
 # at write time (two 8-byte columns per canon vs the full text), then
 # probe each (small) increment against them.
 #
-# The index is a refcounted delta log: ``(h, cnt)`` rows, partitioned
-# by ``b``. A build writes per-canon doc counts, updates append positive
-# deltas and deletions append NEGATIVE deltas, so every direction of
-# maintenance is an O(batch) write that never reads the index. A canon
+# The index is a refcounted delta log: ``(h, cnt)`` rows in a batch log
+# (sources/batch_log.py), partitioned by ``b``. A build writes per-canon
+# doc counts, updates append positive deltas and deletions append
+# NEGATIVE deltas, so every direction of maintenance is an O(batch)
+# write that never reads the index. A canon
 # is live iff SUM(cnt) > 0 — which a probe evaluates over just the
 # batch's hashes, so a takedown is visible at the next probe, not only
 # after compaction (whether a text is "new" after a takedown cannot
@@ -1175,9 +1177,8 @@ def sorted_neighborhood_pairs_adaptive(
 COMPACTED_B = -1
 TAKEDOWN_B = -2
 
-#: The index's on-disk relation, read with this schema rather than
-#: inferred, so a log with no part file (an empty build, or a compaction
-#: of a fully withdrawn log) still reads as an empty index.
+#: The index's on-disk relation, read with this schema
+#: (``batch_log.read_log``).
 FINGERPRINT_INDEX_SCHEMA = "h long, cnt long, b long"
 
 #: Files in a build or compaction (range-sorted on ``h``).
@@ -1196,29 +1197,12 @@ def _canon_deltas(docs: DataFrame, text_col: str, sign: int = 1) -> DataFrame:
     )
 
 
-def write_fingerprint_log(
-    deltas: DataFrame, path: str, b: int, overwrite: str | None = None
-) -> None:
-    """Write ``(h, cnt)`` rows under partition ``b`` of the log at
-    ``path``: appended, or with ``overwrite`` as the
-    ``partitionOverwriteMode`` — ``"dynamic"`` replaces only partition
-    ``b`` (an idempotent micro-batch replay), ``"static"`` the whole
-    directory. The session default is dynamic, so a write that must
-    drop old partitions has to say static."""
-    w = deltas.withColumn("b", F.lit(b)).write.partitionBy("b")
-    if overwrite is None:
-        w = w.mode("append")
-    else:
-        w = w.mode("overwrite").option("partitionOverwriteMode", overwrite)
-    w.parquet(path)
-
-
 def write_live_fingerprints(counts: DataFrame, path: str) -> None:
     """Replace the whole directory at ``path`` with the ``(h, cnt)``
     rows of ``counts`` under ``b = -1``, range-partitioned and sorted on
     ``h`` so footer min/max bounds each file. Shared by the build and
     by compaction."""
-    write_fingerprint_log(
+    write_batch(
         counts.repartitionByRange(_INDEX_FILES, "h").sortWithinPartitions("h"),
         path,
         COMPACTED_B,
@@ -1240,7 +1224,7 @@ def update_fingerprint_index(
     """Append a new batch's per-canon doc counts as positive deltas —
     O(new docs); the index is never re-read. Probes sum repeated
     canons; compaction folds them to one row."""
-    write_fingerprint_log(_canon_deltas(new_docs, text_col), path, COMPACTED_B)
+    write_batch(_canon_deltas(new_docs, text_col), path, COMPACTED_B)
 
 
 def delete_from_fingerprint_index(
@@ -1253,27 +1237,7 @@ def delete_from_fingerprint_index(
     pass each withdrawn doc ONCE (the relation being deleted from the
     corpus table): double-deleting drives the sum negative, which
     probes and compaction both treat as absent."""
-    write_fingerprint_log(
-        _canon_deltas(deleted_docs, text_col, sign=-1), path, TAKEDOWN_B
-    )
-
-
-def read_fingerprint_index(spark: SparkSession, path: str) -> DataFrame | None:
-    """The log at ``path``, or None if it does not exist YET (a stream's
-    first batch). Only the path-missing case may be swallowed: any
-    other read failure (corrupt footer, storage hiccup, permissions)
-    must fail the caller — treating a transient error as "empty index"
-    would silently admit canons already accepted, and in a streaming
-    ingest permanently duplicate docs in the corpus sink."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(FINGERPRINT_INDEX_SCHEMA).parquet(path)
-    except AnalysisException as e:
-        cond = getattr(e, "getCondition", getattr(e, "getErrorClass", lambda: None))()
-        if cond == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(e):
-            return None
-        raise
+    write_batch(_canon_deltas(deleted_docs, text_col, sign=-1), path, TAKEDOWN_B)
 
 
 def live_canons(index: DataFrame, hashes: DataFrame) -> DataFrame:

@@ -135,10 +135,10 @@ def compact_fingerprint_index(spark: SparkSession, path: str) -> None:
         FINGERPRINT_INDEX_SCHEMA,
         write_live_fingerprints,
     )
+    from nyc_opendata_etl_spark.sources.batch_log import must_read_log
 
     folded = (
-        spark.read.schema(FINGERPRINT_INDEX_SCHEMA)
-        .parquet(path)
+        must_read_log(spark, path, FINGERPRINT_INDEX_SCHEMA)
         .groupBy("h")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
         .filter(F.col("cnt") > 0)

@@ -14,6 +14,7 @@ from nyc_opendata_etl_spark.functions.hashing import md5_long, md5_long_oracle_s
 from nyc_opendata_etl_spark.operators import dedup, similarity, text
 from nyc_opendata_etl_spark.queries import register
 from nyc_opendata_etl_spark.queries._sql import PY_WS_RE2
+from nyc_opendata_etl_spark.sources.batch_log import must_read_log
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 # canonical text form used by dedup ops, as DuckDB SQL
@@ -1362,7 +1363,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_path = _stage_fingerprint_index(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents", spread_input=True)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    index = dedup.read_fingerprint_index(spark, index_path)
+    index = must_read_log(spark, index_path, dedup.FINGERPRINT_INDEX_SCHEMA)
     return dedup.incremental_new_docs(batch, index)
 
 

@@ -22,6 +22,7 @@ from nyc_opendata_etl_spark.queries import REGISTRY, register
 
 # importing llm_ops also registers the batch queries whose oracles are shared below
 from nyc_opendata_etl_spark.queries.llm_ops import _CANON
+from nyc_opendata_etl_spark.sources.batch_log import must_read_log
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 
@@ -126,7 +127,7 @@ def q_dedup_incremental_rc(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_path = _stage_fingerprint_index_deleted(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents", spread_input=True)
     batch = docs.filter(F.col("doc_id") % 4 == 3)
-    index = dedup.read_fingerprint_index(spark, index_path)
+    index = must_read_log(spark, index_path, dedup.FINGERPRINT_INDEX_SCHEMA)
     return dedup.incremental_new_docs(batch, index)
 
 
@@ -478,7 +479,7 @@ def _stage_ivfpq_stream(spark: SparkSession, sf_dir: str) -> str:
     that query's oracle transfers verbatim — but the build's codes are
     DISCARDED and the FULL corpus arrives through the exactly-once
     streaming sink (4 AvailableNow micro-batches over 8 id-ordered
-    files), each batch dynamic-overwriting its own (batch, cid)
+    files), each batch dynamic-overwriting its own (cid, b)
     partitions. _STREAM_DONE is written last, proving build + discard
     + drain all completed."""
     import os
@@ -493,7 +494,7 @@ def _stage_ivfpq_stream(spark: SparkSession, sf_dir: str) -> str:
     if is_stale(path, sf_dir, "embeddings", marker="_STREAM_DONE"):
         emb = load_table(spark, sf_dir, "embeddings")
         similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
-        # codes arrive via the stream under the (batch, cid) layout —
+        # codes arrive via the stream under the (cid, b) layout —
         # the build's cid-only codes would break partition discovery
         shutil.rmtree(os.path.join(path, "codes"), ignore_errors=True)
         src = _stage_emb_idordered(spark, sf_dir)
@@ -528,7 +529,7 @@ def q_stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once STREAMING ANN index maintenance
     (streaming/ann_ingest.py) run as a bounded AvailableNow drain: the
     embedding corpus arrives in 4 micro-batches and each batch
-    dynamic-overwrites only its own (batch, cid) code partitions — a
+    dynamic-overwrites only its own (cid, b) code partitions — a
     replayed batch rewrites identical content instead of appending
     duplicate code rows (which would silently DOUBLE a candidate's
     ADC distance in the probe's groupBy(id) sum; the defect
@@ -536,8 +537,8 @@ def q_stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Quantizers are frozen from the even-half build (the FAISS add()
     contract), so the streamed index state equals
     similarity_ivfpq_incremental's and the unchanged probe
-    (ivfpq_topk_indexed — cid partition pruning works under every
-    batch= directory) scores bit-identically; that query's oracle
+    (ivfpq_topk_indexed — cid is the top partition level) scores
+    bit-identically; that query's oracle
     verifies batching, idempotent writes, AND the probe end to end."""
     from nyc_opendata_etl_spark.operators import similarity
 

@@ -12,15 +12,16 @@ commit) would append its rows a second time, and a duplicated code row
 double-counts nothing visible (ADC scores each (id, m) once per row —
 the groupBy(id) sum would silently DOUBLE a replayed candidate's
 distance). The streaming layout therefore partitions codes by
-(batch, cid) and DYNAMIC-OVERWRITES: batch ``b`` owns exactly the
-``batch=b/cid=*`` directories, so a replay rewrites identical content
-(routing and encoding are deterministic given the persisted
-quantizers) instead of appending.
+cid and then ``b`` = the micro-batch id, a batch log of
+``sources/batch_log.py`` (that module states the replay discipline):
+batch ``b`` owns exactly the ``cid=*/b=b`` directories, so a replay
+rewrites identical content (routing and encoding are deterministic
+given the persisted quantizers) instead of appending.
 
 The probe needs no change: ``similarity.ivfpq_topk_indexed`` reads
 ``codes/`` with a ``cid`` filter — partition pruning applies to the
-``cid=`` level under every ``batch=`` directory, and the extra
-``batch`` column rides along unused. Quantizers
+top ``cid=`` level, as in the build's and compaction's layout, and the
+extra ``b`` column rides along unused. Quantizers
 (centroids/codebook/params) are the persisted build's, never touched
 by the stream — the FAISS add()-without-retraining contract, same as
 the batch updater.
@@ -28,9 +29,7 @@ the batch updater.
 Scale shape per micro-batch: two bounded broadcasts (n_centroids rows,
 m·n_codes rows) against ONLY the batch, two map-side-combined
 aggregates, one dynamic-overwrite write — independent of the index's
-accumulated size. As everywhere in the streaming layer, exactly-once
-rides on the offset log pinning batch composition: production callers
-MUST pass a durable ``checkpoint_location``.
+accumulated size.
 """
 
 from __future__ import annotations
@@ -40,7 +39,11 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nyc_opendata_etl_spark.sources.batch_log import write_batch
 from nyc_opendata_etl_spark.streaming.drain import drain
+
+#: The codes log's on-disk relation (``batch_log.read_log``).
+CODES_SCHEMA = "id long, m int, code long, cid int, b long"
 
 
 def read_ivfpq_quantizers(spark: SparkSession, index_path: str) -> tuple:
@@ -94,14 +97,12 @@ def ann_ingest_batch(
         batch_df, p["m"], p["d_sub"], vec_col, F.col(id_col), "id", "sub"
     )
     codes = similarity._pq_encode_against(subs, codebook)
-    (
-        codes.join(assigned, "id")
-        .withColumn("batch", F.lit(int(batch_id)))
-        .repartition("cid")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "cid")
-        .parquet(f"{index_path}/codes")
+    write_batch(
+        codes.join(assigned, "id").repartition("cid"),
+        f"{index_path}/codes",
+        batch_id,
+        overwrite="dynamic",
+        partition_by=("cid",),
     )
 
 

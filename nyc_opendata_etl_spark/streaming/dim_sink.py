@@ -3,19 +3,11 @@ folded into a slowly-changing dimension via ``foreachBatch`` over the
 batch kernel :func:`nyc_opendata_etl_spark.operators.scd.scd2_merge`.
 
 An SCD2 merge rewrites the whole dimension (close + open + pass-through
-rows), so the partition-overwrite idempotency of streaming/ingest.py
-does not apply: replay safety comes from VERSIONED SNAPSHOTS instead —
-
-- batch ``b`` reads as its input the newest committed snapshot with
-  version STRICTLY BELOW ``b`` (never a pointer: if the original
-  attempt already wrote ``v=b`` and advanced the pointer before
-  failing, a pointer-following replay would merge the batch into its
-  own output — double-applied updates);
-- it writes the merged dimension to ``{path}/v=b`` (plain overwrite —
-  idempotent, the replay rewrites the same version with identical
-  content since its input is pinned by construction);
-- last, it atomically re-points ``{path}/_CURRENT`` (tmp +
-  ``os.replace``) — a reader convenience only, never an input.
+rows), so replay safety comes from the VERSIONED SNAPSHOTS of
+``sources/batch_log.py`` (that module states the discipline): batch
+``b`` merges into the newest snapshot strictly below ``b``, writes
+``{path}/v=b`` and re-points ``{path}/_CURRENT`` last, a reader
+convenience that is never an input.
 
 This is the snapshot-chain discipline a log-structured table format
 (Delta/Iceberg MERGE) gives for free, built on plain parquet; at
@@ -26,10 +18,6 @@ snapshot per CDC batch is bounded; :func:`prune_scd2_versions` retires
 history below a retention count during a maintenance window (stream
 stopped, checkpoint committed — pruning below an uncommitted batch's
 input version would break its replay).
-
-As everywhere in the streaming layer: the exactly-once contract rides
-on Structured Streaming's offset log pinning batch composition, so
-production callers MUST pass a durable ``checkpoint_location``.
 """
 
 from __future__ import annotations
@@ -39,48 +27,29 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nyc_opendata_etl_spark.sources.batch_log import (
+    current_version,
+    must_read_log,
+    version_below,
+    version_dirs,
+    write_version,
+)
 from nyc_opendata_etl_spark.streaming.drain import drain
 
 SEED_VERSION = -1
-
-
-def _version_dirs(path: str) -> list[int]:
-    try:
-        names = os.listdir(path)
-    except FileNotFoundError:
-        return []
-    out = []
-    for n in names:
-        if n.startswith("v="):
-            try:
-                out.append(int(n[2:]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _write_pointer(path: str, version: int) -> None:
-    tmp = os.path.join(path, "_CURRENT.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(path, "_CURRENT"))
 
 
 def init_scd2_dim(dim: DataFrame, path: str) -> None:
     """Seed the versioned dimension: the initial SCD2 table (columns
     ``natural_key + tracked + effective_from, effective_to,
     is_current``) becomes version -1, below every real batch id."""
-    os.makedirs(path, exist_ok=True)
-    dim.write.mode("overwrite").parquet(f"{path}/v={SEED_VERSION}")
-    _write_pointer(path, SEED_VERSION)
+    write_version(dim, path, SEED_VERSION)
 
 
 def read_scd2_dim(spark: SparkSession, path: str) -> DataFrame:
     """The dimension as of the newest committed batch (pointer read —
     the reader-side convenience the merge itself never uses)."""
-    with open(os.path.join(path, "_CURRENT")) as fh:
-        v = int(fh.read().strip())
-    return spark.read.parquet(f"{path}/v={v}")
+    return spark.read.parquet(f"{path}/v={current_version(path)}")
 
 
 def scd2_upsert_batch(
@@ -111,8 +80,8 @@ def scd2_upsert_batch(
     from nyc_opendata_etl_spark.operators.scd import scd2_merge
 
     spark = batch_df.sparkSession
-    below = [v for v in _version_dirs(path) if v < batch_id]
-    if not below:
+    below = version_below(path, batch_id)
+    if below is None:
         raise ValueError(
             f"scd2_upsert_batch: no snapshot below batch {batch_id} at "
             f"{path}; call init_scd2_dim first (seed version {SEED_VERSION})"
@@ -122,7 +91,7 @@ def scd2_upsert_batch(
         .add("effective_from", "date").add("effective_to", "date")
         .add("is_current", "boolean")
     )
-    dim = spark.read.schema(snapshot).parquet(f"{path}/v={max(below)}")
+    dim = must_read_log(spark, f"{path}/v={below}", snapshot)
     latest = batch_df.groupBy(*natural_key).agg(
         F.max(
             F.struct(F.col(eff_date_col).alias("__eff__"), *[F.col(t) for t in tracked])
@@ -137,8 +106,7 @@ def scd2_upsert_batch(
         dim, compacted, natural_key=natural_key, tracked=tracked,
         eff_date_col=eff_date_col,
     )
-    merged.write.mode("overwrite").parquet(f"{path}/v={batch_id}")
-    _write_pointer(path, batch_id)
+    write_version(merged, path, batch_id)
 
 
 def stream_scd2_upserts(
@@ -168,10 +136,8 @@ def prune_scd2_versions(path: str, keep_last: int = 2) -> list[int]:
     pruning could remove. Returns the deleted version ids."""
     import shutil
 
-    with open(os.path.join(path, "_CURRENT")) as fh:
-        current = int(fh.read().strip())
-    versions = _version_dirs(path)
-    keep = set(versions[-keep_last:]) | {current}
+    versions = version_dirs(path)
+    keep = set(versions[-keep_last:]) | {current_version(path)}
     dropped = [v for v in versions if v not in keep]
     for v in dropped:
         shutil.rmtree(os.path.join(path, f"v={v}"))

@@ -29,6 +29,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from nyc_opendata_etl_spark.sources.batch_log import write_batch
 from nyc_opendata_etl_spark.streaming.drain import drain
 
 EVENT_SCHEMA = StructType(
@@ -194,38 +195,28 @@ def stream_to_partitioned_sink(
     query_name: str = "sink",
     checkpoint_location: str | None = None,
 ) -> None:
-    """Stream → (month, batch)-partitioned warehouse parquet via
-    :func:`~nyc_opendata_etl_spark.streaming.drain.drain`, with dynamic
-    partition overwrite keyed by (month, batch_id).
-
-    Idempotency contract, stated exactly (round-11 review): the scheme
-    is replay-safe because a re-delivered micro-batch rewrites exactly
-    its own (month, batch_id) partitions, and a LATER batch touching
-    the same month lands in different batch_id partitions (overwriting
-    by month alone would drop every earlier batch of the month). That
-    guarantee holds when replays reproduce the SAME batch boundaries —
-    which is what the required ``checkpoint_location`` provides:
-    Structured Streaming's offset log pins batch composition across
-    restarts.
+    """Stream → (month, b)-partitioned warehouse parquet via
+    :func:`~nyc_opendata_etl_spark.streaming.drain.drain`: each
+    micro-batch is a batch log write of ``sources/batch_log.py`` (that
+    module states the replay discipline) with ``month`` above ``b``, so
+    a re-delivered batch rewrites exactly its own (month, b) partitions
+    and a LATER batch touching the same month lands in other ``b``
+    partitions (overwriting by month alone would drop every earlier
+    batch of the month).
 
     Readers scan ``sink_path`` normally (month pruning still applies;
-    batch_id is an extra partition level); periodic
+    ``b`` is an extra partition level); periodic
     :func:`~nyc_opendata_etl_spark.operators.backfill.compact_partitions`
     folds the per-batch files.
     """
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("month", F.date_format(ts_col, "yyyy-MM"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            # writer-level, NOT session conf: without dynamic mode an
-            # overwrite would truncate the whole sink path each batch,
-            # deleting every prior batch. Pinning it here makes the
-            # loss-free guarantee hold on any session.
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("month", "batch_id")
-            .parquet(sink_path)
+        write_batch(
+            batch_df.withColumn("month", F.date_format(ts_col, "yyyy-MM")),
+            sink_path,
+            batch_id,
+            overwrite="dynamic",
+            partition_by=("month",),
         )
 
     drain(events, sink_batch, query_name, checkpoint_location)

@@ -5,18 +5,15 @@ and correct across failures and replays.
 
 ``update_text_index`` (the batch append path) is plain append-mode: a
 replayed micro-batch would double-append postings and double-merge
-vocab/stats. The streaming layout makes every write idempotent by the
-micro-batch id instead, the ``streaming/ingest`` discipline applied to
-an index:
+vocab/stats. The streaming layout is two batch logs of
+``sources/batch_log.py`` instead, each partitioned by ``b`` = the
+micro-batch id and rewritten per batch (that module states the replay
+discipline):
 
-- ``postings/b=<batch>/``: each batch's (term, id, tf, dl) rows,
+- ``postings/b=<batch>/``: each batch's (id, term, tf, dl) rows,
   term-sorted WITHIN the batch partition (footer pruning holds per
-  batch, as with update_text_index's appended files), written with
-  dynamic partition overwrite — a replay rewrites exactly its own
-  partition with identical content (batch composition is pinned by the
-  checkpoint offset log).
-- ``stats/b=<batch>/``: one (n_docs, sum_dl) row per batch, same
-  overwrite discipline.
+  batch, as with update_text_index's appended files).
+- ``stats/b=<batch>/``: one (n, sum_dl) row per batch.
 - NO vocab table: the probe derives each query term's document
   frequency from the pruned postings it already reads (df(term) =
   row count of that term's postings — exact, since postings carry one
@@ -30,9 +27,7 @@ same corpus (same exact integers, same 9-dp DECIMAL(28,12) folds) —
 pinned in tests and by the stream_index_ingest differential registration.
 
 Batch doc-id disjointness is the stream's contract (an ingest assigns
-fresh ids); as everywhere in the streaming layer, exactly-once rides on
-Structured Streaming's offset log, so production callers MUST pass a
-durable ``checkpoint_location``. Compaction of many small batch
+fresh ids). Compaction of many small batch
 partitions into update_text_index's layout is a maintenance-window job
 (the compact_fingerprint_index pattern); probes are correct either way.
 
@@ -49,7 +44,15 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nyc_opendata_etl_spark.sources.batch_log import must_read_log, write_batch
 from nyc_opendata_etl_spark.streaming.drain import drain
+
+#: The batch logs' on-disk relations (``batch_log.read_log``).
+STATS_SCHEMA = "n long, sum_dl long, b long"
+
+
+def postings_schema(id_col: str = "doc_id") -> str:
+    return f"{id_col} long, term string, tf long, dl long, b long"
 
 
 def index_ingest_batch(
@@ -104,25 +107,17 @@ def index_ingest_batch(
     # whole-FILE footer pruning weakens (each file now spans the
     # term alphabet), a bounded 4-footer read per batch partition at
     # probe time vs. a full per-batch recompute at write time.
-    (
-        postings.repartition(4, "term")
-        .sortWithinPartitions("term", id_col)
-        .withColumn("b", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b")
-        .parquet(f"{index_path}/postings")
+    write_batch(
+        postings.repartition(4, "term").sortWithinPartitions("term", id_col),
+        f"{index_path}/postings",
+        batch_id,
+        overwrite="dynamic",
     )
     stats = dl.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
-    ).withColumn("b", F.lit(batch_id))
-    (
-        stats.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("b")
-        .parquet(f"{index_path}/stats")
     )
+    write_batch(stats, f"{index_path}/stats", batch_id, overwrite="dynamic")
 
 
 def stream_index_ingest(
@@ -158,11 +153,11 @@ def bm25_topk_delta(
     (one row per (term, doc) — no vocab relation exists to go stale);
     corpus totals fold the per-batch stats rows. Same 9-dp
     DECIMAL(28,12) contribution folds as every BM25 path."""
-    post = spark.read.parquet(f"{index_path}/postings").filter(
-        F.col("term").isin(list(query_terms))
-    )
+    post = must_read_log(
+        spark, f"{index_path}/postings", postings_schema(id_col)
+    ).filter(F.col("term").isin(list(query_terms)))
     stats = F.broadcast(
-        spark.read.parquet(f"{index_path}/stats").agg(
+        must_read_log(spark, f"{index_path}/stats", STATS_SCHEMA).agg(
             F.sum("n").cast("long").alias("n"),
             F.sum("sum_dl").cast("long").alias("sum_dl"),
         )

@@ -10,26 +10,18 @@ survivors to the corpus sink, and (4) records the survivors' canons in
 the index — so the accepted corpus never contains two docs with the
 same canonical text, across the entire stream's lifetime.
 
-Exactly-once without a transaction log: BOTH writes are idempotent,
-keyed by the micro-batch id —
-
-- the corpus sink partitions by ``batch_id`` and dynamic-overwrites
-  only its own partition (the stream_to_partitioned_sink contract);
-- the index is the refcounted ``(h, cnt)`` delta log of
-  operators/dedup, whose ``b`` partition is the batch id, dynamic-
-  overwritten the same way; the probe EXCLUDES rows with
-  ``b == current_batch_id``, so a replayed batch (failure after a
-  partial write, before the checkpoint commit) sees exactly the
-  pre-batch index state and recomputes the identical survivor set,
-  then overwrites both of its own partitions.
-  Without the exclusion, a replay would find its own canons already
-  indexed, emit nothing, and dynamic-overwrite its corpus partition
-  with EMPTY — silent data loss on the exact failure the checkpoint
-  exists to survive.
-
-As with stream_to_partitioned_sink, the guarantee rides on Structured
-Streaming's offset log pinning batch composition across restarts:
-production callers MUST pass a durable ``checkpoint_location``.
+Exactly-once without a transaction log: the corpus sink and the index
+are both batch logs of ``sources/batch_log.py``, partitioned by ``b`` =
+the micro-batch id, and the batch rewrites its own partition of each
+(that module states the replay discipline). The probe EXCLUDES rows
+with ``b == current_batch_id``, so a replayed batch sees exactly the
+pre-batch index and recomputes the identical survivor set. Without the
+exclusion, a replay would find its own canons already indexed, emit
+nothing, and overwrite its corpus partition with EMPTY: silent data
+loss on the exact failure the checkpoint exists to survive. The filter
+is ``!=``, not ``<``: a fresh checkpoint over an existing log restarts
+the batch ids, and the partitions an earlier run wrote above the
+restarted id must still reject their canons.
 
 Takedowns (:func:`~nyc_opendata_etl_spark.operators.dedup.delete_from_fingerprint_index`)
 and compaction
@@ -150,11 +142,11 @@ def dedup_ingest_batch(
     at module level so tests can drive replay semantics directly; the
     streaming wrapper passes it to ``foreachBatch``."""
     from nyc_opendata_etl_spark.operators.dedup import (
+        FINGERPRINT_INDEX_SCHEMA,
         live_canons,
-        read_fingerprint_index,
-        write_fingerprint_log,
     )
     from nyc_opendata_etl_spark.operators.text import fingerprint
+    from nyc_opendata_etl_spark.sources.batch_log import read_log, write_batch
 
     spark = batch_df.sparkSession
     cols = batch_df.columns
@@ -181,7 +173,7 @@ def dedup_ingest_batch(
         .select("__h__", "__r__.*")
         .localCheckpoint()
     )
-    idx = read_fingerprint_index(spark, index_path)
+    idx = read_log(spark, index_path, FINGERPRINT_INDEX_SCHEMA)
     if idx is None:
         fresh = collapsed
     else:
@@ -207,15 +199,8 @@ def dedup_ingest_batch(
     if fresh is not collapsed:
         fresh = fresh.persist()
     try:
-        (
-            fresh.select(*cols)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-        write_fingerprint_log(
+        write_batch(fresh.select(*cols), out_path, batch_id, overwrite="dynamic")
+        write_batch(
             fresh.groupBy(F.col("__h__").alias("h")).agg(
                 F.count(F.lit(1)).cast("long").alias("cnt")
             ),

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.operators import dedup
 from nyc_opendata_etl_spark.operators import index_maintenance as im
+from nyc_opendata_etl_spark.sources.batch_log import read_log
 
 DUP_TEXT = "the quick brown fox jumps over the lazy dog again and again"
 
@@ -33,8 +34,12 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _index(spark, path):
+    return read_log(spark, path, dedup.FINGERPRINT_INDEX_SCHEMA)
+
+
 def _probe_ids(spark, path, batch) -> set[int]:
-    idx = dedup.read_fingerprint_index(spark, path)
+    idx = _index(spark, path)
     return {
         r["doc_id"] for r in dedup.incremental_new_docs(batch, idx).collect()
     }
@@ -42,7 +47,7 @@ def _probe_ids(spark, path, batch) -> set[int]:
 
 def _log_rows(spark, path) -> list[tuple]:
     """Sorted ``(h, cnt, b)`` rows of the log at ``path``."""
-    return sorted(map(tuple, dedup.read_fingerprint_index(spark, path).collect()))
+    return sorted(map(tuple, _index(spark, path).collect()))
 
 
 def test_build_rc_counts_docs_per_canon(spark, tmp_path):
@@ -161,7 +166,7 @@ def test_rc_index_matches_brute_force_on_arbitrary_interleavings(spark, data):
         got_new = sorted(
             r["doc_id"]
             for r in dedup.incremental_new_docs(
-                df(probe), dedup.read_fingerprint_index(spark, path)
+                df(probe), _index(spark, path)
             ).collect()
         )
         assert got_new == want_new
@@ -177,7 +182,7 @@ def test_rc_probe_never_shuffles_the_index(spark, tmp_path):
     path = str(tmp_path / "fp")
     dedup.build_fingerprint_index(_docs(spark), path)
     plan = dedup.incremental_new_docs(
-        _docs(spark), dedup.read_fingerprint_index(spark, path)
+        _docs(spark), _index(spark, path)
     )._jdf.queryExecution().executedPlan().toString()
     # batch hashes broadcast into the index scan; no sort-merge join
     # (which would shuffle the full index on h) anywhere in the probe
@@ -250,12 +255,12 @@ def test_index_or_none_missing_vs_corrupt(spark, tmp_path):
     medium)."""
     import pytest
 
-    assert dedup.read_fingerprint_index(spark, str(tmp_path / "never_written")) is None
+    assert _index(spark, str(tmp_path / "never_written")) is None
     bad = tmp_path / "idx"
     bad.mkdir()
     (bad / "part-00000.parquet").write_bytes(b"this is not a parquet footer")
     with pytest.raises(Exception):
-        df = dedup.read_fingerprint_index(spark, str(bad))
+        df = _index(spark, str(bad))
         # schema inference may defer the footer read; force it
         if df is not None:
             df.collect()
