@@ -25,6 +25,12 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nyc_opendata_etl_spark.sources.batch_log import (
+    commit,
+    current_dir,
+    write_folded,
+)
+
 
 def month_windows(
     start: datetime.date, end: datetime.date
@@ -69,7 +75,8 @@ def backfill_partitioned(
     Dynamic partition overwrite is pinned at the WRITER level (not
     session conf), so overwrite replaces ONLY the months present in the
     input window on any session — re-running a window is idempotent and
-    touches nothing else.
+    touches nothing else. The write goes into the committed version of
+    the versioned root ``sink_path`` (``batch_log.current_dir``).
     """
     out = df
     if start is not None:
@@ -81,58 +88,29 @@ def backfill_partitioned(
         out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
-        .parquet(sink_path)
+        .parquet(current_dir(sink_path))
     )
 
 
 def compact_partitions(
     spark, sink_path: str, partition_col: str = "month"
 ) -> int:
-    """Compact a partitioned parquet sink: rewrite each partition's
-    many small files (the residue of incremental micro-batch appends)
-    into one file per partition.
-
-    Small files are the classic lake-maintenance problem — at 100 TB a
-    month of 5-minute micro-batches leaves ~8k files/partition and scan
-    planning degrades. One shuffle clustered by the partition column
-    re-writes each partition from a single task.
-
-    Crash tolerance: the compacted copy is written to a temp sibling
-    path first, so a failure during the (expensive) rewrite leaves the
-    original sink untouched. The final two-rename swap is NOT atomic —
-    a crash between them leaves the sink path absent with the original
-    preserved under ``<sink>__compact_old`` (recovery: rename it back).
-    The swap uses local-FS ``os.rename``, so this helper requires a
-    local path and rejects remote URIs up front (on HDFS/object stores
-    the same protocol must go through the Hadoop FileSystem API
-    instead). Returns the row count (sanity handle for the caller).
+    """Compact a month sink written by :func:`backfill_partitioned` or
+    ``events.stream_to_partitioned_sink`` (a versioned root of
+    ``sources/batch_log.py``): one shuffle clustered by the partition
+    column rewrites each partition's small files (at 100 TB a month of
+    5-minute micro-batches leaves ~8k) as one file, committed as the
+    sink's next version, so a crash leaves the old or the new version
+    serving. A streamed sink's ``b`` partitions fold into the reserved
+    compacted id, so later batches land beside it. A remote URI raises
+    ``ValueError`` before any job. Returns the row count.
     """
-    import os
-    import re
-    import shutil
-
-    if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", sink_path) and not sink_path.startswith(
-        "file://"
-    ):
-        raise ValueError(
-            f"compact_partitions swaps via local-FS rename; got remote URI {sink_path!r}"
-        )
-
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(sink_path)
+    df = spark.read.parquet(current_dir(sink_path))
     n = df.count()
-    tmp = sink_path.rstrip("/") + "__compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        df.repartition(F.col(partition_col))
-        .write.mode("overwrite")
-        .partitionBy(partition_col)
-        .parquet(tmp)
+    commit(
+        sink_path,
+        lambda new: write_folded(
+            df.repartition(F.col(partition_col)), new, partition_col
+        ),
     )
-    old = sink_path.rstrip("/") + "__compact_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(sink_path, old)
-    os.rename(tmp, sink_path)
-    shutil.rmtree(old)
     return n

@@ -11,9 +11,11 @@ UPDATE step touches only the new batch plus the artifact, never the
 already-indexed corpus, and whose output is pinned IDENTICAL to a
 from-scratch `dedup.duplicate_clusters_collapsed` run.
 
-Artifact layout under ``path/``: three batch logs and a versioned
-snapshot, the two replay-safe formats of ``sources/batch_log.py``
-(that module states the replay discipline):
+Artifact layout: the committed version of the versioned root ``path``
+(a build or compaction commits the whole root; an update writes into
+it in place) holds three batch logs and a versioned snapshot, the
+replay-safe formats of ``sources/batch_log.py`` (which states the
+replay discipline):
 
 - ``reps/b=<batch>/``    one row per distinct canonical text first
                 seen in that batch: (ch = md5(canon), rep = min doc
@@ -73,8 +75,6 @@ documented, not implemented here).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -85,6 +85,8 @@ from nyc_opendata_etl_spark.operators.dedup import (
     word_shingles,
 )
 from nyc_opendata_etl_spark.sources.batch_log import (
+    commit,
+    current_dir,
     current_version,
     must_read_log,
     version_below,
@@ -147,8 +149,8 @@ def build_dup_cluster_index(
     """From-scratch build: write reps/prefix/members (batch partition
     ``b=BUILD_BATCH``) and the initial cluster-map snapshot
     (`duplicate_clusters_collapsed` — the proven kernel) as
-    ``clusters/v=BUILD_BATCH``. ``_BUILT`` is written last, proving
-    all four relations landed."""
+    ``clusters/v=BUILD_BATCH``, all four committed as one version of
+    the root."""
     src = _canon_src(docs, text_col, id_col)
     grp = src.groupBy(F.md5("__canon__").alias("ch")).agg(
         F.min("id").alias("rep"),
@@ -164,11 +166,6 @@ def build_dup_cluster_index(
         .join(reps.select("ch", "rep"), "ch")
         .select(F.col("id").alias("doc_id"), "rep")
     )
-    for rel, df in (
-        ("reps", reps), ("prefix", _prefix_rows(reps, threshold)),
-        ("members", members),
-    ):
-        write_batch(df, f"{path}/{rel}", BUILD_BATCH, overwrite="dynamic")
     clusters = duplicate_clusters_collapsed(
         docs,
         text_col=text_col,
@@ -177,9 +174,16 @@ def build_dup_cluster_index(
         threshold=threshold,
         cc_kernel=cc_kernel,
     )
-    write_version(clusters, f"{path}/clusters", BUILD_BATCH)
-    with open(os.path.join(path, "_BUILT"), "w") as fh:
-        fh.write("")
+
+    def write(new: str) -> None:
+        for rel, df in (
+            ("reps", reps), ("prefix", _prefix_rows(reps, threshold)),
+            ("members", members),
+        ):
+            write_batch(df, f"{new}/{rel}", BUILD_BATCH)
+        write_version(clusters, f"{new}/clusters", BUILD_BATCH)
+
+    commit(path, write)
 
 
 def update_dup_cluster_index(
@@ -216,7 +220,8 @@ def update_dup_cluster_index(
         raise ValueError(
             f"batch_id={batch_id} must exceed the build batch {BUILD_BATCH}"
         )
-    applied = version_dirs(f"{path}/clusters")
+    cur = current_dir(path)
+    applied = version_dirs(f"{cur}/clusters")
     if applied and batch_id < max(applied):
         # ADVICE r15: out-of-order batch ids must fail LOUDLY. A batch
         # at/below an already-applied batch is only legal as a REPLAY of
@@ -231,7 +236,7 @@ def update_dup_cluster_index(
         )
     t = float(threshold)
 
-    v_old = version_below(f"{path}/clusters", batch_id)
+    v_old = version_below(f"{cur}/clusters", batch_id)
     if v_old is None:
         raise ValueError(
             f"update_dup_cluster_index: no cluster snapshot below batch "
@@ -244,7 +249,7 @@ def update_dup_cluster_index(
         # attempt of THIS batch is invisible; lazy reads evaluated after
         # this batch's writes would otherwise double-count its rows)
         return (
-            must_read_log(spark, f"{path}/{rel}", schema[rel])
+            must_read_log(spark, f"{cur}/{rel}", schema[rel])
             .filter(F.col("b") < F.lit(batch_id))
             .drop("b")
             .localCheckpoint()
@@ -252,7 +257,7 @@ def update_dup_cluster_index(
 
     reps_old, prefix_old = old("reps"), old("prefix")
     clusters_old = must_read_log(
-        spark, f"{path}/clusters/v={v_old}", schema["clusters"]
+        spark, f"{cur}/clusters/v={v_old}", schema["clusters"]
     ).localCheckpoint()
 
     newsrc = _canon_src(new_docs, text_col, id_col).localCheckpoint()
@@ -297,7 +302,7 @@ def update_dup_cluster_index(
         ("reps", new_reps.select("ch", "rep", "sh", "n_sh")),
         ("prefix", _prefix_rows(new_reps, t)), ("members", members),
     ):
-        write_batch(df, f"{path}/{rel}", batch_id, overwrite="dynamic")
+        write_batch(df, f"{cur}/{rel}", batch_id, overwrite="dynamic")
 
     # candidate pairs involving new reps — index probe, not corpus scan
     npref = _prefix_rows(new_reps, t)
@@ -437,7 +442,7 @@ def update_dup_cluster_index(
         .select(F.col("id").alias("doc_id"), "cluster_id")
     )
     out = part_a.unionByName(part_b).unionByName(part_c)
-    write_version(out, f"{path}/clusters", batch_id)
+    write_version(out, f"{cur}/clusters", batch_id)
 
 
 def compact_dup_cluster_index(spark: SparkSession, path: str) -> None:
@@ -451,36 +456,27 @@ def compact_dup_cluster_index(spark: SparkSession, path: str) -> None:
     either way.
 
     Run ONLY in a maintenance window with the ingest stream stopped
-    and its checkpoint committed (the prune_scd2_versions contract):
+    and its checkpoint committed (the ``batch_log.prune_versions`` contract):
     compaction relabels rows below every batch id, so a replay of a
     pre-compaction batch would re-apply it — the checkpoint horizon,
-    not this function, is what makes that impossible."""
-    from nyc_opendata_etl_spark.operators.index_maintenance import _swap_dir
+    not this function, is what makes that impossible. The folded
+    logs and the kept snapshot commit together as the root's next
+    version."""
+    cur = current_dir(path)
+    keep = current_version(f"{cur}/clusters")
+    clusters = spark.read.parquet(f"{cur}/clusters/v={keep}")
+    schema = artifact_schemas(clusters.schema["doc_id"].dataType.simpleString())
 
-    keep = current_version(f"{path}/clusters")
-    cur = spark.read.parquet(f"{path}/clusters/v={keep}").localCheckpoint()
-    schema = artifact_schemas(cur.schema["doc_id"].dataType.simpleString())
-    for rel in ("reps", "prefix", "members"):
-        rows = (
-            must_read_log(spark, f"{path}/{rel}", schema[rel])
-            .drop("b")
-            .localCheckpoint()
-        )
-        _swap_dir(
-            f"{path}/{rel}",
-            lambda tmp, rows=rows: write_batch(
-                rows, tmp, BUILD_BATCH, overwrite="static"
-            ),
-        )
-    # _CURRENT lives INSIDE clusters/, so the swap removes it: the
-    # pointer is written into the tmp dir, landing in the same rename as
-    # the snapshot (a post-hoc pointer write could crash and leave
-    # read_dup_clusters raising FileNotFoundError)
-    _swap_dir(f"{path}/clusters", lambda tmp: write_version(cur, tmp, keep))
+    def write(new: str) -> None:
+        for rel in ("reps", "prefix", "members"):
+            rows = must_read_log(spark, f"{cur}/{rel}", schema[rel]).drop("b")
+            write_batch(rows, f"{new}/{rel}", BUILD_BATCH)
+        write_version(clusters, f"{new}/clusters", keep)
+
+    commit(path, write)
 
 
 def read_dup_clusters(spark: SparkSession, path: str) -> DataFrame:
     """The cluster map as of the newest committed batch (pointer read
     — the reader-side convenience no update ever uses as input)."""
-    v = current_version(f"{path}/clusters")
-    return spark.read.parquet(f"{path}/clusters/v={v}")
+    return spark.read.parquet(current_dir(f"{current_dir(path)}/clusters"))

@@ -25,7 +25,13 @@ from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.functions.hashing import md5_long
 from nyc_opendata_etl_spark.operators.text import canon_text, fingerprint
-from nyc_opendata_etl_spark.sources.batch_log import write_batch
+from nyc_opendata_etl_spark.sources.batch_log import (
+    COMPACTED_B,
+    TAKEDOWN_B,
+    commit,
+    current_dir,
+    write_batch,
+)
 
 
 def exact_dedup_groups(
@@ -1157,7 +1163,8 @@ def sorted_neighborhood_pairs_adaptive(
 # probe each (small) increment against them.
 #
 # The index is a refcounted delta log: ``(h, cnt)`` rows in a batch log
-# (sources/batch_log.py), partitioned by ``b``. A build writes per-canon
+# (sources/batch_log.py), partitioned by ``b``, under a versioned root
+# (the log is ``current_dir(path)``). A build writes per-canon
 # doc counts, updates append positive deltas and deletions append
 # NEGATIVE deltas, so every direction of maintenance is an O(batch)
 # write that never reads the index. A canon
@@ -1172,10 +1179,6 @@ def sorted_neighborhood_pairs_adaptive(
 # its own batch id (always ≥ 0) by dynamic overwrite, so the ingest's
 # probe can exclude the current batch on replay with a partition filter.
 # ──────────────────────────────────────────────────────────────────────
-
-#: Reserved index partitions; real micro-batch ids are >= 0.
-COMPACTED_B = -1
-TAKEDOWN_B = -2
 
 #: The index's on-disk relation, read with this schema
 #: (``batch_log.read_log``).
@@ -1198,15 +1201,17 @@ def _canon_deltas(docs: DataFrame, text_col: str, sign: int = 1) -> DataFrame:
 
 
 def write_live_fingerprints(counts: DataFrame, path: str) -> None:
-    """Replace the whole directory at ``path`` with the ``(h, cnt)``
-    rows of ``counts`` under ``b = -1``, range-partitioned and sorted on
-    ``h`` so footer min/max bounds each file. Shared by the build and
-    by compaction."""
-    write_batch(
-        counts.repartitionByRange(_INDEX_FILES, "h").sortWithinPartitions("h"),
+    """Commit the ``(h, cnt)`` rows of ``counts`` under ``b = -1`` as
+    the whole log at ``path``, range-partitioned and sorted on ``h`` so
+    footer min/max bounds each file. Shared by the build and by
+    compaction."""
+    commit(
         path,
-        COMPACTED_B,
-        overwrite="static",
+        lambda new: write_batch(
+            counts.repartitionByRange(_INDEX_FILES, "h").sortWithinPartitions("h"),
+            new,
+            COMPACTED_B,
+        ),
     )
 
 
@@ -1224,7 +1229,7 @@ def update_fingerprint_index(
     """Append a new batch's per-canon doc counts as positive deltas —
     O(new docs); the index is never re-read. Probes sum repeated
     canons; compaction folds them to one row."""
-    write_batch(_canon_deltas(new_docs, text_col), path, COMPACTED_B)
+    write_batch(_canon_deltas(new_docs, text_col), current_dir(path), COMPACTED_B)
 
 
 def delete_from_fingerprint_index(
@@ -1237,7 +1242,9 @@ def delete_from_fingerprint_index(
     pass each withdrawn doc ONCE (the relation being deleted from the
     corpus table): double-deleting drives the sum negative, which
     probes and compaction both treat as absent."""
-    write_batch(_canon_deltas(deleted_docs, text_col, sign=-1), path, TAKEDOWN_B)
+    write_batch(
+        _canon_deltas(deleted_docs, text_col, sign=-1), current_dir(path), TAKEDOWN_B
+    )
 
 
 def live_canons(index: DataFrame, hashes: DataFrame) -> DataFrame:
@@ -1454,30 +1461,28 @@ def build_lsh_bucket_index(
         reps, "__canon__", "id", num_hashes, portable=True, assume_canonical=True
     )
     banded = lsh_banded_buckets(sig, num_hashes, bands, portable=True)
-    (
-        banded.select(
-            F.col("id").alias("corpus_id"), "band_idx", "band_hash"
+
+    def write(new: str) -> None:
+        (
+            banded.select(
+                F.col("id").alias("corpus_id"), "band_idx", "band_hash"
+            )
+            .repartitionByRange(num_files, "band_hash")
+            .sortWithinPartitions("band_hash", "corpus_id")
+            .write.parquet(f"{new}/buckets")
         )
-        .repartitionByRange(num_files, "band_hash")
-        .sortWithinPartitions("band_hash", "corpus_id")
-        .write.mode("overwrite")
-        .parquet(f"{path}/buckets")
-    )
-    # ``params/``: the index is SELF-DESCRIBING (round-11 advisor): a
-    # probe banded with a different num_hashes/bands than the build
-    # joins on (band_idx, band_hash) values from a DIFFERENT hash
-    # family — structurally valid but silently empty/garbage matches.
-    # The probe validates against this record. Written LAST: its
-    # _SUCCESS marker proves the whole build (same protocol as
-    # similarity.build_ivfpq_index).
-    (
-        docs.sparkSession.createDataFrame(
-            [(int(num_hashes), int(bands))], "num_hashes int, bands int"
+        # ``params/`` makes the index SELF-DESCRIBING: a probe banded
+        # with another num_hashes/bands joins on a DIFFERENT hash family
+        # (silently empty/garbage matches), so it validates against this.
+        (
+            docs.sparkSession.createDataFrame(
+                [(int(num_hashes), int(bands))], "num_hashes int, bands int"
+            )
+            .coalesce(1)
+            .write.parquet(f"{new}/params")
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/params")
-    )
+
+    commit(path, write)
 
 
 def update_lsh_bucket_index(
@@ -1496,7 +1501,8 @@ def update_lsh_bucket_index(
     idempotent to that, and periodic compaction dedups, as with any
     append-log relation (the update_fingerprint_index contract)."""
     spark = new_docs.sparkSession
-    p = spark.read.parquet(f"{path}/params").first()
+    cur = current_dir(path)
+    p = spark.read.parquet(f"{cur}/params").first()
     reps = _collapse_to_reps_onepass(new_docs, text_col, id_col)
     sig = minhash_signatures(
         reps, "__canon__", "id", p["num_hashes"], portable=True, assume_canonical=True
@@ -1505,7 +1511,7 @@ def update_lsh_bucket_index(
     (
         banded.select(F.col("id").alias("corpus_id"), "band_idx", "band_hash")
         .write.mode("append")
-        .parquet(f"{path}/buckets")
+        .parquet(f"{cur}/buckets")
     )
 
 
@@ -1530,7 +1536,8 @@ def incremental_near_dups(
     corpus rows — structurally valid join keys, silently empty or
     garbage matches, no exception — so it raises instead."""
     spark = batch.sparkSession
-    p = spark.read.parquet(f"{index_path}/params").first()
+    cur = current_dir(index_path)
+    p = spark.read.parquet(f"{cur}/params").first()
     if (num_hashes, bands) != (p["num_hashes"], p["bands"]):
         raise ValueError(
             f"incremental_near_dups called with num_hashes={num_hashes}, "
@@ -1540,7 +1547,7 @@ def incremental_near_dups(
             f"empty/garbage matches); rebuild the index or match the probe "
             f"parameters"
         )
-    bucket_index = spark.read.parquet(f"{index_path}/buckets")
+    bucket_index = spark.read.parquet(f"{cur}/buckets")
     reps = _collapse_to_reps_onepass(batch, text_col, id_col)
     sig = minhash_signatures(
         reps, "__canon__", "id", num_hashes, portable=True, assume_canonical=True

@@ -19,11 +19,10 @@ implement that maintenance pass:
   index's vocab (term→df) and stats (n, sum_dl) are re-derived from
   the surviving postings rather than patched — compaction is the
   point where approximate append-bookkeeping reconciles to exact.
-- **Crash tolerance**: each relation rewrites to a ``__compact_tmp``
-  sibling and swaps by rename (the operators/backfill.compact_partitions
-  protocol): a failure mid-rewrite leaves the live index untouched; a
-  crash between the two renames leaves ``__compact_old`` for manual
-  recovery. Local-FS only, as documented there.
+- **Crash tolerance**: every pass commits the next version of the
+  whole index root (``sources/batch_log.commit``), carrying unchanged
+  relations over: a crash leaves readers on the old index or the new
+  one, never a mix, and re-running the pass finishes it.
 
 Scale shape: every compaction is one scan of the index relation (NOT
 the corpus) + an optional broadcast-able anti-join on the delete ids +
@@ -37,24 +36,15 @@ probes see at once, and compaction folds the delta log to live rows.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _swap_dir(live: str, rebuild) -> None:
-    """Write via ``rebuild(tmp_path)`` then two-rename swap into
-    ``live`` (crash tolerance contract in the module docstring)."""
-    tmp = live.rstrip("/") + "__compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    rebuild(tmp)
-    old = live.rstrip("/") + "__compact_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(live, old)
-    os.rename(tmp, live)
-    shutil.rmtree(old)
+from nyc_opendata_etl_spark.sources.batch_log import (
+    commit,
+    current_dir,
+    must_read_log,
+    write_folded,
+)
 
 
 def _minus_ids(df: DataFrame, delete_ids: DataFrame | None, col: str) -> DataFrame:
@@ -69,35 +59,32 @@ def compact_text_index(
 ) -> None:
     """Compact a build_text_index layout: drop deleted docs' postings,
     coalesce append batches back into the term-sorted num_files layout,
-    and re-derive vocab and stats exactly from the survivors."""
+    and re-derive vocab and stats exactly from the survivors. The three
+    relations commit together."""
     post = _minus_ids(
-        spark.read.parquet(f"{path}/postings"), delete_ids, "doc_id"
+        spark.read.parquet(f"{current_dir(path)}/postings"), delete_ids, "doc_id"
     )
-    n_files = 8
-    _swap_dir(
-        f"{path}/postings",
-        lambda tmp: (
-            post.repartitionByRange(n_files, "term")
+
+    def write(new: str) -> None:
+        (
+            post.repartitionByRange(8, "term")
             .sortWithinPartitions("term", "doc_id")
-            .write.parquet(tmp)
-        ),
-    )
-    compacted = spark.read.parquet(f"{path}/postings")
-    vocab = compacted.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df")
-    )
-    _swap_dir(
-        f"{path}/vocab", lambda tmp: vocab.coalesce(1).write.parquet(tmp)
-    )
-    # one (doc, dl) row per doc: dl is denormalized per posting row
-    dls = compacted.select("doc_id", "dl").distinct()
-    stats = dls.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
-    )
-    _swap_dir(
-        f"{path}/stats", lambda tmp: stats.coalesce(1).write.parquet(tmp)
-    )
+            .write.parquet(f"{new}/postings")
+        )
+        compacted = spark.read.parquet(f"{new}/postings")
+        vocab = compacted.groupBy("term").agg(
+            F.count(F.lit(1)).cast("long").alias("df")
+        )
+        vocab.coalesce(1).write.parquet(f"{new}/vocab")
+        # one (doc, dl) row per doc: dl is denormalized per posting row
+        dls = compacted.select("doc_id", "dl").distinct()
+        stats = dls.agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
+        )
+        stats.coalesce(1).write.parquet(f"{new}/stats")
+
+    commit(path, write)
 
 
 def compact_lsh_index(
@@ -105,18 +92,19 @@ def compact_lsh_index(
 ) -> None:
     """Compact a build_lsh_bucket_index layout: drop deleted corpus
     ids' bucket rows, dedup repeated append batches, restore the
-    band_hash-clustered layout. params/ is untouched — the hash family
-    survives compaction by definition."""
+    band_hash-clustered layout. params/ is carried over unchanged — the
+    hash family survives compaction by definition."""
     buckets = _minus_ids(
-        spark.read.parquet(f"{path}/buckets"), delete_ids, "corpus_id"
+        spark.read.parquet(f"{current_dir(path)}/buckets"), delete_ids, "corpus_id"
     ).distinct()
-    _swap_dir(
-        f"{path}/buckets",
-        lambda tmp: (
+    commit(
+        path,
+        lambda new: (
             buckets.repartitionByRange(8, "band_hash")
             .sortWithinPartitions("band_hash", "corpus_id")
-            .write.parquet(tmp)
+            .write.parquet(f"{new}/buckets")
         ),
+        carry=("params",),
     )
 
 
@@ -135,15 +123,14 @@ def compact_fingerprint_index(spark: SparkSession, path: str) -> None:
         FINGERPRINT_INDEX_SCHEMA,
         write_live_fingerprints,
     )
-    from nyc_opendata_etl_spark.sources.batch_log import must_read_log
 
     folded = (
-        must_read_log(spark, path, FINGERPRINT_INDEX_SCHEMA)
+        must_read_log(spark, current_dir(path), FINGERPRINT_INDEX_SCHEMA)
         .groupBy("h")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
         .filter(F.col("cnt") > 0)
     )
-    _swap_dir(path, lambda tmp: write_live_fingerprints(folded, tmp))
+    write_live_fingerprints(folded, path)
 
 
 def compact_ivfpq_index(
@@ -151,24 +138,23 @@ def compact_ivfpq_index(
 ) -> None:
     """Compact a build_ivfpq_index layout: drop deleted vectors' code
     rows and rewrite the cell-partitioned codes/ (one file per touched
-    cell instead of per-batch fragments). Centroids, codebook, and
-    params are untouched — quantizers survive deletion; re-training is
-    a separate (full-build) decision."""
+    cell instead of per-batch fragments; a streamed codes log folds
+    into the compacted batch id). Centroids, codebook, and params are
+    carried over unchanged — quantizers survive deletion; re-training
+    is a separate (full-build) decision."""
     from nyc_opendata_etl_spark.operators.similarity import (
         _salted_cid_repartition,
     )
 
-    n_centroids = int(
-        spark.read.parquet(f"{path}/params").first()["n_centroids"]
-    )
-    codes = _minus_ids(spark.read.parquet(f"{path}/codes"), delete_ids, "id")
-    _swap_dir(
-        f"{path}/codes",
-        lambda tmp: (
-            _salted_cid_repartition(codes, n_centroids)
-            .write.partitionBy("cid")
-            .parquet(tmp)
+    cur = current_dir(path)
+    n_centroids = int(spark.read.parquet(f"{cur}/params").first()["n_centroids"])
+    codes = _minus_ids(spark.read.parquet(f"{cur}/codes"), delete_ids, "id")
+    commit(
+        path,
+        lambda new: write_folded(
+            _salted_cid_repartition(codes, n_centroids), f"{new}/codes", "cid"
         ),
+        carry=("params", "centroids", "codebook"),
     )
 
 
@@ -179,50 +165,19 @@ def retrain_ivfpq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Periodic quantizer RE-TRAIN — the maintenance pass every
-    ``update_ivfpq_index`` docstring defers to ("drift between corpus
-    and quantizers is what periodic re-trains are for"), completing
-    the index lifecycle: build / incremental append / exactly-once
-    streaming ingest / delete+compact / **retrain**.
-
-    Appends reuse the build's quantizers (the FAISS ``add()``
-    contract), so after enough corpus turnover the centroids stop
-    describing the data: recall decays even though every probe is
-    "correct" against the stale cells. The heal is a re-train from the
-    CURRENT corpus: recompute centroids and codebook under the same
-    deterministic convention as :func:`~.similarity.build_ivfpq_index`
-    (keeping the live index's recorded n_centroids/m/d_sub/n_codes —
-    the self-describing ``params/`` contract survives), re-assign and
-    re-encode every vector, and SWAP THE WHOLE INDEX DIRECTORY in one
-    rename pair. The whole-dir swap is the correctness point:
-    quantizers and codes must never mix across versions (a code is
-    meaningless against another codebook's centroids), so the unit of
-    atomicity is the index, not the relation — readers see the old
-    index or the new one, never a hybrid. A crash mid-rebuild leaves
-    the live index untouched (``__compact_tmp`` discipline above).
-
-    By the deterministic convention quantizers, the retrained index is
-    read-equivalent to a FRESH ``build_ivfpq_index`` over the current
-    corpus — the proof-by-identity the staged query's oracle replays.
-
-    Cost shape at 100 TB: one full-corpus assignment+encode pass (the
-    same cost as the initial build, which is what "re-train" means) —
-    scheduled maintenance, never on the probe path; probes pay zero
-    until the pointer flips to the new directory."""
+    """Periodic quantizer RE-TRAIN, the pass every
+    ``update_ivfpq_index`` defers to: appends reuse the build's
+    quantizers (the FAISS ``add()`` contract), so after enough corpus
+    turnover the centroids stop describing the data and recall decays.
+    The heal is :func:`~.similarity.build_ivfpq_index` over the CURRENT
+    corpus with the params the index recorded (``params/``), committed
+    as the next version of the whole root: quantizers and codes never
+    mix across versions (a code is meaningless against another
+    codebook), and a crash at any step of the commit leaves the old
+    index or the new one serving. The result is read-equivalent to a
+    fresh build, the identity the staged query's oracle replays. Cost:
+    one full-corpus assignment+encode pass, off the probe path."""
     from nyc_opendata_etl_spark.operators.similarity import build_ivfpq_index
 
-    p = spark.read.parquet(f"{path}/params").first()
-
-    def rebuild(tmp: str) -> None:
-        build_ivfpq_index(
-            emb,
-            tmp,
-            n_centroids=int(p["n_centroids"]),
-            m=int(p["m"]),
-            d_sub=int(p["d_sub"]),
-            n_codes=int(p["n_codes"]),
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-
-    _swap_dir(path, rebuild)
+    p = spark.read.parquet(f"{current_dir(path)}/params").first()
+    build_ivfpq_index(emb, path, id_col=id_col, vec_col=vec_col, **p.asDict())

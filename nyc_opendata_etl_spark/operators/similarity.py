@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nyc_opendata_etl_spark.sources.batch_log import commit, current_dir
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -1261,40 +1263,37 @@ def build_ivfpq_index(
     codes = pq_encode(
         emb, vec_col=vec_col, id_col=id_col, m=m, d_sub=d_sub, k=n_codes
     ).select("id", "m", "code")
-    (
-        _salted_cid_repartition(codes.join(assigned, "id"), n_centroids)
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(f"{path}/codes")
-    )
-    (
-        emb.filter(F.col(id_col) < n_centroids)
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/centroids")
-    )
-    (
-        _codebook_sub_rows(emb, n_codes, m, d_sub, id_col, vec_col)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/codebook")
-    )
-    # ``params/``: the index is SELF-DESCRIBING (round-11 review): a
-    # probe run with a different m/d_sub than the build silently sums
-    # a subset of the ADC subspace terms (the (m, code) join keeps the
-    # overlap; a d_sub mismatch null-pads the zip_with dot) — wrong
-    # top-k, no exception. The probe validates against this record.
-    # Written LAST: its _SUCCESS marker proves the whole build.
-    (
-        emb.sparkSession.createDataFrame(
-            [(int(n_centroids), int(m), int(d_sub), int(n_codes))],
-            "n_centroids int, m int, d_sub int, n_codes int",
+
+    def write(new: str) -> None:
+        (
+            _salted_cid_repartition(codes.join(assigned, "id"), n_centroids)
+            .write.partitionBy("cid")
+            .parquet(f"{new}/codes")
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/params")
-    )
+        (
+            emb.filter(F.col(id_col) < n_centroids)
+            .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+            .coalesce(1)
+            .write.parquet(f"{new}/centroids")
+        )
+        (
+            _codebook_sub_rows(emb, n_codes, m, d_sub, id_col, vec_col)
+            .coalesce(1)
+            .write.parquet(f"{new}/codebook")
+        )
+        # ``params/`` makes the index SELF-DESCRIBING: a probe with
+        # another m/d_sub would silently sum a subset of the ADC terms
+        # (wrong top-k, no exception), so it validates against this.
+        (
+            emb.sparkSession.createDataFrame(
+                [(int(n_centroids), int(m), int(d_sub), int(n_codes))],
+                "n_centroids int, m int, d_sub int, n_codes int",
+            )
+            .coalesce(1)
+            .write.parquet(f"{new}/params")
+        )
+
+    commit(path, write)
 
 
 def _pq_encode_against(subs: DataFrame, codebook: DataFrame) -> DataFrame:
@@ -1355,9 +1354,10 @@ def update_ivfpq_index(
 
     new_emb = spread(new_emb)
     spark = new_emb.sparkSession
-    p = spark.read.parquet(f"{path}/params").first()
-    cents = spark.read.parquet(f"{path}/centroids")
-    codebook = spark.read.parquet(f"{path}/codebook")
+    cur = current_dir(path)
+    p = spark.read.parquet(f"{cur}/params").first()
+    cents = spark.read.parquet(f"{cur}/centroids")
+    codebook = spark.read.parquet(f"{cur}/codebook")
     assigned = _ivf_assign(
         new_emb, p["n_centroids"], id_col, vec_col, cents=cents
     )
@@ -1369,7 +1369,7 @@ def update_ivfpq_index(
         _salted_cid_repartition(codes.join(assigned, "id"), p["n_centroids"])
         .write.mode("append")
         .partitionBy("cid")
-        .parquet(f"{path}/codes")
+        .parquet(f"{cur}/codes")
     )
 
 
@@ -1402,7 +1402,8 @@ def ivfpq_topk_indexed(
     ``m``/``d_sub`` are validated against the index's persisted
     ``params/`` record: a mismatch used to produce silently-wrong ADC
     distances (subset of subspace terms summed) — now it raises."""
-    p = spark.read.parquet(f"{index_path}/params").first()
+    cur = current_dir(index_path)
+    p = spark.read.parquet(f"{cur}/params").first()
     if (m, d_sub) != (p["m"], p["d_sub"]):
         raise ValueError(
             f"ivfpq_topk_indexed called with m={m}, d_sub={d_sub} but the "
@@ -1411,7 +1412,7 @@ def ivfpq_topk_indexed(
             f"subspace terms (wrong distances, no error); rebuild the "
             f"index or match the probe parameters"
         )
-    cents = spark.read.parquet(f"{index_path}/centroids")
+    cents = spark.read.parquet(f"{cur}/centroids")
     qrow = emb.filter(F.col(id_col) == query_vec_id).select(
         F.col(vec_col).alias("qv")
     )
@@ -1425,7 +1426,7 @@ def ivfpq_topk_indexed(
     )
     probe_cids = [r["cid"] for r in probe_rows]
 
-    codes = spark.read.parquet(f"{index_path}/codes").filter(
+    codes = spark.read.parquet(f"{cur}/codes").filter(
         F.col("cid").isin(probe_cids)  # static partition pruning
     )
 
@@ -1433,7 +1434,7 @@ def ivfpq_topk_indexed(
     # shared _adc_lut recipe — identical math to the inline path)
     lut = _adc_lut(
         _query_sub_rows(emb, query_vec_id, m, d_sub, id_col, vec_col),
-        spark.read.parquet(f"{index_path}/codebook"),
+        spark.read.parquet(f"{cur}/codebook"),
     )
 
     adc = (

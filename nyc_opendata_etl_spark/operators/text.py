@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.functions.hashing import md5_long
 from nyc_opendata_etl_spark.functions.normalize import PY_WS_JAVA
+from nyc_opendata_etl_spark.sources.batch_log import commit, current_dir
 
 # Python-whitespace split (exact str.strip class — see normalize.PY_WS_JAVA,
 # mirrored in the DuckDB oracles via queries/_sql.PY_WS_RE2).
@@ -844,20 +845,23 @@ def build_text_index(
         F.col(id_col),
         F.size(tokens(F.lower(F.col(text_col)))).cast("long").alias("dl"),
     )
-    postings = tf.join(dl, id_col)
-    (
-        postings.repartitionByRange(num_files, "term")
-        .sortWithinPartitions("term", id_col)
-        .write.mode("overwrite")
-        .parquet(f"{path}/postings")
-    )
-    vocab = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    vocab.coalesce(1).write.mode("overwrite").parquet(f"{path}/vocab")
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+
+    def write(new: str) -> None:
+        (
+            tf.join(dl, id_col)
+            .repartitionByRange(num_files, "term")
+            .sortWithinPartitions("term", id_col)
+            .write.parquet(f"{new}/postings")
+        )
+        vocab = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
+        vocab.coalesce(1).write.parquet(f"{new}/vocab")
+        stats = dl.agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("dl").cast("long").alias("sum_dl"),
+        )
+        stats.coalesce(1).write.parquet(f"{new}/stats")
+
+    commit(path, write)
 
 
 def _probe_postings(spark, index_path: str, query_terms: list[str]):
@@ -865,13 +869,14 @@ def _probe_postings(spark, index_path: str, query_terms: list[str]):
     The term predicate pushes into both parquet scans; on the
     term-sorted postings layout it prunes whole files from footer
     stats."""
-    post = spark.read.parquet(f"{index_path}/postings").filter(
+    cur = current_dir(index_path)
+    post = spark.read.parquet(f"{cur}/postings").filter(
         F.col("term").isin(query_terms)
     )
-    vocab = spark.read.parquet(f"{index_path}/vocab").filter(
+    vocab = spark.read.parquet(f"{cur}/vocab").filter(
         F.col("term").isin(query_terms)
     )
-    stats = spark.read.parquet(f"{index_path}/stats")
+    stats = spark.read.parquet(f"{cur}/stats")
     return post, vocab, stats
 
 
@@ -959,6 +964,7 @@ def update_text_index(
     is small (|V| rows), so rewriting it is O(|V|), not O(corpus).
     Callers guarantee ``new_docs`` ids are disjoint from the indexed
     corpus (append semantics, like any fact ingest)."""
+    cur = current_dir(path)
     toks = new_docs.select(
         F.col(id_col),
         F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
@@ -975,13 +981,13 @@ def update_text_index(
         .repartitionByRange(num_files, "term")
         .sortWithinPartitions("term", id_col)
         .write.mode("append")
-        .parquet(f"{path}/postings")
+        .parquet(f"{cur}/postings")
     )
 
     new_vocab = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("df_new")
     )
-    old_vocab = spark.read.parquet(f"{path}/vocab")
+    old_vocab = spark.read.parquet(f"{cur}/vocab")
     merged_vocab = (
         old_vocab.join(new_vocab, "term", "full_outer")
         .select(
@@ -993,13 +999,13 @@ def update_text_index(
         )
         .localCheckpoint()  # sever lineage from vocab/ before overwrite
     )
-    merged_vocab.coalesce(1).write.mode("overwrite").parquet(f"{path}/vocab")
+    merged_vocab.coalesce(1).write.mode("overwrite").parquet(f"{cur}/vocab")
 
     new_stats = dl.agg(
         F.count(F.lit(1)).cast("long").alias("n_new"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl_new"),
     )
-    old_stats = spark.read.parquet(f"{path}/stats")
+    old_stats = spark.read.parquet(f"{cur}/stats")
     merged_stats = (
         old_stats.crossJoin(new_stats)
         .select(
@@ -1008,5 +1014,5 @@ def update_text_index(
         )
         .localCheckpoint()
     )
-    merged_stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    merged_stats.coalesce(1).write.mode("overwrite").parquet(f"{cur}/stats")
 

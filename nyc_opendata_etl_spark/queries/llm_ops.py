@@ -14,7 +14,7 @@ from nyc_opendata_etl_spark.functions.hashing import md5_long, md5_long_oracle_s
 from nyc_opendata_etl_spark.operators import dedup, similarity, text
 from nyc_opendata_etl_spark.queries import register
 from nyc_opendata_etl_spark.queries._sql import PY_WS_RE2
-from nyc_opendata_etl_spark.sources.batch_log import must_read_log
+from nyc_opendata_etl_spark.sources.batch_log import current_dir, must_read_log
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 # canonical text form used by dedup ops, as DuckDB SQL
@@ -29,12 +29,13 @@ _CANON = (
 def _stage_text_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the documents posting-list index once per corpus version
     (sources/staging mtime guard); retrieval queries probe it instead of
-    tokenizing the corpus per execution. stats/ is written last, so its
-    marker proves the whole build completed."""
+    tokenizing the corpus per execution. The build commits the whole
+    index as one version of the root, so the committed stats/ marker
+    proves the whole build completed."""
     from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
 
     path = stage_dir(sf_dir, "text_index")
-    if is_stale(path, sf_dir, "documents", marker="stats/_SUCCESS"):
+    if is_stale(current_dir(path), sf_dir, "documents", marker="stats/_SUCCESS"):
         docs = load_table(spark, sf_dir, "documents")
         text.build_text_index(docs, path)
     return path
@@ -47,19 +48,16 @@ def _stage_text_index_incremental(spark: SparkSession, sf_dir: str) -> str:
     A probe over this index must equal one over a from-scratch build
     (same corpus), which the search_bm25_incremental oracle verifies
     against the raw documents."""
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
 
     path = stage_dir(sf_dir, "text_index_incr")
     if is_stale(path, sf_dir, "documents", marker="_INCR_DONE"):
-        import os
-
         docs = load_table(spark, sf_dir, "documents")
         text.build_text_index(docs.filter(F.col("doc_id") % 2 == 0), path)
         text.update_text_index(
             spark, docs.filter(F.col("doc_id") % 2 == 1), path
         )
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
-            fh.write("")  # both phases completed
+        mark_done(path, "_INCR_DONE")
     return path
 
 
@@ -70,19 +68,15 @@ def _stage_fingerprint_index(spark: SparkSession, sf_dir: str) -> str:
     maintenance path: base build from doc_id % 4 == 0, then
     update_fingerprint_index appends doc_id % 4 == 2 — together exactly
     the even half. _LOG_DONE is written last, proving both phases
-    completed (a directory from before the refcounted log carries
-    another marker, so it is rebuilt, not read)."""
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    completed."""
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
 
     path = stage_dir(sf_dir, "fingerprint_index")
     if is_stale(path, sf_dir, "documents", marker="_LOG_DONE"):
-        import os
-
         docs = load_table(spark, sf_dir, "documents")
         dedup.build_fingerprint_index(docs.filter(F.col("doc_id") % 4 == 0), path)
         dedup.update_fingerprint_index(docs.filter(F.col("doc_id") % 4 == 2), path)
-        with open(os.path.join(path, "_LOG_DONE"), "w") as fh:
-            fh.write("")  # both phases completed
+        mark_done(path, "_LOG_DONE")
     return path
 
 
@@ -92,37 +86,35 @@ def _stage_lsh_index(spark: SparkSession, sf_dir: str) -> str:
     once per corpus version: the near-dup twin of
     _stage_fingerprint_index, and like it built INCREMENTALLY to
     exercise the append maintenance path: base build from
-    doc_id % 4 == 0 (params/ written last — the r12 self-describing
+    doc_id % 4 == 0 (with params/, the r12 self-describing
     (num_hashes, bands) record), then update_lsh_bucket_index appends
     doc_id % 4 == 2 — together exactly the even half, so the
     dedup_incremental_minhash oracle (which recomputes the even-corpus
     side from raw documents) doubles as the append-equivalence proof.
     _INCR_DONE is written last, proving both phases completed."""
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
 
     path = stage_dir(sf_dir, "lsh_bucket_index")
     if is_stale(path, sf_dir, "documents", marker="_INCR_DONE"):
-        import os
-
         docs = load_table(spark, sf_dir, "documents")
         dedup.build_lsh_bucket_index(docs.filter(F.col("doc_id") % 4 == 0), path)
         dedup.update_lsh_bucket_index(
             docs.filter(F.col("doc_id") % 4 == 2), path
         )
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
-            fh.write("")  # both phases completed
+        mark_done(path, "_INCR_DONE")
     return path
 
 
 def _stage_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the IVF-PQ index once per embeddings version; the ANN query
-    probes the persisted cells. params/ is written last (r11 layout —
-    the self-describing parameter record) — its marker proves the
-    whole build completed, and pre-params stage dirs rebuild once."""
+    probes the persisted cells. The build commits the whole index as
+    one version of the root, so the committed params/ marker (r11
+    layout — the self-describing parameter record) proves the whole
+    build completed."""
     from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
 
     path = stage_dir(sf_dir, "ivfpq_index")
-    if is_stale(path, sf_dir, "embeddings", marker="params/_SUCCESS"):
+    if is_stale(current_dir(path), sf_dir, "embeddings", marker="params/_SUCCESS"):
         emb = load_table(spark, sf_dir, "embeddings")
         similarity.build_ivfpq_index(emb, path)
     return path
@@ -139,19 +131,16 @@ def _stage_ivfpq_index_incremental(spark: SparkSession, sf_dir: str) -> str:
     one-shot assignment of the FULL corpus against the build-half
     quantizers, which is what the oracle replays. _INCR_DONE is written
     last, proving both phases completed."""
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
 
     path = stage_dir(sf_dir, "ivfpq_index_incr")
     if is_stale(path, sf_dir, "embeddings", marker="_INCR_DONE"):
-        import os
-
         emb = load_table(spark, sf_dir, "embeddings")
         similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
         similarity.update_ivfpq_index(
             emb.filter(F.col("vec_id") % 2 == 1), path
         )
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
-            fh.write("")  # both phases completed
+        mark_done(path, "_INCR_DONE")
     return path
 
 
@@ -1363,7 +1352,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_path = _stage_fingerprint_index(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents", spread_input=True)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    index = must_read_log(spark, index_path, dedup.FINGERPRINT_INDEX_SCHEMA)
+    index = must_read_log(spark, current_dir(index_path), dedup.FINGERPRINT_INDEX_SCHEMA)
     return dedup.incremental_new_docs(batch, index)
 
 
@@ -3235,7 +3224,7 @@ def _stage_chunk_text_index(spark: SparkSession, sf_dir: str) -> str:
     from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
 
     path = stage_dir(sf_dir, "chunk_text_index")
-    if is_stale(path, sf_dir, "documents", marker="stats/_SUCCESS"):
+    if is_stale(current_dir(path), sf_dir, "documents", marker="stats/_SUCCESS"):
         docs = load_table(spark, sf_dir, "documents")
         chunks = curation.chunk_documents(docs, chunk_tokens=64, overlap=8)
         keyed = chunks.select(
@@ -3342,12 +3331,10 @@ def _stage_chunk_text_index_incremental(spark: SparkSession, sf_dir: str) -> str
     is doc-major), satisfying update_text_index's append contract.
     _INCR_DONE proves both phases completed."""
     from nyc_opendata_etl_spark.operators import curation
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
 
     path = stage_dir(sf_dir, "chunk_text_index_incr")
     if is_stale(path, sf_dir, "documents", marker="_INCR_DONE"):
-        import os
-
         docs = load_table(spark, sf_dir, "documents")
 
         def keyed(half: DataFrame) -> DataFrame:
@@ -3361,8 +3348,7 @@ def _stage_chunk_text_index_incremental(spark: SparkSession, sf_dir: str) -> str
         text.update_text_index(
             spark, keyed(docs.filter(F.col("doc_id") % 2 == 1)), path
         )
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
-            fh.write("")  # both phases completed
+        mark_done(path, "_INCR_DONE")
     return path
 
 
@@ -3457,12 +3443,10 @@ def _stage_text_index_compacted(spark: SparkSession, sf_dir: str) -> str:
     (operators/index_maintenance). _COMPACT_DONE is written last,
     proving build + delete + compact all completed."""
     from nyc_opendata_etl_spark.operators import index_maintenance
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
 
     path = stage_dir(sf_dir, "text_index_del")
     if is_stale(path, sf_dir, "documents", marker="_COMPACT_DONE"):
-        import os
-
         docs = load_table(spark, sf_dir, "documents")
         text.build_text_index(docs, path)
         index_maintenance.compact_text_index(
@@ -3470,8 +3454,7 @@ def _stage_text_index_compacted(spark: SparkSession, sf_dir: str) -> str:
             path,
             delete_ids=docs.filter(F.col("doc_id") % 5 == 0).select("doc_id"),
         )
-        with open(os.path.join(path, "_COMPACT_DONE"), "w") as fh:
-            fh.write("")  # build + delete + compact completed
+        mark_done(path, "_COMPACT_DONE")
     return path
 
 
@@ -3529,8 +3512,8 @@ def q_search_bm25_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     from raw documents, so a value match verifies postings removal AND
     the exact vocab/stats reconciliation (df, n, sum_dl all shift when
     docs leave; a stale one shifts every score). Compaction cost is
-    O(index), never O(corpus text); the rewrite is temp-swap
-    crash-tolerant."""
+    O(index), never O(corpus text); the rewrite commits postings,
+    vocab and stats together as the index's next version."""
     index = _stage_text_index_compacted(spark, sf_dir)
     return text.bm25_topk_indexed(spark, index, ["hash", "join", "vector"])
 

@@ -22,7 +22,7 @@ from nyc_opendata_etl_spark.queries import REGISTRY, register
 
 # importing llm_ops also registers the batch queries whose oracles are shared below
 from nyc_opendata_etl_spark.queries.llm_ops import _CANON
-from nyc_opendata_etl_spark.sources.batch_log import must_read_log
+from nyc_opendata_etl_spark.sources.batch_log import current_dir, must_read_log
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 
@@ -75,9 +75,7 @@ def _stage_fingerprint_index_deleted(spark: SparkSession, sf_dir: str) -> str:
     quarter of the evens — each withdrawn doc was present exactly once,
     per the delete contract). _LOG_DONE is written last, proving all
     three phases completed."""
-    import os
-
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
 
     path = stage_dir(sf_dir, "fingerprint_index_del")
     if is_stale(path, sf_dir, "documents", marker="_LOG_DONE"):
@@ -85,8 +83,7 @@ def _stage_fingerprint_index_deleted(spark: SparkSession, sf_dir: str) -> str:
         dedup.build_fingerprint_index(docs.filter(F.col("doc_id") % 2 == 0), path)
         dedup.update_fingerprint_index(docs.filter(F.col("doc_id") % 4 == 1), path)
         dedup.delete_from_fingerprint_index(docs.filter(F.col("doc_id") % 8 == 0), path)
-        with open(os.path.join(path, "_LOG_DONE"), "w") as fh:
-            fh.write("")
+        mark_done(path, "_LOG_DONE")
     return path
 
 
@@ -127,7 +124,7 @@ def q_dedup_incremental_rc(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_path = _stage_fingerprint_index_deleted(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents", spread_input=True)
     batch = docs.filter(F.col("doc_id") % 4 == 3)
-    index = must_read_log(spark, index_path, dedup.FINGERPRINT_INDEX_SCHEMA)
+    index = must_read_log(spark, current_dir(index_path), dedup.FINGERPRINT_INDEX_SCHEMA)
     return dedup.incremental_new_docs(batch, index)
 
 
@@ -419,27 +416,17 @@ def _stage_dup_cluster_index_incr(spark: SparkSession, sf_dir: str) -> str:
     the crash-idempotence rework changed the artifact
     LAYOUT (batch-partitioned logs + versioned cluster snapshots), so
     pre-rework staged dirs must never satisfy the staleness check."""
-    import os
-
     from nyc_opendata_etl_spark.operators import cluster_index as ci
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
 
     path = stage_dir(sf_dir, "dup_cluster_index_incr2")
     if is_stale(path, sf_dir, "documents", marker="_INCR_DONE"):
-        # A stale rebuild must start from an EMPTY artifact.
-        # build_dup_cluster_index only overwrites b=-1/v=-1 partitions,
-        # so a prior run's b>=0 logs / v>=0 snapshots would survive a
-        # corpus change or crashed drain and poison later updates.
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
         docs = load_table(spark, sf_dir, "documents")
         ci.build_dup_cluster_index(docs.filter(F.col("doc_id") % 2 == 0), path)
         ci.update_dup_cluster_index(
             spark, docs.filter(F.col("doc_id") % 2 == 1), path, batch_id=0
         )
-        with open(os.path.join(path, "_INCR_DONE"), "w") as fh:
-            fh.write("")
+        mark_done(path, "_INCR_DONE")
     return path
 
 
@@ -487,7 +474,7 @@ def _stage_ivfpq_stream(spark: SparkSession, sf_dir: str) -> str:
     import uuid
 
     from nyc_opendata_etl_spark.operators import similarity
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
     from nyc_opendata_etl_spark.streaming.ann_ingest import stream_ivfpq_ingest
 
     path = stage_dir(sf_dir, "ivfpq_index_stream")
@@ -496,7 +483,7 @@ def _stage_ivfpq_stream(spark: SparkSession, sf_dir: str) -> str:
         similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
         # codes arrive via the stream under the (cid, b) layout —
         # the build's cid-only codes would break partition discovery
-        shutil.rmtree(os.path.join(path, "codes"), ignore_errors=True)
+        shutil.rmtree(os.path.join(current_dir(path), "codes"), ignore_errors=True)
         src = _stage_emb_idordered(spark, sf_dir)
         run = _fresh_run_dir("spark_graft_annidx_run_")
         stream = (
@@ -510,8 +497,7 @@ def _stage_ivfpq_stream(spark: SparkSession, sf_dir: str) -> str:
             query_name=f"annidx_{uuid.uuid4().hex[:8]}",
             checkpoint_location=f"{run}/ckpt",
         )
-        with open(os.path.join(path, "_STREAM_DONE"), "w") as fh:
-            fh.write("")
+        mark_done(path, "_STREAM_DONE")
     return path
 
 
@@ -619,23 +605,16 @@ def _stage_cluster_stream(spark: SparkSession, sf_dir: str) -> str:
     batch replaced by a genuine Structured Streaming drain, so that
     query's oracle transfers VERBATIM. _STREAM_DONE is written last,
     proving build + drain both completed."""
-    import os
     import uuid
 
     from nyc_opendata_etl_spark.operators import cluster_index as ci
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
     from nyc_opendata_etl_spark.streaming.cluster_ingest import (
         stream_cluster_ingest,
     )
 
     path = stage_dir(sf_dir, "dup_cluster_index_stream")
     if is_stale(path, sf_dir, "documents", marker="_STREAM_DONE"):
-        # A stale rebuild must start from an EMPTY artifact
-        # (build only overwrites b=-1/v=-1; surviving b>=0 logs from a
-        # crashed drain or prior corpus would poison later updates).
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
         docs = load_table(spark, sf_dir, "documents")
         ci.build_dup_cluster_index(docs.filter(F.col("doc_id") % 2 == 0), path)
         src = _stage_docs_odd_idordered(spark, sf_dir)
@@ -651,8 +630,7 @@ def _stage_cluster_stream(spark: SparkSession, sf_dir: str) -> str:
             query_name=f"clidx_{uuid.uuid4().hex[:8]}",
             checkpoint_location=f"{run}/ckpt",
         )
-        with open(os.path.join(path, "_STREAM_DONE"), "w") as fh:
-            fh.write("")
+        mark_done(path, "_STREAM_DONE")
     return path
 
 
@@ -696,13 +674,11 @@ def _stage_ivfpq_index_deleted(spark: SparkSession, sf_dir: str) -> str:
     both a centroid source and deleted, deliberately). _DEL_DONE is
     written last, proving build + append + delete-compact all
     completed."""
-    import os
-
     from nyc_opendata_etl_spark.operators import similarity
     from nyc_opendata_etl_spark.operators.index_maintenance import (
         compact_ivfpq_index,
     )
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
 
     path = stage_dir(sf_dir, "ivfpq_index_deleted")
     if is_stale(path, sf_dir, "embeddings", marker="_DEL_DONE"):
@@ -716,8 +692,7 @@ def _stage_ivfpq_index_deleted(spark: SparkSession, sf_dir: str) -> str:
                 F.col("vec_id").alias("id")
             ),
         )
-        with open(os.path.join(path, "_DEL_DONE"), "w") as fh:
-            fh.write("")
+        mark_done(path, "_DEL_DONE")
     return path
 
 
@@ -769,30 +744,22 @@ def _stage_ivfpq_index_retrained(spark: SparkSession, sf_dir: str) -> str:
     then append the odd half against those stale cells), then heal via
     retrain_ivfpq_index over the CURRENT full corpus, which recomputes
     the convention quantizers (now all 16 vec_ids < 16), re-encodes
-    every vector, and atomically swaps the whole index directory.
-    _RETRAIN_DONE is written last (and necessarily AFTER the swap — a
-    marker written pre-swap would be discarded with the old
-    directory), proving build + append + retrain all completed."""
-    import os
-    import shutil
-
+    every vector, and commits the whole index root as its next
+    version. _RETRAIN_DONE (beside the versions, in the root) is
+    written last, proving build + append + retrain all completed."""
     from nyc_opendata_etl_spark.operators import similarity
     from nyc_opendata_etl_spark.operators.index_maintenance import (
         retrain_ivfpq_index,
     )
-    from nyc_opendata_etl_spark.sources.staging import is_stale, stage_dir
+    from nyc_opendata_etl_spark.sources.staging import is_stale, mark_done, stage_dir
 
     path = stage_dir(sf_dir, "ivfpq_index_retrained")
     if is_stale(path, sf_dir, "embeddings", marker="_RETRAIN_DONE"):
-        # stale rebuild starts from an empty artifact (a crashed prior
-        # attempt must not survive)
-        shutil.rmtree(path, ignore_errors=True)
         emb = load_table(spark, sf_dir, "embeddings")
         similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
         similarity.update_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), path)
         retrain_ivfpq_index(spark, emb, path)
-        with open(os.path.join(path, "_RETRAIN_DONE"), "w") as fh:
-            fh.write("")
+        mark_done(path, "_RETRAIN_DONE")
     return path
 
 
@@ -812,8 +779,8 @@ def q_similarity_ivfpq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     describing the corpus). The staged index is built with stale
     even-half quantizers, appended, then retrained from the full
     corpus via operators/index_maintenance.retrain_ivfpq_index (same
-    recorded params, whole-directory atomic swap — quantizers and
-    codes never mix across versions). A green row proves the retrained
+    recorded params, committed as one version of the whole index —
+    quantizers and codes never mix across versions). A green row proves the retrained
     index answers EXACTLY like a fresh build over the current corpus —
     completing the ANN lifecycle: build / incremental append /
     exactly-once streaming ingest / delete+compact / retrain."""

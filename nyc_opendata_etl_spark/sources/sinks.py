@@ -142,10 +142,11 @@ def append_parquet_sized(
     AQE REBALANCE hint makes the final stage re-split its output to
     ~``target_file_bytes`` partitions — merging trickles AND splitting
     skewed partitions — so one file lands per ~target regardless of the
-    upstream partitioning. This is the write-time complement to the
-    after-the-fact ``operators/backfill.compact_partitions``; at 100 TB
-    sinks that skip it bury the table in per-task files and every later
-    scan pays the open-cost tax.
+    upstream partitioning. It prevents at write time what
+    ``operators/backfill.compact_partitions`` repairs afterwards on the
+    versioned month sinks (an append sink here has no versions to
+    commit); at 100 TB sinks that skip it bury the table in per-task
+    files and every later scan pays the open-cost tax.
 
     When ``partition_by`` is given the rebalance keys on those columns,
     so each hive partition's rows co-locate before the write (one file

@@ -40,11 +40,14 @@ def stage_root() -> str:
 def stage_dir(sf_dir: str, kind: str) -> str:
     """Deterministic staging directory for a derived artifact of
     ``sf_dir`` (keyed by path hash so differently-located replicas —
-    e.g. the 10×/100× scale copies — never collide)."""
+    e.g. the 10×/100× scale copies — never collide). The namespace
+    names the on-disk layout: an artifact staged before its indexes
+    became versioned roots lives under another one, so it is rebuilt,
+    never resolved to an empty ``v=0``."""
     key = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
     return os.path.join(
         stage_root(),
-        "spark_graft_stage",
+        "spark_graft_stage_v",
         f"{os.path.basename(sf_dir.rstrip('/'))}_{key}",
         kind,
     )
@@ -58,6 +61,12 @@ def is_stale(stage: str, sf_dir: str, src_table: str, marker: str = "_SUCCESS") 
     return not (
         os.path.exists(mk) and os.path.getmtime(mk) > os.path.getmtime(src)
     )
+
+
+def mark_done(stage: str, marker: str) -> None:
+    """Write the empty ``marker`` into ``stage`` after the last phase of
+    a multi-phase build, so :func:`is_stale` sees the whole build."""
+    open(os.path.join(stage, marker), "w").close()
 
 
 def stage_all(spark, sf_dir: str) -> list[tuple[str, float]]:

@@ -13,7 +13,8 @@ double-counts nothing visible (ADC scores each (id, m) once per row —
 the groupBy(id) sum would silently DOUBLE a replayed candidate's
 distance). The streaming layout therefore partitions codes by
 cid and then ``b`` = the micro-batch id, a batch log of
-``sources/batch_log.py`` (that module states the replay discipline):
+``sources/batch_log.py`` in the committed version of the index root
+(that module states the replay discipline):
 batch ``b`` owns exactly the ``cid=*/b=b`` directories, so a replay
 rewrites identical content (routing and encoding are deterministic
 given the persisted quantizers) instead of appending.
@@ -39,7 +40,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_opendata_etl_spark.sources.batch_log import write_batch
+from nyc_opendata_etl_spark.sources.batch_log import current_dir, write_batch
 from nyc_opendata_etl_spark.streaming.drain import drain
 
 #: The codes log's on-disk relation (``batch_log.read_log``).
@@ -49,10 +50,11 @@ CODES_SCHEMA = "id long, m int, code long, cid int, b long"
 def read_ivfpq_quantizers(spark: SparkSession, index_path: str) -> tuple:
     """(params_row, centroids_df, codebook_df) — the index's persisted,
     stream-immutable quantizers, read once per drain."""
+    index = current_dir(index_path)
     return (
-        spark.read.parquet(f"{index_path}/params").first(),
-        spark.read.parquet(f"{index_path}/centroids"),
-        spark.read.parquet(f"{index_path}/codebook"),
+        spark.read.parquet(f"{index}/params").first(),
+        spark.read.parquet(f"{index}/centroids"),
+        spark.read.parquet(f"{index}/codebook"),
     )
 
 
@@ -99,7 +101,7 @@ def ann_ingest_batch(
     codes = similarity._pq_encode_against(subs, codebook)
     write_batch(
         codes.join(assigned, "id").repartition("cid"),
-        f"{index_path}/codes",
+        f"{current_dir(index_path)}/codes",
         batch_id,
         overwrite="dynamic",
         partition_by=("cid",),

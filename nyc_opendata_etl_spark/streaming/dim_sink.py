@@ -14,7 +14,8 @@ This is the snapshot-chain discipline a log-structured table format
 production scale you'd swap the sink for such a format and keep the
 merge kernel. Versions accumulate one full dimension copy per batch —
 dimensions are the SMALL side of a star by design (SURVEY §2), so a
-snapshot per CDC batch is bounded; :func:`prune_scd2_versions` retires
+snapshot per CDC batch is bounded;
+:func:`~nyc_opendata_etl_spark.sources.batch_log.prune_versions` retires
 history below a retention count during a maintenance window (stream
 stopped, checkpoint committed — pruning below an uncommitted batch's
 input version would break its replay).
@@ -23,15 +24,13 @@ input version would break its replay).
 from __future__ import annotations
 
 import functools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from nyc_opendata_etl_spark.sources.batch_log import (
-    current_version,
+    current_dir,
     must_read_log,
     version_below,
-    version_dirs,
     write_version,
 )
 from nyc_opendata_etl_spark.streaming.drain import drain
@@ -49,7 +48,7 @@ def init_scd2_dim(dim: DataFrame, path: str) -> None:
 def read_scd2_dim(spark: SparkSession, path: str) -> DataFrame:
     """The dimension as of the newest committed batch (pointer read —
     the reader-side convenience the merge itself never uses)."""
-    return spark.read.parquet(f"{path}/v={current_version(path)}")
+    return spark.read.parquet(current_dir(path))
 
 
 def scd2_upsert_batch(
@@ -127,18 +126,3 @@ def stream_scd2_upserts(
     )
     drain(updates_stream, sink, query_name, checkpoint_location)
 
-
-def prune_scd2_versions(path: str, keep_last: int = 2) -> list[int]:
-    """Retire snapshot history: delete all but the newest ``keep_last``
-    versions (always keeping the pointer's target). Run only in a
-    maintenance window — stream stopped, checkpoint committed — because
-    a pending batch replays against the newest version BELOW it, which
-    pruning could remove. Returns the deleted version ids."""
-    import shutil
-
-    versions = version_dirs(path)
-    keep = set(versions[-keep_last:]) | {current_version(path)}
-    dropped = [v for v in versions if v not in keep]
-    for v in dropped:
-        shutil.rmtree(os.path.join(path, f"v={v}"))
-    return dropped

@@ -12,11 +12,14 @@ continuous pipeline.
 The checkpoint (offset, commit and source logs, and any state-store
 deltas) is written through the Hadoop ``FileSystem`` API, a create and
 a rename per file, which forks no process on local disk; the session
-sets this (``session.get_spark``), so every drain inherits it.
+sets this (``session.get_spark``), so every drain inherits it. A replayed
+batch's state-store delta cannot be renamed over the existing one, so
+its temp files stay behind; the drain removes them once it stops.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -46,3 +49,8 @@ def drain(
         .start()
         .awaitTermination()
     )
+    # the query has stopped, so no task is still writing a temp file
+    for d, _, files in os.walk(os.path.join(checkpoint_location, "state")):
+        for f in files:
+            if f.endswith((".tmp", ".tmp.crc")):
+                os.remove(os.path.join(d, f))

@@ -29,7 +29,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from nyc_opendata_etl_spark.sources.batch_log import write_batch
+from nyc_opendata_etl_spark.sources.batch_log import current_dir, write_batch
 from nyc_opendata_etl_spark.streaming.drain import drain
 
 EVENT_SCHEMA = StructType(
@@ -204,16 +204,17 @@ def stream_to_partitioned_sink(
     partitions (overwriting by month alone would drop every earlier
     batch of the month).
 
-    Readers scan ``sink_path`` normally (month pruning still applies;
-    ``b`` is an extra partition level); periodic
+    Batches write into, and readers scan, the committed version of the
+    versioned root ``sink_path`` (``batch_log.current_dir``; month
+    pruning still applies, ``b`` is an extra partition level); periodic
     :func:`~nyc_opendata_etl_spark.operators.backfill.compact_partitions`
-    folds the per-batch files.
+    folds the per-batch files into the next version.
     """
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_batch(
             batch_df.withColumn("month", F.date_format(ts_col, "yyyy-MM")),
-            sink_path,
+            current_dir(sink_path),
             batch_id,
             overwrite="dynamic",
             partition_by=("month",),

@@ -6,9 +6,9 @@ and correct across failures and replays.
 ``update_text_index`` (the batch append path) is plain append-mode: a
 replayed micro-batch would double-append postings and double-merge
 vocab/stats. The streaming layout is two batch logs of
-``sources/batch_log.py`` instead, each partitioned by ``b`` = the
-micro-batch id and rewritten per batch (that module states the replay
-discipline):
+``sources/batch_log.py`` instead, in the committed version of the
+index root, each partitioned by ``b`` = the micro-batch id and
+rewritten per batch (that module states the replay discipline):
 
 - ``postings/b=<batch>/``: each batch's (id, term, tf, dl) rows,
   term-sorted WITHIN the batch partition (footer pruning holds per
@@ -44,7 +44,11 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_opendata_etl_spark.sources.batch_log import must_read_log, write_batch
+from nyc_opendata_etl_spark.sources.batch_log import (
+    current_dir,
+    must_read_log,
+    write_batch,
+)
 from nyc_opendata_etl_spark.streaming.drain import drain
 
 #: The batch logs' on-disk relations (``batch_log.read_log``).
@@ -80,6 +84,7 @@ def index_ingest_batch(
     # 41.8-44.6 s starved at 2-14 wide) while kilobyte batches skip
     # the shuffle entirely.
     batch_df = spread_batch(batch_df)
+    index = current_dir(index_path)
     toks = batch_df.select(
         F.col(id_col), F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
     )
@@ -109,7 +114,7 @@ def index_ingest_batch(
     # probe time vs. a full per-batch recompute at write time.
     write_batch(
         postings.repartition(4, "term").sortWithinPartitions("term", id_col),
-        f"{index_path}/postings",
+        f"{index}/postings",
         batch_id,
         overwrite="dynamic",
     )
@@ -117,7 +122,7 @@ def index_ingest_batch(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
     )
-    write_batch(stats, f"{index_path}/stats", batch_id, overwrite="dynamic")
+    write_batch(stats, f"{index}/stats", batch_id, overwrite="dynamic")
 
 
 def stream_index_ingest(
@@ -153,11 +158,12 @@ def bm25_topk_delta(
     (one row per (term, doc) — no vocab relation exists to go stale);
     corpus totals fold the per-batch stats rows. Same 9-dp
     DECIMAL(28,12) contribution folds as every BM25 path."""
+    index = current_dir(index_path)
     post = must_read_log(
-        spark, f"{index_path}/postings", postings_schema(id_col)
+        spark, f"{index}/postings", postings_schema(id_col)
     ).filter(F.col("term").isin(list(query_terms)))
     stats = F.broadcast(
-        must_read_log(spark, f"{index_path}/stats", STATS_SCHEMA).agg(
+        must_read_log(spark, f"{index}/stats", STATS_SCHEMA).agg(
             F.sum("n").cast("long").alias("n"),
             F.sum("sum_dl").cast("long").alias("sum_dl"),
         )

@@ -13,7 +13,8 @@ same canonical text, across the entire stream's lifetime.
 Exactly-once without a transaction log: the corpus sink and the index
 are both batch logs of ``sources/batch_log.py``, partitioned by ``b`` =
 the micro-batch id, and the batch rewrites its own partition of each
-(that module states the replay discipline). The probe EXCLUDES rows
+(that module states the replay discipline); the index is a versioned
+root, resolved once per batch. The probe EXCLUDES rows
 with ``b == current_batch_id``, so a replayed batch sees exactly the
 pre-batch index and recomputes the identical survivor set. Without the
 exclusion, a replay would find its own canons already indexed, emit
@@ -26,11 +27,11 @@ restarted id must still reject their canons.
 Takedowns (:func:`~nyc_opendata_etl_spark.operators.dedup.delete_from_fingerprint_index`)
 and compaction
 (:func:`~nyc_opendata_etl_spark.operators.index_maintenance.compact_fingerprint_index`)
-are the fingerprint index's own: the index layout, its reserved
-partitions (``b = -1`` compacted, ``b = -2`` takedowns — both forever
-distinct from real batch ids ≥ 0) and its probe
+are the fingerprint index's own: the index layout and its probe
 (:func:`~nyc_opendata_etl_spark.operators.dedup.live_canons`) live in
-operators/dedup. A fully withdrawn canon is re-ingestable at the next
+operators/dedup, its reserved partitions (``b = -1`` compacted,
+``b = -2`` takedowns — both forever distinct from real batch ids ≥ 0)
+in sources/batch_log. A fully withdrawn canon is re-ingestable at the next
 batch; compact with the stream stopped and its checkpoint committed.
 
 Scale shape per batch: fingerprinting and the within-batch collapse
@@ -146,7 +147,7 @@ def dedup_ingest_batch(
         live_canons,
     )
     from nyc_opendata_etl_spark.operators.text import fingerprint
-    from nyc_opendata_etl_spark.sources.batch_log import read_log, write_batch
+    from nyc_opendata_etl_spark.sources.batch_log import current_dir, read_log, write_batch
 
     spark = batch_df.sparkSession
     cols = batch_df.columns
@@ -173,7 +174,8 @@ def dedup_ingest_batch(
         .select("__h__", "__r__.*")
         .localCheckpoint()
     )
-    idx = read_log(spark, index_path, FINGERPRINT_INDEX_SCHEMA)
+    index = current_dir(index_path)
+    idx = read_log(spark, index, FINGERPRINT_INDEX_SCHEMA)
     if idx is None:
         fresh = collapsed
     else:
@@ -204,7 +206,7 @@ def dedup_ingest_batch(
             fresh.groupBy(F.col("__h__").alias("h")).agg(
                 F.count(F.lit(1)).cast("long").alias("cnt")
             ),
-            index_path,
+            index,
             batch_id,
             overwrite="dynamic",
         )

@@ -12,6 +12,7 @@ from nyc_opendata_etl_spark.operators.backfill import (
     month_windows,
     run_month_by_month,
 )
+from nyc_opendata_etl_spark.sources.batch_log import current_dir
 
 
 def test_month_windows_rollover():
@@ -50,7 +51,7 @@ def test_backfill_partitioned_is_idempotent_per_window(spark, tmp_path):
         "id long, ts string, v string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     backfill_partitioned(df, "ts", sink)
-    assert spark.read.parquet(sink).count() == 3
+    assert spark.read.parquet(current_dir(sink)).count() == 3
 
     # re-run ONLY February with revised data: January must be untouched,
     # February fully replaced (not appended)
@@ -64,7 +65,7 @@ def test_backfill_partitioned_is_idempotent_per_window(spark, tmp_path):
         start=datetime.date(2024, 2, 1),
         end=datetime.date(2024, 3, 1),
     )
-    out = spark.read.parquet(sink)
+    out = spark.read.parquet(current_dir(sink))
     assert {r.id for r in out.collect()} == {1, 9}
     assert {r.month for r in out.collect()} == {"2024-01", "2024-02"}
 
@@ -84,15 +85,15 @@ def test_compact_partitions(spark, tmp_path):
         df.withColumn("month", F.date_format("ts", "yyyy-MM"))
         .repartition(8)
         .write.partitionBy("month")
-        .parquet(sink)
+        .parquet(current_dir(sink))
     )
-    before = glob.glob(f"{sink}/month=*/part-*.parquet")
+    before = glob.glob(f"{sink}/v=*/month=*/part-*.parquet")
     assert len(before) > 2
 
     assert compact_partitions(spark, sink) == 100
-    after = glob.glob(f"{sink}/month=*/part-*.parquet")
+    after = glob.glob(f"{sink}/v=*/month=*/part-*.parquet")
     assert len(after) == 2  # one file per month partition
-    assert spark.read.parquet(sink).count() == 100
+    assert spark.read.parquet(current_dir(sink)).count() == 100
 
 def test_backfill_partitioned_idempotent_on_static_mode_session(spark, tmp_path):
     """The per-window replace guarantee must not depend on the session
@@ -120,13 +121,15 @@ def test_backfill_partitioned_idempotent_on_static_mode_session(spark, tmp_path)
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    out = spark.read.parquet(sink)
+    out = spark.read.parquet(current_dir(sink))
     # static mode would have truncated January away; dynamic-at-writer keeps it
     assert {r.id for r in out.collect()} == {1, 9}
 
 
 def test_compact_partitions_leaves_no_temp_dirs(spark, tmp_path):
-    import glob
+    """A compaction over a backfilled sink commits one new version and
+    leaves no other version or sibling directory behind."""
+    import os
 
     from nyc_opendata_etl_spark.operators.backfill import compact_partitions
 
@@ -135,12 +138,37 @@ def test_compact_partitions_leaves_no_temp_dirs(spark, tmp_path):
         [(i, "2024-01-10 00:00:00", "x") for i in range(10)],
         "id long, ts string, v string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    (
-        df.withColumn("month", F.date_format("ts", "yyyy-MM"))
-        .repartition(4)
-        .write.partitionBy("month")
-        .parquet(sink)
-    )
+    backfill_partitioned(df.repartition(4), "ts", sink)
     assert compact_partitions(spark, sink) == 10
-    assert spark.read.parquet(sink).count() == 10
-    assert glob.glob(f"{sink}__compact_*") == []
+    assert spark.read.parquet(current_dir(sink)).count() == 10
+    assert sorted(os.listdir(sink)) == ["_CURRENT", "v=1"]
+    assert os.listdir(tmp_path) == ["sink_tmpcheck"]
+
+
+def test_compact_partitions_rejects_a_remote_uri_before_any_job(spark, tmp_path):
+    """The root resolver every read, append and commit calls first
+    rejects a non-local URI: a local read of its pointer would find
+    none and resolve to an empty ``v=0``."""
+    import os
+
+    import pytest
+
+    from nyc_opendata_etl_spark.operators.backfill import compact_partitions
+    from nyc_opendata_etl_spark.operators.index_maintenance import (
+        compact_fingerprint_index,
+    )
+    from tools.harness import JobCounter
+
+    jobs = JobCounter.for_spark(spark)
+    jobs.read()
+    cwd = os.getcwd()
+    os.chdir(tmp_path)
+    try:
+        with pytest.raises(ValueError, match="s3a://b/idx"):
+            compact_fingerprint_index(spark, "s3a://b/idx")
+        with pytest.raises(ValueError, match="s3a://b/sink"):
+            compact_partitions(spark, "s3a://b/sink")
+    finally:
+        os.chdir(cwd)
+    assert jobs.read()["jobs"] == 0
+    assert os.listdir(tmp_path) == []

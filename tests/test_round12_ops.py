@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.operators import dedup, similarity
+from nyc_opendata_etl_spark.sources.batch_log import current_dir
 
 
 def _norm(spark, urls: list[str]) -> list[str]:
@@ -139,7 +140,7 @@ def test_lsh_index_params_roundtrip(spark, tmp_path):
     dedup.build_lsh_bucket_index(
         docs.filter(F.col("doc_id") % 2 == 0), path, num_hashes=16, bands=4
     )
-    p = spark.read.parquet(f"{path}/params").first()
+    p = spark.read.parquet(f"{current_dir(path)}/params").first()
     assert (p["num_hashes"], p["bands"]) == (16, 4)
     # matching probe runs; batch doc 3 is byte-identical to corpus
     # doc 0 (same canon → same signature → certain collision)
@@ -220,8 +221,8 @@ def test_update_ivfpq_index_equals_oneshot_against_build_quantizers(
 
     # one-shot: route + encode ALL vectors against the build-half
     # quantizers (read back from the staged index)
-    cents = spark.read.parquet(f"{inc_path}/centroids")
-    cb = spark.read.parquet(f"{inc_path}/codebook")
+    cents = spark.read.parquet(f"{current_dir(inc_path)}/centroids")
+    cb = spark.read.parquet(f"{current_dir(inc_path)}/codebook")
     assigned = similarity._ivf_assign(emb, 16, "vec_id", "embedding", cents=cents)
     subs = similarity._sub_rows(
         emb, 8, 8, "embedding", F.col("vec_id"), "id", "sub"
@@ -234,7 +235,7 @@ def test_update_ivfpq_index_equals_oneshot_against_build_quantizers(
     }
     got = {
         (r["id"], r["m"]): (r["code"], r["cid"])
-        for r in spark.read.parquet(f"{inc_path}/codes").collect()
+        for r in spark.read.parquet(f"{current_dir(inc_path)}/codes").collect()
     }
     assert got == expect
     assert len(got) == 40 * 8  # every vector, every subspace, exactly once
@@ -245,9 +246,9 @@ def test_update_ivfpq_index_appends_not_overwrites(spark, tmp_path):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     path = str(tmp_path / "idx")
     similarity.build_ivfpq_index(emb.filter(F.col("vec_id") < 16), path)
-    before = spark.read.parquet(f"{path}/codes").count()
+    before = spark.read.parquet(f"{current_dir(path)}/codes").count()
     similarity.update_ivfpq_index(emb.filter(F.col("vec_id") >= 16), path)
-    after = spark.read.parquet(f"{path}/codes").count()
+    after = spark.read.parquet(f"{current_dir(path)}/codes").count()
     assert before == 16 * 8
     assert after == 20 * 8  # build rows intact, update rows appended
 
@@ -660,15 +661,15 @@ def test_compact_lsh_index_deletes_and_dedups(spark, tmp_path):
     dedup.build_lsh_bucket_index(docs, path)
     # append the same batch again: duplicate bucket rows accumulate
     dedup.update_lsh_bucket_index(docs.filter(F.col("doc_id") == 2), path)
-    before = spark.read.parquet(f"{path}/buckets").count()
+    before = spark.read.parquet(f"{current_dir(path)}/buckets").count()
     im.compact_lsh_index(
         spark, path, delete_ids=spark.createDataFrame([(0,)], "doc_id long")
     )
-    after = spark.read.parquet(f"{path}/buckets")
+    after = spark.read.parquet(f"{current_dir(path)}/buckets")
     assert after.filter(F.col("corpus_id") == 0).count() == 0
     assert after.count() < before  # dups gone too
     # params survive compaction; probe still validates against them
-    p = spark.read.parquet(f"{path}/params").first()
+    p = spark.read.parquet(f"{current_dir(path)}/params").first()
     assert (p["num_hashes"], p["bands"]) == (16, 4)
     # a probe after compaction no longer matches the deleted rep 0:
     # doc 3 is byte-identical to 0, so its canon collapses to rep 0 in
@@ -693,12 +694,12 @@ def test_compact_ivfpq_index_deletes_codes(spark, tmp_path):
         spark, path,
         delete_ids=spark.createDataFrame([(20,), (21,)], "vec_id long"),
     )
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = spark.read.parquet(f"{current_dir(path)}/codes")
     assert codes.filter(F.col("id").isin(20, 21)).count() == 0
     assert codes.count() == 22 * 8
     # quantizers untouched
-    assert spark.read.parquet(f"{path}/centroids").count() == 16
-    p = spark.read.parquet(f"{path}/params").first()
+    assert spark.read.parquet(f"{current_dir(path)}/centroids").count() == 16
+    p = spark.read.parquet(f"{current_dir(path)}/params").first()
     assert p["m"] == 8
 
 
@@ -783,8 +784,8 @@ def test_compact_text_index_equals_fresh_build_of_survivors(spark, tmp_path):
 
     for rel, key in [("postings", ["term", "doc_id"]), ("vocab", ["term"]),
                      ("stats", [])]:
-        a = {tuple(r) for r in spark.read.parquet(f"{lifecycle}/{rel}").collect()}
-        b = {tuple(r) for r in spark.read.parquet(f"{fresh}/{rel}").collect()}
+        a = {tuple(r) for r in spark.read.parquet(f"{current_dir(lifecycle)}/{rel}").collect()}
+        b = {tuple(r) for r in spark.read.parquet(f"{current_dir(fresh)}/{rel}").collect()}
         assert a == b, rel
     # and the probe agrees end-to-end
     pa = {tuple(r) for r in T.bm25_topk_indexed(spark, lifecycle, ["hash", "join"]).collect()}

@@ -19,7 +19,11 @@ from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.operators import dedup
 from nyc_opendata_etl_spark.operators import index_maintenance as im
-from nyc_opendata_etl_spark.sources.batch_log import read_log
+from nyc_opendata_etl_spark.sources.batch_log import (
+    current_dir,
+    prune_versions,
+    read_log,
+)
 
 DUP_TEXT = "the quick brown fox jumps over the lazy dog again and again"
 
@@ -35,7 +39,7 @@ def _docs(spark):
 
 
 def _index(spark, path):
-    return read_log(spark, path, dedup.FINGERPRINT_INDEX_SCHEMA)
+    return read_log(spark, current_dir(path), dedup.FINGERPRINT_INDEX_SCHEMA)
 
 
 def _probe_ids(spark, path, batch) -> set[int]:
@@ -256,11 +260,11 @@ def test_index_or_none_missing_vs_corrupt(spark, tmp_path):
     import pytest
 
     assert _index(spark, str(tmp_path / "never_written")) is None
-    bad = tmp_path / "idx"
-    bad.mkdir()
+    bad = tmp_path / "idx" / "v=0"
+    bad.mkdir(parents=True)
     (bad / "part-00000.parquet").write_bytes(b"this is not a parquet footer")
     with pytest.raises(Exception):
-        df = _index(spark, str(bad))
+        df = _index(spark, str(tmp_path / "idx"))
         # schema inference may defer the footer read; force it
         if df is not None:
             df.collect()
@@ -276,7 +280,7 @@ def test_dedup_ingest_batches_accept_first_canon_only(spark, tmp_path):
     ingest.dedup_ingest_batch(b1, 1, idx, out)
     assert _accepted_ids(spark, out) == {0, 2, 4}
     # index holds one live (cnt=1) row per ACCEPTED canon, tagged by batch
-    rows = spark.read.parquet(idx).collect()
+    rows = spark.read.parquet(current_dir(idx)).collect()
     assert sorted((r["cnt"], r["b"]) for r in rows) == [(1, 0), (1, 0), (1, 1)]
 
 
@@ -289,13 +293,13 @@ def test_dedup_ingest_replay_is_idempotent(spark, tmp_path):
     ingest.dedup_ingest_batch(b0, 0, idx, out)
     ingest.dedup_ingest_batch(b1, 1, idx, out)
     before_out = sorted(map(tuple, spark.read.parquet(out).collect()))
-    before_idx = sorted(map(tuple, spark.read.parquet(idx).collect()))
+    before_idx = sorted(map(tuple, spark.read.parquet(current_dir(idx)).collect()))
     # re-deliver batch 1 (failure-before-checkpoint-commit scenario):
     # the b != 1 probe exclusion must reproduce the identical survivor
     # set and overwrite both partitions with the same content
     ingest.dedup_ingest_batch(b1, 1, idx, out)
     assert sorted(map(tuple, spark.read.parquet(out).collect())) == before_out
-    assert sorted(map(tuple, spark.read.parquet(idx).collect())) == before_idx
+    assert sorted(map(tuple, spark.read.parquet(current_dir(idx)).collect())) == before_idx
     assert _accepted_ids(spark, out) == {0, 1, 3}
 
 
@@ -372,53 +376,8 @@ def test_built_index_seeds_the_ingest_and_rebuild_replaces_the_log(
     assert [(cnt, b) for _, cnt, b in _log_rows(spark, idx)] == [
         (1, dedup.COMPACTED_B)
     ]
-    parts = sorted(p for p in os.listdir(idx) if p.startswith("b="))
+    parts = sorted(p for p in os.listdir(current_dir(idx)) if p.startswith("b="))
     assert parts == [f"b={dedup.COMPACTED_B}"]
-
-
-def test_interrupted_compaction_leaves_the_old_log_serving(
-    spark, tmp_path, monkeypatch
-):
-    """A compaction that dies after writing its ``__compact_tmp``
-    sibling must leave the live log answering exactly as before, and
-    a later compaction must succeed over the leftover tmp directory."""
-    import os
-
-    import pytest
-
-    path = str(tmp_path / "fp")
-    docs = _docs(spark)
-    dedup.build_fingerprint_index(docs.filter(F.col("doc_id") <= 1), path)
-    dedup.update_fingerprint_index(docs.filter(F.col("doc_id") >= 2), path)
-    dedup.delete_from_fingerprint_index(docs.filter(F.col("doc_id") == 0), path)
-    batch = spark.createDataFrame(
-        [(10, DUP_TEXT), (11, DUP_TEXT + "!"), (12, "never seen before zzz")],
-        "doc_id long, text string",
-    )
-    before_ids, before_rows = _probe_ids(spark, path, batch), _log_rows(spark, path)
-    tmp = path + "__compact_tmp"
-    swap = im._swap_dir
-
-    def killed_after_tmp_write(live, rebuild):
-        def rebuild_then_die(t):
-            rebuild(t)
-            assert os.path.isdir(t)
-            raise RuntimeError("killed after writing the tmp relation")
-
-        swap(live, rebuild_then_die)
-
-    monkeypatch.setattr(im, "_swap_dir", killed_after_tmp_write)
-    with pytest.raises(RuntimeError, match="killed"):
-        im.compact_fingerprint_index(spark, path)
-    assert os.path.isdir(tmp)
-    assert _log_rows(spark, path) == before_rows
-    assert _probe_ids(spark, path, batch) == before_ids == {12}
-
-    monkeypatch.setattr(im, "_swap_dir", swap)
-    im.compact_fingerprint_index(spark, path)
-    assert not os.path.exists(tmp)
-    assert all(b == dedup.COMPACTED_B for _, _, b in _log_rows(spark, path))
-    assert _probe_ids(spark, path, batch) == before_ids
 
 
 def test_stream_dedup_ingest_end_to_end(spark, tmp_path):
@@ -639,7 +598,7 @@ def test_scd2_sink_streaming_end_to_end_and_prune(spark, tmp_path):
         )
     )
     assert _rows(dim_sink.read_scd2_dim(spark, path)) == want
-    dropped = dim_sink.prune_scd2_versions(path, keep_last=1)
+    dropped = prune_versions(path, keep_last=1)
     assert dropped and -1 in dropped
     assert _rows(dim_sink.read_scd2_dim(spark, path)) == want
 

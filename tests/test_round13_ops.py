@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.operators import multimodal as mm
+from nyc_opendata_etl_spark.sources.batch_log import current_dir
 
 
 def _expected_ahash(seed: int, w: int, h: int, grid: int = 8) -> int:
@@ -164,9 +165,9 @@ def _idx_docs(spark, rows):
 
 def _snap(spark, path):
     post = sorted(
-        map(tuple, spark.read.parquet(f"{path}/postings").collect())
+        map(tuple, spark.read.parquet(f"{current_dir(path)}/postings").collect())
     )
-    stats = sorted(map(tuple, spark.read.parquet(f"{path}/stats").collect()))
+    stats = sorted(map(tuple, spark.read.parquet(f"{current_dir(path)}/stats").collect()))
     return post, stats
 
 
@@ -203,7 +204,7 @@ def test_index_ingest_matches_from_scratch_build(spark, tmp_path):
     assert got == want and len(got) == 3
     # stats fold counts ALL six docs (incl. empty + NULL text)
     n = (
-        spark.read.parquet(f"{delta}/stats")
+        spark.read.parquet(f"{current_dir(delta)}/stats")
         .agg(F.sum("n").alias("n"))
         .collect()[0]["n"]
     )

@@ -9,6 +9,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from nyc_opendata_etl_spark.sources.batch_log import current_dir
+
 
 def test_passage_key_decode_is_exact_beyond_double_precision(spark):
     """ADVICE r13: floor(key / 2^20) uses double division, exact only
@@ -404,7 +406,7 @@ def test_dup_cluster_index_update_replay_idempotent(spark, tmp_path):
     def snap():
         return {
             rel: sorted(
-                map(tuple, spark.read.parquet(f"{path}/{rel}").collect())
+                map(tuple, spark.read.parquet(f"{current_dir(path)}/{rel}").collect())
             )
             for rel in ("reps", "prefix", "members")
         } | {"clusters": sorted(map(tuple, ci.read_dup_clusters(spark, path).collect()))}
@@ -471,7 +473,8 @@ def test_ann_ingest_replay_is_idempotent(spark, tmp_path):
     duplicate code rows (which would double ADC distances in the
     probe). Also pins streamed-state == batch-updater-state: the same
     vectors pushed through ann_ingest_batch equal an
-    update_ivfpq_index append, row for row."""
+    update_ivfpq_index append, row for row; and a batch streamed after
+    a compaction of the streamed codes still reads back."""
     from pyspark.sql import functions as F
 
     from nyc_opendata_etl_spark.operators import similarity
@@ -483,7 +486,7 @@ def test_ann_ingest_replay_is_idempotent(spark, tmp_path):
     similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), base)
     import shutil
 
-    shutil.rmtree(f"{base}/codes", ignore_errors=True)
+    shutil.rmtree(f"{current_dir(base)}/codes", ignore_errors=True)
 
     odd = emb.filter(F.col("vec_id") % 2 == 1)
     even = emb.filter(F.col("vec_id") % 2 == 0)
@@ -494,7 +497,7 @@ def test_ann_ingest_replay_is_idempotent(spark, tmp_path):
         return sorted(
             map(
                 tuple,
-                spark.read.parquet(f"{base}/codes")
+                spark.read.parquet(f"{current_dir(base)}/codes")
                 .select("id", "m", "code", "cid")
                 .collect(),
             )
@@ -512,12 +515,22 @@ def test_ann_ingest_replay_is_idempotent(spark, tmp_path):
     want = sorted(
         map(
             tuple,
-            spark.read.parquet(f"{ref}/codes")
+            spark.read.parquet(f"{current_dir(ref)}/codes")
             .select("id", "m", "code", "cid")
             .collect(),
         )
     )
     assert first == want
+
+    # compaction folds the streamed b partitions into the compacted id,
+    # so a batch streamed after it keeps the cid=/b= layout readable
+    from nyc_opendata_etl_spark.operators.index_maintenance import (
+        compact_ivfpq_index,
+    )
+
+    compact_ivfpq_index(spark, base)
+    ann_ingest_batch(odd, 2, base)
+    assert snap() == sorted(first + [r for r in first if r[0] % 2 == 1])
 
 
 def test_asof_merge_null_key_and_out_col_contracts(spark):

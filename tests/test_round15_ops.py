@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from nyc_opendata_etl_spark.sources.batch_log import current_dir
+
 
 def _docs(spark, ids_texts):
     return spark.createDataFrame(list(ids_texts), "doc_id long, text string")
@@ -103,7 +105,7 @@ def test_stream_cluster_ingest_equals_from_scratch_and_replays_clean(
     def snap():
         out = {
             rel: sorted(
-                map(tuple, spark.read.parquet(f"{path}/{rel}").collect())
+                map(tuple, spark.read.parquet(f"{current_dir(path)}/{rel}").collect())
             )
             for rel in ("reps", "prefix", "members")
         }
@@ -138,7 +140,7 @@ def test_compact_dup_cluster_index_is_read_equivalent(spark, tmp_path):
 
     def rel_rows(path, rel):
         return sorted(
-            map(tuple, spark.read.parquet(f"{path}/{rel}").drop("b").collect())
+            map(tuple, spark.read.parquet(f"{current_dir(path)}/{rel}").drop("b").collect())
         )
 
     pre = {rel: rel_rows(a, rel) for rel in ("reps", "prefix", "members")}
@@ -154,9 +156,9 @@ def test_compact_dup_cluster_index_is_read_equivalent(spark, tmp_path):
     # single surviving cluster version; logs hold only the build batch
     import os
 
-    vdirs = [d for d in os.listdir(f"{a}/clusters") if d.startswith("v=")]
+    vdirs = [d for d in os.listdir(f"{current_dir(a)}/clusters") if d.startswith("v=")]
     assert len(vdirs) == 1
-    bdirs = {d for d in os.listdir(f"{a}/reps") if d.startswith("b=")}
+    bdirs = {d for d in os.listdir(f"{current_dir(a)}/reps") if d.startswith("b=")}
     assert bdirs == {f"b={ci.BUILD_BATCH}"}
 
     last = docs.filter(F.col("doc_id") % 3 == 2)
@@ -186,10 +188,10 @@ def test_ivfpq_takedown_removes_codes_and_keeps_quantizers(spark, tmp_path):
     similarity.build_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 0), path)
     similarity.update_ivfpq_index(emb.filter(F.col("vec_id") % 2 == 1), path)
 
-    pre = spark.read.parquet(f"{path}/codes")
+    pre = spark.read.parquet(f"{current_dir(path)}/codes")
     pre_rows = {(r.id, r.m, r.code) for r in pre.collect()}
     pre_quant = {
-        rel: sorted(map(tuple, spark.read.parquet(f"{path}/{rel}").collect()))
+        rel: sorted(map(tuple, spark.read.parquet(f"{current_dir(path)}/{rel}").collect()))
         for rel in ("centroids", "codebook", "params")
     }
 
@@ -200,12 +202,12 @@ def test_ivfpq_takedown_removes_codes_and_keeps_quantizers(spark, tmp_path):
     assert del_ids, "fixture must delete something"
     compact_ivfpq_index(spark, path, delete_ids=deleted)
 
-    post = spark.read.parquet(f"{path}/codes")
+    post = spark.read.parquet(f"{current_dir(path)}/codes")
     post_rows = {(r.id, r.m, r.code) for r in post.collect()}
     assert not ({i for i, _, _ in post_rows} & del_ids)
     assert post_rows == {t for t in pre_rows if t[0] not in del_ids}
     post_quant = {
-        rel: sorted(map(tuple, spark.read.parquet(f"{path}/{rel}").collect()))
+        rel: sorted(map(tuple, spark.read.parquet(f"{current_dir(path)}/{rel}").collect()))
         for rel in ("centroids", "codebook", "params")
     }
     assert post_quant == pre_quant

@@ -1,7 +1,8 @@
 """Round-16 pins for the ADVICE r15 hardening of the incremental
-cluster-map artifact: out-of-order batch ids fail loudly (item 1),
-compaction lands pointer + snapshot atomically in one rename (item 2),
-and a stale re-stage always starts from an empty artifact (item 3)."""
+cluster-map artifact: out-of-order batch ids fail loudly (item 1) and
+a stale re-stage always starts from an empty artifact (item 3). Item
+2, compaction landing pointer and snapshot together, is the commit's
+(tests/test_batch_log.py interrupts it at every step)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from nyc_opendata_etl_spark.sources.batch_log import current_dir
 from tests.test_round15_ops import _corpus, _docs
 
 
@@ -33,7 +35,7 @@ def test_update_rejects_out_of_order_batch_ids(spark, tmp_path):
     def snap():
         out = {
             rel: sorted(
-                map(tuple, spark.read.parquet(f"{path}/{rel}").collect())
+                map(tuple, spark.read.parquet(f"{current_dir(path)}/{rel}").collect())
             )
             for rel in ("reps", "prefix", "members")
         }
@@ -50,45 +52,6 @@ def test_update_rejects_out_of_order_batch_ids(spark, tmp_path):
     # equality: legal replay of the latest batch → byte-identical rewrite
     ci.update_dup_cluster_index(spark, b2, path, batch_id=1)
     assert snap() == before
-
-
-def test_compact_lands_pointer_atomically_with_snapshot_swap(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r15 item 2: _CURRENT lives inside clusters/, so the
-    compaction swap removes it — the pointer must be written INTO the
-    tmp dir so it lands in the same rename as the snapshot (no window
-    where read_dup_clusters raises FileNotFoundError). Pin: when the
-    clusters swap renames tmp into place, tmp already contains
-    _CURRENT."""
-    from nyc_opendata_etl_spark.operators import cluster_index as ci
-    from nyc_opendata_etl_spark.operators import index_maintenance as im
-
-    docs = _docs(spark, _corpus())
-    path = str(tmp_path / "ci")
-    ci.build_dup_cluster_index(docs.filter(F.col("doc_id") % 2 == 0), path)
-    ci.update_dup_cluster_index(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), path, batch_id=0
-    )
-
-    real_swap = im._swap_dir
-    seen = []
-
-    def checking_swap(live, rebuild):
-        def checked_rebuild(tmp):
-            rebuild(tmp)
-            if live.rstrip("/").endswith("clusters"):
-                seen.append(os.path.exists(os.path.join(tmp, "_CURRENT")))
-
-        real_swap(live, checked_rebuild)
-
-    monkeypatch.setattr(im, "_swap_dir", checking_swap)
-    pre = sorted(map(tuple, ci.read_dup_clusters(spark, path).collect()))
-    ci.compact_dup_cluster_index(spark, path)
-    assert seen == [True]  # pointer was inside tmp BEFORE the rename
-    assert os.path.exists(os.path.join(path, "clusters", "_CURRENT"))
-    post = sorted(map(tuple, ci.read_dup_clusters(spark, path).collect()))
-    assert post == pre
 
 
 def test_stale_cluster_stream_restage_starts_empty(spark):
@@ -169,7 +132,7 @@ def test_ivfpq_build_write_parallelizes_past_one_task_per_cell(
     finally:
         spark.conf.set(coalesce_conf, prev)
     per_cell = []
-    codes = os.path.join(idx, "codes")
+    codes = os.path.join(current_dir(idx), "codes")
     for d in os.listdir(codes):
         if d.startswith("cid="):
             per_cell.append(
@@ -188,8 +151,9 @@ def test_ivfpq_retrain_heals_drift_and_swaps_atomically(spark, tmp_path):
     incremental index's quantizers differ from a fresh full-corpus
     build's; (b) retrain recomputes them — post-retrain centroids,
     codebook, codes, and params all equal the fresh build's exactly;
-    (c) the swap is whole-directory — during the rebuild the live path
-    still serves the OLD index (no quantizer/code version mixing)."""
+    (c) params keep the recorded configuration. That readers never mix
+    quantizers and codes across versions is the commit's, interrupted
+    at every step in tests/test_batch_log.py."""
     from nyc_opendata_etl_spark.operators import similarity
     from nyc_opendata_etl_spark.operators.index_maintenance import (
         retrain_ivfpq_index,
@@ -205,7 +169,7 @@ def test_ivfpq_retrain_heals_drift_and_swaps_atomically(spark, tmp_path):
     similarity.build_ivfpq_index(emb, fresh)
 
     def rel(path, name):
-        return sorted(map(tuple, spark.read.parquet(f"{path}/{name}").collect()))
+        return sorted(map(tuple, spark.read.parquet(f"{current_dir(path)}/{name}").collect()))
 
     # (a) the drift exists: even-half quantizers != full-corpus quantizers
     assert rel(drifted, "centroids") != rel(fresh, "centroids")
@@ -217,7 +181,7 @@ def test_ivfpq_retrain_heals_drift_and_swaps_atomically(spark, tmp_path):
         assert rel(drifted, name) == rel(fresh, name), name
 
     # (c) params preserved the recorded configuration
-    p = spark.read.parquet(f"{drifted}/params").first()
+    p = spark.read.parquet(f"{current_dir(drifted)}/params").first()
     assert (p["n_centroids"], p["m"], p["d_sub"], p["n_codes"]) == (16, 8, 8, 16)
 
 

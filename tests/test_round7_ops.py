@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nyc_opendata_etl_spark.operators import similarity, text
+from nyc_opendata_etl_spark.sources.batch_log import current_dir
 from nyc_opendata_etl_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -73,7 +74,7 @@ def test_postings_probe_prunes_files_and_pushes_predicate(spark, tmp_path):
     docs = load_table(spark, SF, "documents")
     idx = str(tmp_path / "text_index")
     text.build_text_index(docs, idx, num_files=8)
-    post = spark.read.parquet(f"{idx}/postings")
+    post = spark.read.parquet(f"{current_dir(idx)}/postings")
     n_files_total = post.select(
         F.input_file_name().alias("f")
     ).distinct().count()
@@ -105,7 +106,7 @@ def test_ivfpq_codes_read_only_probed_cells(spark, tmp_path):
     emb = load_table(spark, SF, "embeddings")
     idx = str(tmp_path / "ivfpq_index")
     similarity.build_ivfpq_index(emb, idx)
-    codes = spark.read.parquet(f"{idx}/codes")
+    codes = spark.read.parquet(f"{current_dir(idx)}/codes")
     probed = codes.filter(F.col("cid").isin([3, 7]))
     files = [
         r["f"]
@@ -157,8 +158,8 @@ def test_incremental_index_update_equals_full_rebuild(spark, tmp_path):
     )
 
     for part in ("vocab", "stats"):
-        a = spark.read.parquet(f"{full_idx}/{part}")
-        b = spark.read.parquet(f"{incr_idx}/{part}")
+        a = spark.read.parquet(f"{current_dir(full_idx)}/{part}")
+        b = spark.read.parquet(f"{current_dir(incr_idx)}/{part}")
         assert a.exceptAll(b).count() == 0
         assert b.exceptAll(a).count() == 0
     ra = text.bm25_topk_indexed(spark, full_idx, TERMS, k=20)

@@ -7,6 +7,7 @@ import os
 import tempfile
 import uuid
 
+from nyc_opendata_etl_spark.sources.batch_log import current_dir
 from nyc_opendata_etl_spark.sources.tables import load_table
 from nyc_opendata_etl_spark.streaming import events as se
 
@@ -246,6 +247,9 @@ def test_stateful_first_seen_replays_a_lost_commit(spark, tmp_path):
     assert sorted(after_first) == sorted(k for k in keys if k % 3 != 0)
     assert sorted(after_both) == sorted(keys)
     assert sorted(set(after_both) - set(after_first)) == sorted(k for k in keys if k % 3 == 0)
+    # the replayed deltas' temp files are removed once the drain stops
+    assert os.listdir(ckpt / "state")
+    assert [p.name for p in (ckpt / "state").rglob("*.tmp*")] == []
 
 
 def test_stream_to_partitioned_sink_is_idempotent(spark, tmp_path):
@@ -273,7 +277,7 @@ def test_stream_to_partitioned_sink_is_idempotent(spark, tmp_path):
         read_event_stream(spark, src), sink, query_name="s1",
         checkpoint_location=str(tmp_path / "ckpt1"),
     )
-    assert spark.read.parquet(sink).count() == 3
+    assert spark.read.parquet(current_dir(sink)).count() == 3
     # replaying the same bounded stream (fresh query, fresh checkpoint,
     # same source, batch ids restart) must REPLACE its own partitions,
     # not append duplicates
@@ -281,7 +285,7 @@ def test_stream_to_partitioned_sink_is_idempotent(spark, tmp_path):
         read_event_stream(spark, src), sink, query_name="s2",
         checkpoint_location=str(tmp_path / "ckpt2"),
     )
-    out = spark.read.parquet(sink)
+    out = spark.read.parquet(current_dir(sink))
     assert out.count() == 3
     assert {r.month for r in out.select("month").distinct().collect()} == {
         "2024-01", "2024-02",
@@ -316,8 +320,51 @@ def test_stream_sink_keeps_all_batches_of_a_month(spark, tmp_path):
         read_event_stream(spark, src, max_files_per_trigger=1), sink,
         query_name="s3", checkpoint_location=str(tmp_path / "ckpt"),
     )
-    out = spark.read.parquet(sink)
+    out = spark.read.parquet(current_dir(sink))
     assert sorted(r.event_id for r in out.collect()) == [1, 2]
+
+
+def test_compacted_stream_sink_keeps_streaming(spark, tmp_path):
+    """Stream two batches into a month sink, compact it, stream one
+    batch into a compacted month and one into a new month: the sink
+    reads back as the union of every batch (compaction used to drop
+    the ``b`` partition level, and every later read raised
+    CONFLICTING_PARTITION_COLUMN_NAMES)."""
+    from pyspark.sql import functions as F
+
+    from nyc_opendata_etl_spark.operators.backfill import compact_partitions
+    from nyc_opendata_etl_spark.streaming.events import (
+        read_event_stream,
+        stream_to_partitioned_sink,
+    )
+
+    src, sink = str(tmp_path / "src"), str(tmp_path / "sink")
+
+    def add(eid, ts):
+        spark.createDataFrame(
+            [(eid, ts, eid, "click", float(eid), "{}")],
+            "event_id long, ts string, user_id long, event_type string,"
+            " value double, props string",
+        ).withColumn("ts", F.col("ts").cast("timestamp")).write.mode(
+            "append"
+        ).parquet(src)
+
+    def stream(run):
+        stream_to_partitioned_sink(
+            read_event_stream(spark, src, max_files_per_trigger=1), sink,
+            query_name=f"cs_{run}", checkpoint_location=str(tmp_path / "ckpt"),
+        )
+
+    add(1, "2024-01-10 00:00:00")
+    add(2, "2024-02-10 00:00:00")
+    stream(0)
+    assert compact_partitions(spark, sink) == 2
+    add(3, "2024-02-20 00:00:00")
+    add(4, "2024-03-01 00:00:00")
+    stream(1)
+    out = spark.read.parquet(current_dir(sink)).collect()
+    assert sorted(r.event_id for r in out) == [1, 2, 3, 4]
+    assert {r.month for r in out} == {"2024-01", "2024-02", "2024-03"}
 
 
 def test_checkpointed_available_now_is_incremental(spark, tmp_path):
@@ -512,14 +559,14 @@ def test_stream_sink_accepts_checkpoint_location(spark, tmp_path):
         checkpoint_location=ckpt,
     )
     assert os.path.isdir(os.path.join(ckpt, "offsets"))
-    assert spark.read.parquet(sink).count() == 1
+    assert spark.read.parquet(current_dir(sink)).count() == 1
     # a replay over the SAME checkpoint re-delivers nothing new and
     # leaves the sink unchanged
     stream_to_partitioned_sink(
         read_event_stream(spark, src), sink, query_name="s_ck2",
         checkpoint_location=ckpt,
     )
-    assert spark.read.parquet(sink).count() == 1
+    assert spark.read.parquet(current_dir(sink)).count() == 1
 
 
 def test_exactly_once_wrappers_require_checkpoint_or_explicit_optout():
