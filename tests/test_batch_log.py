@@ -169,13 +169,12 @@ def _interrupt_every_step(monkeypatch, root, operation, answer, before, after):
         assert len(_versions(root)) == 1, (step, nth)
 
 
-def test_interrupted_fingerprint_compaction_keeps_rejecting(
-    spark, tmp_path, monkeypatch
-):
+def test_interrupted_swap_stops_the_next_batch(spark, tmp_path, monkeypatch):
     """The fingerprint log's compaction killed at any step of its
-    commit: the next ingest batch still rejects doc 2 (a duplicate of
-    the indexed doc 1) and accepts only doc 3, and re-running the
-    compaction leaves one version."""
+    commit (the swap of the compacted version for the live one): the
+    next ingest batch still rejects doc 2 (a duplicate of the indexed
+    doc 1) and accepts only doc 3, and re-running the compaction leaves
+    one version."""
     from nyc_opendata_etl_spark.operators.index_maintenance import (
         compact_fingerprint_index,
     )

@@ -380,6 +380,45 @@ def test_built_index_seeds_the_ingest_and_rebuild_replaces_the_log(
     assert parts == [f"b={dedup.COMPACTED_B}"]
 
 
+def test_interrupted_compaction_leaves_the_old_log_serving(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that dies after writing its whole new version, but
+    before re-pointing ``_CURRENT``, must leave the live log answering
+    exactly as before, and a later compaction must succeed over the
+    leftover uncommitted version."""
+    import os
+
+    import pytest
+
+    from tests.test_batch_log import Killed, _killed_at, _versions
+
+    path = str(tmp_path / "fp")
+    docs = _docs(spark)
+    dedup.build_fingerprint_index(docs.filter(F.col("doc_id") <= 1), path)
+    dedup.update_fingerprint_index(docs.filter(F.col("doc_id") >= 2), path)
+    dedup.delete_from_fingerprint_index(docs.filter(F.col("doc_id") == 0), path)
+    batch = spark.createDataFrame(
+        [(10, DUP_TEXT), (11, DUP_TEXT + "!"), (12, "never seen before zzz")],
+        "doc_id long, text string",
+    )
+    before_ids, before_rows = _probe_ids(spark, path, batch), _log_rows(spark, path)
+    live = current_dir(path)
+
+    with monkeypatch.context() as m, pytest.raises(Killed):
+        _killed_at(m, "written", path)
+        im.compact_fingerprint_index(spark, path)
+    assert len(_versions(path)) == 2
+    assert current_dir(path) == live
+    assert _log_rows(spark, path) == before_rows
+    assert _probe_ids(spark, path, batch) == before_ids == {12}
+
+    im.compact_fingerprint_index(spark, path)
+    assert _versions(path) == [os.path.basename(current_dir(path))]
+    assert all(b == dedup.COMPACTED_B for _, _, b in _log_rows(spark, path))
+    assert _probe_ids(spark, path, batch) == before_ids
+
+
 def test_stream_dedup_ingest_end_to_end(spark, tmp_path):
     """The real streaming wrapper over a file source in three ordered
     micro-batches: the accepted corpus must equal exact_dedup_groups'
